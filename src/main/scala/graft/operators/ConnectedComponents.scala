@@ -23,8 +23,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
+  /** The input as (src, dst) longs; an edge with a null endpoint is not
+    * an edge, so it is dropped here for both entry points. */
+  private def edgeSet(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+
   /** `edges`: two numeric columns (src, dst), undirected (one direction
-    * suffices). Returns (node, component) for every endpoint node,
+    * suffices); an edge with a null endpoint is not an edge, so it is
+    * dropped on input. Returns (node, component) for every endpoint node,
     * component = min node id in the connected component. The result is
     * eagerly `localCheckpoint`ed (one cheap read of the final round's
     * already-pinned cache) and every round cache is released before
@@ -41,12 +48,11 @@ object ConnectedComponents {
     * near-dup graph paid ~7 scheduling-bound jobs for 2-3 propagation
     * rounds over kilobytes. At 100 TB the pair set exceeds the bound and
     * the distributed path below is unchanged. `localFinishEdges = 0`
-    * forces the pure distributed path (the round-count/convergence specs
-    * use it). */
+    * forces the pure distributed path for any non-empty edge set (the
+    * round-count/convergence specs use it). */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       maxIter: Int = 50, localFinishEdges: Long = 100000L): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e = edgeSet(edges, srcCol, dstCol)
     // symmetrize once so propagation flows both ways. ONE pass via
     // explode: the old self-union evaluated the (possibly expensive —
     // q95's LSH pair generation) input pipeline twice at persist
@@ -139,7 +145,8 @@ object ConnectedComponents {
     * (node, component=min id) contract as [[run]], but rounds scale as
     * O(log² n) worst-case (≈log n observed) instead of O(diameter):
     * the variant for adversarial long-chain graphs, where min-label
-    * propagation would need diameter rounds.
+    * propagation would need diameter rounds. Null-endpoint edges are
+    * dropped on input, as in [[run]].
     *
     *  - large-star(u): every neighbor v > u re-attaches to
     *    m(u) = min(N(u) ∪ u) — hooks high nodes straight onto minima.
@@ -178,9 +185,7 @@ object ConnectedComponents {
     // persisted for the whole call: BOTH the canonical edge set below and
     // the labeling tail's `allNodes` read e0 — unpersisted, the input
     // pipeline (q112's LSH pair generation: a multi-join) would run twice
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e0 = edgeSet(edges, srcCol, dstCol).persist(StorageLevel.MEMORY_AND_DISK)
     // original endpoint set: the output contract is one label per
     // endpoint node, including self-loop-only singletons that the
     // star transforms drop with their self-loops. explode, not

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -33,6 +34,15 @@ import org.apache.spark.sql.types.DecimalType
   * saturates: 1e18-scaled O(1)-magnitude squares overflowed in q84 —
   * use 1e12 for O(1) returns, 1e6 for price-scale values). Convert a
   * site only WITH its oracle mirror, and re-verify at both SFs.
+  *
+  * SLIDING EXACT SUMS go through [[withSlidingSums]], never a bounded
+  * `sum(...).over(w.rowsBetween(lo, hi))`: Spark's
+  * `SlidingWindowFunctionFrame` has no retract path, so it re-aggregates
+  * the whole frame for every row — O(frame) per row — while a running
+  * frame is incremental and `lag` is O(1). Decimal prefix sums are
+  * exact, so the running-prefix difference equals the sliding sum bit
+  * for bit. Doubles are not eligible (float prefix differences cancel),
+  * which the helper's `DecimalType` parameter enforces.
   */
 object Det {
   private val dec = DecimalType(38, 6)
@@ -44,14 +54,14 @@ object Det {
   /** Order-independent AVG(double): double division of exact sum by count. */
   def davg(c: Column): Column = sum(c.cast(dec)).cast("double") / count(c)
 
-  /** Order-independent sample stddev via exact decimal moments.
-    * sqrt((n*Σx² − (Σx)²) / (n(n−1))) computed in double at the end. */
-  def dstddev(c: Column): Column = {
-    val n = count(c).cast("double")
-    val sx = sum(c.cast(dec)).cast("double")
-    val sx2 = sum((c * c).cast(dec12)).cast("double")
+  /** Sample stddev from a double count `n` and moment sums Σx, Σx²:
+    * sqrt((n*Σx² − (Σx)²) / (n(n−1))), clamped at 0, NULL unless n > 1. */
+  def momentStddev(n: Column, sx: Column, sx2: Column): Column =
     when(n > 1, sqrt(greatest((n * sx2 - sx * sx) / (n * (n - lit(1.0))), lit(0.0))))
-  }
+
+  /** Order-independent sample stddev via exact decimal moments. */
+  def dstddev(c: Column): Column = momentStddev(count(c).cast("double"),
+    sum(c.cast(dec)).cast("double"), sum((c * c).cast(dec12)).cast("double"))
 
   /** Order-independent sample variance (same moments as dstddev). */
   def dvariance(c: Column): Column = {
@@ -65,14 +75,9 @@ object Det {
   def dsum12(c: Column): Column = sum(c.cast(dec12)).cast("double")
   def davg12(c: Column): Column = sum(c.cast(dec12)).cast("double") / count(c)
 
-  def dstddev12(c: Column): Column = {
-    val n = count(c).cast("double")
-    val sx = sum(c.cast(dec12)).cast("double")
-    val sx2 = sum((c * c).cast(DecimalType(38, 18))).cast("double")
-    when(n > 1, sqrt(greatest((n * sx2 - sx * sx) / (n * (n - lit(1.0))), lit(0.0))))
-  }
-
-  import org.apache.spark.sql.expressions.WindowSpec
+  def dstddev12(c: Column): Column = momentStddev(count(c).cast("double"),
+    sum(c.cast(dec12)).cast("double"),
+    sum((c * c).cast(DecimalType(38, 18))).cast("double"))
 
   /** Window variants — exact decimal accumulation inside the frame. */
   def dsumOver(c: Column, w: WindowSpec): Column =
@@ -81,11 +86,47 @@ object Det {
   def davgOver(c: Column, w: WindowSpec): Column =
     sum(c.cast(dec)).over(w).cast("double") / count(c).over(w)
 
-  def dstddevOver(c: Column, w: WindowSpec): Column = {
-    val n = count(c).over(w).cast("double")
-    val sx = sum(c.cast(dec)).over(w).cast("double")
-    val sx2 = sum((c * c).cast(dec12)).over(w).cast("double")
-    when(n > 1, sqrt(greatest((n * sx2 - sx * sx) / (n * (n - lit(1.0))), lit(0.0))))
+  def dstddevOver(c: Column, w: WindowSpec): Column =
+    momentStddev(count(c).over(w).cast("double"),
+      sum(c.cast(dec)).over(w).cast("double"),
+      sum((c * c).cast(dec12)).over(w).cast("double"))
+
+  /** One exact sliding sum for [[withSlidingSums]]: Σ `x` accumulated as
+    * `dt` over the ROWS frame `lo..hi` relative to the current row. */
+  final case class SlidingSum(name: String, x: Column, dt: DecimalType,
+      lo: Int, hi: Int) {
+    require(lo <= hi && hi <= 0,
+      s"SlidingSum($name): ROWS frame $lo..$hi must satisfy lo <= hi <= 0")
+  }
+
+  /** Exact sliding sums as running-prefix differences. Adds, per
+    * [[SlidingSum]], `name` = P(i+hi) − P(i+lo−1) over the running
+    * decimal prefix P (0 over an empty or all-null frame, typed like a
+    * plain `sum(x.cast(dt))`), and `name_n` = the non-null count of `x`
+    * over the same frame; callers guard on `name_n` themselves. One
+    * running sum/count is computed per distinct `(x, dt)`, so frames of
+    * different width share it, and everything stays inside `w`'s one
+    * partitioning and ordering. */
+  def withSlidingSums(df: DataFrame, w: WindowSpec,
+      sums: SlidingSum*): DataFrame = {
+    val prefixes = sums.map(s => (s.x, s.dt)).distinct
+    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val scratch = prefixes.indices.flatMap(i => Seq(s"__ssum_$i", s"__scnt_$i"))
+    val withPrefix = df.select(col("*") +: prefixes.zipWithIndex.flatMap {
+      case ((x, dt), i) => Seq(sum(x.cast(dt)).over(run).as(s"__ssum_$i"),
+        count(x).over(run).as(s"__scnt_$i"))
+    }: _*)
+    // the prefix at `back` rows before the current row, 0 before the head
+    def at(c: String, back: Int, zero: Column): Column =
+      coalesce(if (back == 0) col(c) else lag(col(c), back).over(w), zero)
+    withPrefix.select(col("*") +: sums.flatMap { s =>
+      val i = prefixes.indexOf((s.x, s.dt))
+      val (p, c) = (s"__ssum_$i", s"__scnt_$i")
+      val zero = lit(0).cast(s.dt)
+      Seq((at(p, -s.hi, zero) - at(p, 1 - s.lo, zero))
+          .cast(withPrefix.schema(p).dataType).as(s.name),
+        (at(c, -s.hi, lit(0L)) - at(c, 1 - s.lo, lit(0L))).as(s"${s.name}_n"))
+    }: _*).drop(scratch: _*)
   }
 
   // ------------------------------------------------------------------
@@ -157,12 +198,8 @@ object Det {
 
   /** Tie-free sample stddev: linear terms quantized at `scale`, squares
     * grid-exact on the `grid` grid (see [[qpowsum]]). */
-  def qstddev(c: Column, scale: Double, grid: Double): Column = {
-    val n = count(c).cast("double")
-    val sx = qsum(c, scale)
-    val sx2 = qpowsum(c, grid, 2)
-    when(n > 1, sqrt(greatest((n * sx2 - sx * sx) / (n * (n - lit(1.0))), lit(0.0))))
-  }
+  def qstddev(c: Column, scale: Double, grid: Double): Column =
+    momentStddev(count(c).cast("double"), qsum(c, scale), qpowsum(c, grid, 2))
 
   /** Window variants. */
   def qsumOver(c: Column, scale: Double, w: WindowSpec): Column =
@@ -179,12 +216,8 @@ object Det {
   }
 
   def qstddevOver(c: Column, scale: Double, grid: Double,
-      w: WindowSpec): Column = {
-    val n = count(c).over(w).cast("double")
-    val sx = qsumOver(c, scale, w)
-    val sx2 = qpowsumOver(c, grid, 2, w)
-    when(n > 1, sqrt(greatest((n * sx2 - sx * sx) / (n * (n - lit(1.0))), lit(0.0))))
-  }
+      w: WindowSpec): Column = momentStddev(count(c).over(w).cast("double"),
+    qsumOver(c, scale, w), qpowsumOver(c, grid, 2, w))
 
   /** SQL mirrors of the quantized helpers — `scale` must be the same
     * literal the Spark side used (e.g. "1e12" for 1e12), and the power

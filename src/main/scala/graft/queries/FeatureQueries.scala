@@ -3,8 +3,10 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.features.FeatureBuilder
+import Det.{SlidingSum, momentStddev, withSlidingSums}
 
 /** Feature-engine operators under the oracle gate — the CVaR rolling
   * quantile, the dropNa gate, feature-health telemetry, and the
@@ -62,10 +64,7 @@ object FeatureQueries extends QueryModule {
     "q157_vol_features" -> ((s, dir) => {
       import s.implicits._
       val w = Window.partitionBy($"ticker").orderBy($"ts", $"seq")
-      val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-      val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
-      val dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
+      val dec0 = DecimalType(38, 0)
       val scale = lit(1e12)
 
       val ret1 = $"price" / lag($"price", 1).over(w) - 1
@@ -73,63 +72,26 @@ object FeatureQueries extends QueryModule {
         .withColumn("qret", floor(ret1 * scale + lit(0.5)))
         .withColumn("qd",
           when($"qret".isNotNull && $"qret" < 0, $"qret").otherwise(lit(0L)))
+      def sq(c: String) = col(c).cast(dec0) * col(c).cast(dec0)
+      val sums = withSlidingSums(b, w,
+        SlidingSum("q20", $"qret", dec0, -19, 0),
+        SlidingSum("q60", $"qret", dec0, -59, 0),
+        SlidingSum("qq60", sq("qret"), dec0, -59, 0),
+        SlidingSum("d20", $"qd", dec0, -19, 0),
+        SlidingSum("dd20", sq("qd"), dec0, -19, 0),
+        SlidingSum("p20", $"price", DecimalType(38, 6), -19, 0),
+        SlidingSum("pp20", $"price" * $"price", DecimalType(38, 12), -19, 0))
 
-      // Sliding decimal sums as RUNNING-prefix differences: Spark
-      // evaluates a bounded sliding frame by re-aggregating the whole
-      // frame per row (O(frame)/row — 60 decimal adds per row here),
-      // while the unboundedPreceding running frame is incremental
-      // (O(1)/row) and lag() is O(1). Decimal addition is associative,
-      // so P(i) − P(i−k) equals the k-row sliding sum EXACTLY — same
-      // decimals, same doubles, same hashes, same oracle; this is the
-      // q154 running-frame lesson applied to the sliding-frame class.
-      val prefixed = b.select($"ticker", $"ts", $"seq", $"qret", $"qd",
-        sum($"qret".cast(dec0)).over(wRun).as("pq"),
-        sum(($"qret".cast(dec0) * $"qret".cast(dec0))).over(wRun).as("pqq"),
-        sum($"qd".cast(dec0)).over(wRun).as("pd"),
-        sum(($"qd".cast(dec0) * $"qd".cast(dec0))).over(wRun).as("pdd"),
-        count($"qret").over(wRun).as("pcq"),
-        count($"qd").over(wRun).as("pcd"),
-        sum($"price".cast(dec6)).over(wRun).as("pp"),
-        sum(($"price" * $"price").cast(dec12)).over(wRun).as("ppp"),
-        count($"price").over(wRun).as("pcp"))
-      def lagged = Seq(
-        ("pq", 20, dec0), ("pq", 60, dec0), ("pqq", 60, dec0),
-        ("pd", 20, dec0), ("pdd", 20, dec0),
-        ("pp", 20, dec6), ("ppp", 20, dec12))
-      val withLags = prefixed.select(
-        (Seq($"ticker", $"seq", $"pq", $"pqq", $"pd", $"pdd", $"pcq",
-          $"pcd", $"pp", $"ppp", $"pcp") ++
-          lagged.map { case (c, k, dt) =>
-            coalesce(lag(col(c), k).over(w), lit(0).cast(dt)).as(s"${c}_$k") } ++
-          Seq(coalesce(lag($"pcq", 20).over(w), lit(0L)).as("pcq_20"),
-            coalesce(lag($"pcq", 60).over(w), lit(0L)).as("pcq_60"),
-            coalesce(lag($"pcd", 20).over(w), lit(0L)).as("pcd_20"),
-            coalesce(lag($"pcp", 20).over(w), lit(0L)).as("pcp_20"))): _*)
-
-      def d(a: String, b0: String) = (col(a) - col(b0)).cast("double")
-      val n20 = (col("pcq") - col("pcq_20")).cast("double")
-      val n60 = (col("pcq") - col("pcq_60")).cast("double")
-      val m20 = d("pq", "pq_20") / scale / n20
-      val m60 = d("pq", "pq_60") / scale / n60
-      val s60 = sqrt(greatest(
-        (n60 * (d("pqq", "pqq_60") / scale / scale)
-          - (d("pq", "pq_60") / scale) * (d("pq", "pq_60") / scale))
-          / (n60 * (n60 - lit(1.0))), lit(0.0)))
+      def d(c: String) = col(c).cast("double")
+      val n60 = d("q60_n")
+      val m20 = d("q20") / scale / d("q20_n")
+      val m60 = d("q60") / scale / n60
+      val s60 = momentStddev(n60, d("q60") / scale, d("qq60") / scale / scale)
       val drift = when(n60 > 1, abs(m20 - m60) / (s60 + lit(1e-9)))
-
-      val nd = (col("pcd") - col("pcd_20")).cast("double")
-      val down = when(nd > 1, sqrt(greatest(
-        (nd * (d("pdd", "pdd_20") / scale / scale)
-          - (d("pd", "pd_20") / scale) * (d("pd", "pd_20") / scale))
-          / (nd * (nd - lit(1.0))), lit(0.0))))
-
-      // Det.dstddevOver(price, w20) via the same prefix differences
-      val np = (col("pcp") - col("pcp_20")).cast("double")
-      val sxp = d("pp", "pp_20")
-      val sx2p = d("ppp", "ppp_20")
-      val sig20 = when(np > 1, sqrt(greatest(
-        (np * sx2p - sxp * sxp) / (np * (np - lit(1.0))), lit(0.0))))
-      val feats = withLags.select($"ticker", $"seq",
+      val down = momentStddev(d("d20_n"), d("d20") / scale, d("dd20") / scale / scale)
+      // Det.dstddevOver(price, w20) from the same exact sliding sums
+      val sig20 = momentStddev(d("p20_n"), d("p20"), d("pp20"))
+      val feats = sums.select($"ticker", $"seq",
         drift.as("drift_intensity"), down.as("downside_vol20"),
         sig20.as("sig20"))
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import Det._
 
@@ -20,57 +21,28 @@ import Det._
   */
 object MetricsQueries extends QueryModule {
 
-  /** Strictly-past 20-bar rolling σ of `r` via RUNNING-prefix
-    * differences: Spark re-aggregates a bounded sliding frame per row
-    * (O(frame)/row), while the unboundedPreceding running frame is
-    * incremental and lag() is O(1). Decimal/integer prefix sums are
-    * EXACT, so P(i−1) − P(i−21) equals the (−20..−1) sliding sum
-    * bit-for-bit — same values, same hashes, same oracle (the q157
-    * rewrite, shared by q46/q63). */
+  /** Strictly-past 20-bar rolling σ of `r` from exact sliding sums
+    * over the (−20..−1) frame (shared by q46/q63). */
   private def withSigma20Past(df: DataFrame): DataFrame = {
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
+    val dec0 = DecimalType(38, 0)
     val w = Window.partitionBy(col("ticker")).orderBy(col("ts"), col("seq"))
-    val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-    val q12 = qfloor(col("r"), 1e12).cast(dec0)
     val q9 = qfloor(col("r"), 1e9).cast(dec0)
-    val pr = df
-      .withColumn("_pq", sum(q12).over(wRun))
-      .withColumn("_pqq", sum(q9 * q9).over(wRun))
-      .withColumn("_pc", count(col("r")).over(wRun))
-    def d0(c: String) =
-      coalesce(lag(col(c), 1).over(w), lit(0).cast(dec0)) -
-        coalesce(lag(col(c), 21).over(w), lit(0).cast(dec0))
-    val n = (coalesce(lag(col("_pc"), 1).over(w), lit(0L)) -
-      coalesce(lag(col("_pc"), 21).over(w), lit(0L))).cast("double")
-    val sx = d0("_pq").cast("double") / 1e12
-    val sx2 = d0("_pqq").cast("double") / 1e18
-    pr.withColumn("sigma",
-        when(n > 1, sqrt(greatest(
-          (n * sx2 - sx * sx) / (n * (n - lit(1.0))), lit(0.0)))))
-      .drop("_pq", "_pqq", "_pc")
+    withSlidingSums(df, w,
+        SlidingSum("_sq", qfloor(col("r"), 1e12), dec0, -20, -1),
+        SlidingSum("_sqq", q9 * q9, dec0, -20, -1))
+      .withColumn("sigma", momentStddev(col("_sq_n").cast("double"),
+        col("_sq").cast("double") / 1e12, col("_sqq").cast("double") / 1e18))
+      .drop("_sq", "_sq_n", "_sqq", "_sqq_n")
   }
 
-  /** Strictly-past 5-bar rolling-mean predictor via RUNNING-prefix
-    * differences (the q157/q88 rewrite): decimal prefix sums are exact,
-    * so P(i−1) − P(i−6) equals the (−5..−1) sliding sum bit-for-bit —
-    * same values, same hash, same oracle, O(1)/row instead of
-    * re-aggregating the 5-row frame per row. Input df must carry
-    * (ticker, ts, seq, price); adds `pred` and drops the scratch. */
+  /** Strictly-past 5-bar rolling-mean predictor over the (−5..−1)
+    * frame. Input df must carry (ticker, ts, seq, price); adds `pred`. */
   private def withPred5(df: DataFrame): DataFrame = {
-    val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
     val w = Window.partitionBy(col("ticker")).orderBy(col("ts"), col("seq"))
-    val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-    val pr = df
-      .withColumn("_pp", sum(col("price").cast(dec6)).over(wRun))
-      .withColumn("_pc", count(col("price")).over(wRun))
-    val nk = lag(col("_pc"), 1).over(w) -
-      coalesce(lag(col("_pc"), 6).over(w), lit(0L))
-    pr.withColumn("pred",
-        when(nk > 0,
-          (lag(col("_pp"), 1).over(w) -
-            coalesce(lag(col("_pp"), 6).over(w), lit(0).cast(dec6)))
-            .cast("double") / nk))
-      .drop("_pp", "_pc")
+    withSlidingSums(df, w, SlidingSum("_p5", col("price"), DecimalType(38, 6), -5, -1))
+      .withColumn("pred",
+        when(col("_p5_n") > 0, col("_p5").cast("double") / col("_p5_n")))
+      .drop("_p5", "_p5_n")
   }
 
   override def queries: Map[String, QFn] = Map(
@@ -412,22 +384,13 @@ object MetricsQueries extends QueryModule {
       import s.implicits._
       val w = Window.partitionBy($"ticker").orderBy($"ts", $"seq")
       val wT = Window.partitionBy($"ticker")
-      val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-      val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
-      // the three strictly-past rolling means share ONE running prefix
-      // (P(i−1) − P(i−k−1) equals the (−k..−1) sliding sum exactly —
-      // the q157 prefix-diff rewrite; same values, hash, oracle)
-      def predK(k: Int) = {
-        val nk = lag(col("_pc"), 1).over(w) -
-          coalesce(lag(col("_pc"), k + 1).over(w), lit(0L))
-        when(nk > 0,
-          (lag(col("_pp"), 1).over(w) -
-            coalesce(lag(col("_pp"), k + 1).over(w), lit(0).cast(dec6)))
-            .cast("double") / nk)
-      }
-      val base = Bars.of(s, dir).select($"ticker", $"ts", $"seq", $"price")
-        .withColumn("_pp", sum($"price".cast(dec6)).over(wRun))
-        .withColumn("_pc", count($"price").over(wRun))
+      // the three strictly-past rolling means share one running prefix
+      def predK(k: Int) =
+        when(col(s"_m${k}_n") > 0, col(s"_m$k").cast("double") / col(s"_m${k}_n"))
+      val means = Seq(2, 5, 10)
+        .map(k => SlidingSum(s"_m$k", $"price", DecimalType(38, 6), -k, -1))
+      val base = withSlidingSums(
+          Bars.of(s, dir).select($"ticker", $"ts", $"seq", $"price"), w, means: _*)
         .withColumn("rn", row_number().over(w))
         .withColumn("cnt", count(lit(1)).over(wT))
         .withColumn("fold", expr("((rn - 1) * 4) div cnt"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import Det._
 
@@ -38,12 +39,9 @@ object WindowQueries extends QueryModule {
       val m = graft.operators.ChunkedWindow.rollingMoments(
         Bars.of(s, dir).withColumn("t", unix_micros($"ts")),
         "ticker", "t", "seq", "price", lo = -19, hi = 0).toDF()
-      val n = $"n".cast("double")
-      val std = when($"n" > 1,
-        sqrt(greatest((n * $"s2" - $"s1" * $"s1") / (n * (n - lit(1.0))), lit(0.0))))
       m.select($"key".as("ticker"), $"seq", $"x".as("price"),
         ($"s1" / $"n").as("roll_mean20"),
-        std.as("roll_std20"))
+        momentStddev($"n".cast("double"), $"s1", $"s2").as("roll_std20"))
     }),
 
     // cumulative equity + running max + drawdown (portfolio_math :432-440)
@@ -159,28 +157,15 @@ object WindowQueries extends QueryModule {
     "q16_win_atr" -> ((s, dir) => {
       import s.implicits._
       val w = Window.partitionBy($"ticker").orderBy($"ts", $"seq")
-      val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-      val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
       val tr = greatest(
         abs($"price" - lag($"price", 1).over(w)),
         abs(lag($"price", 1).over(w) - lag($"price", 2).over(w)))
-      // 14-bar sliding mean as a running-prefix difference (exact for
-      // decimals — same values/hash/oracle, O(1)/row; the q157 rewrite)
-      Bars.of(s, dir)
-        .select($"ticker", $"ts", $"seq", tr.as("tr"))
-        .select($"ticker", $"ts", $"seq", $"tr",
-          sum($"tr".cast(dec6)).over(wRun).as("_ps"),
-          count($"tr").over(wRun).as("_pc"))
-        .select($"ticker", $"seq", $"tr", {
-          // when(n > 0): an all-null frame must yield NULL like the
-          // plain sliding mean did — without the guard the prefix diff
-          // is an exact 0 and 0/0 throws under ANSI
-          val n = col("_pc") - coalesce(lag(col("_pc"), 14).over(w), lit(0L))
-          when(n > 0,
-            (col("_ps") - coalesce(lag(col("_ps"), 14).over(w),
-              lit(0).cast(dec6))).cast("double") / n)
-            .as("atr14")
-        })
+      // when(n > 0): an all-null frame yields NULL like a plain sliding
+      // mean (0/0 throws under ANSI)
+      withSlidingSums(Bars.of(s, dir).select($"ticker", $"ts", $"seq", tr.as("tr")),
+          w, SlidingSum("_s14", $"tr", DecimalType(38, 6), -13, 0))
+        .select($"ticker", $"seq", $"tr",
+          when($"_s14_n" > 0, $"_s14".cast("double") / $"_s14_n").as("atr14"))
     }),
 
     // Rank-function suite: ntile / percent_rank / cume_dist (the three

@@ -16,12 +16,14 @@ import org.apache.spark.storage.StorageLevel
   */
 object CcSoakProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpusEnv.toIntOption.getOrElse(0)
+    require(cpus > 0, s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpusEnv'")
     val arms = sys.env.getOrElse("SPARK_GRAFT_CC_ARMS", "stars,prop")
       .split(",").map(_.trim).toSet
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
@@ -62,6 +64,6 @@ object CcSoakProbe {
     edges.unpersist()
     val calibEnd = (1 to 2).map(_ => clock(calibJob())).min
     spark.stop()
-    println(f"""{"calib":$calib%.2f,"cc_soak_stars_1m":$tStars%.2f,"cc_soak_prop_1m":$tProp%.2f,"calib_end":$calibEnd%.2f,"cpus":$cpus%s}""")
+    println(f"""{"calib":$calib%.2f,"cc_soak_stars_1m":$tStars%.2f,"cc_soak_prop_1m":$tProp%.2f,"calib_end":$calibEnd%.2f,"cpus":$cpus%d}""")
   }
 }

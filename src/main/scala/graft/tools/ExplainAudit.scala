@@ -77,8 +77,8 @@ object ExplainAudit {
   /** WIDE sliding exact-sum frames — a bounded (-k..h≤0) frame whose
     * aggregate is a decimal/long Sum is re-aggregated per row by
     * Spark's SlidingWindowFunctionFrame (no retract): O(k)/row. For
-    * EXACT sums the running-prefix-difference rewrite is value-identical
-    * and O(1)/row (round 12: q157 15→2.9 s), so a wide exact-sum
+    * EXACT sums `Det.withSlidingSums` is value-identical and O(1)/row
+    * (round 12: q157 15→2.9 s), so a wide exact-sum
     * sliding frame in a registered plan is an unforced constant-factor
     * tax. Double sums are exempt (float prefix differences cancel);
     * list/quantile aggregates are exempt (no prefix form). Frames
@@ -106,7 +106,7 @@ object ExplainAudit {
                 case sm: Sum if sm.child.dataType.isInstanceOf[DecimalType] ||
                     sm.child.dataType == LongType =>
                   out += s"wide sliding exact-sum frame (span ${h - l + 1}, " +
-                    s"prefix-diff it): ${we.sql.take(140)}"
+                    s"use Det.withSlidingSums): ${we.sql.take(140)}"
                 case _ => ()
               }
             case _ => ()

@@ -40,6 +40,29 @@ class ConnectedComponentsSpec extends AnyFunSuite with TestSpark {
     assert(viaLocal(914L) === 910L && viaLocal(900L) === 900L)
   }
 
+  test("null endpoints: run and runStars agree on both paths and never throw") {
+    val spark2 = spark
+    import spark2.implicits._
+    // an edge with a null endpoint is not an edge: node 7 appears only
+    // beside a null, so it must not be labeled at all
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(2L), Some(1L)), (Some(3L), Some(2L)), (Some(7L), None),
+      (None, Some(3L)), (None, None), (Some(10L), Some(11L)))
+      .toDF("src", "dst")
+    def opt(r: org.apache.spark.sql.Row, i: Int) =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (opt(r, 0), opt(r, 1))).toSet
+    val expected = Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
+      .map { case (n, c) => (Some(n), Some(c)) }
+    Seq(100000L, 0L).foreach { bound =>
+      assert(labels(ConnectedComponents.run(edges, localFinishEdges = bound))
+        === expected, s"run, localFinishEdges = $bound")
+      assert(labels(ConnectedComponents.runStars(edges, localFinishEdges = bound))
+        === expected, s"runStars, localFinishEdges = $bound")
+    }
+  }
+
   test("large-star/small-star: same labels as min-propagation, O(log n) rounds on a 10k path") {
     val spark2 = spark
     import spark2.implicits._

@@ -66,36 +66,67 @@ class DetSpec extends AnyFunSuite with TestSpark {
   }
 
   test("prefix-diff sliding sums equal plain sliding frames exactly (decimal/long)") {
-    // the q157/q46/q63 rewrite contract: decimal and integer prefix
-    // sums are exact, so P(i) − P(i−k) must equal the k-row sliding sum
-    // BIT-FOR-BIT, including leading-null prefixes and frame clipping
-    // at the partition head. Doubles are deliberately NOT eligible.
+    // the Det.withSlidingSums contract: decimal prefix sums are exact, so
+    // each frame's prefix difference must equal the plain sliding sum and
+    // count BIT-FOR-BIT — including leading-null prefixes, an all-null
+    // stretch wider than the frame, and frame clipping at partition heads.
     import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.expressions.Window
-    val dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
+    import org.apache.spark.sql.types.DecimalType
+    val dec0 = DecimalType(38, 0)
+    val w = Window.partitionBy($"t").orderBy($"i")
+    // strictly past, ending at the current row, narrow and wide
+    val frames = Seq((-20, -1), (-59, 0), (-4, 0), (-1, -1))
+    def check(df: DataFrame, x: Column, dt: DecimalType): DataFrame = {
+      val slide = df.select($"t" +: $"i" +: frames.flatMap { case (lo, hi) =>
+        Seq(sum(x.cast(dt)).over(w.rowsBetween(lo, hi)),
+          count(x).over(w.rowsBetween(lo, hi)))
+      }: _*)
+      val viaHelper = Det.withSlidingSums(df, w, frames.zipWithIndex.map {
+        case ((lo, hi), k) => Det.SlidingSum(s"s$k", x, dt, lo, hi)
+      }: _*)
+      val guarded = viaHelper.select($"t" +: $"i" +: frames.indices.flatMap(k =>
+        Seq(when(col(s"s${k}_n") > 0, col(s"s$k")), col(s"s${k}_n"))): _*)
+      assert(slide.exceptAll(guarded).isEmpty)
+      assert(guarded.exceptAll(slide).isEmpty)
+      // frames of different width share ONE running sum and count
+      val running = viaHelper.queryExecution.optimizedPlan.collect {
+        case pw: org.apache.spark.sql.catalyst.plans.logical.Window =>
+          pw.windowExpressions.count(_.sql.contains("UNBOUNDED PRECEDING"))
+      }.sum
+      assert(running === 2)
+      viaHelper
+    }
+
+    // random signed values over five decades, quantized onto a 1e-6 grid
     val rng = new scala.util.Random(3)
-    val rows = for {
+    val rnd = (for {
       t <- Seq("A", "B"); i <- 0 until 200
     } yield (t, i.toLong,
       if (i < 3 && t == "A" || rng.nextInt(11) == 0) None
-      else Some((rng.nextDouble() - 0.4) * math.pow(10, rng.nextInt(5))))
-    val df = rows.toDF("t", "i", "x")
-    val w = Window.partitionBy($"t").orderBy($"i")
-    val wRun = w.rowsBetween(Window.unboundedPreceding, 0)
-    val w20 = w.rowsBetween(-19, 0)
-    val q = Det.qfloor($"x", 1e6).cast(dec0)
-    val slide = df.select($"t", $"i",
-      sum(q).over(w20).cast("double").as("s"),
-      count($"x").over(w20).as("n"))
-    val prefix = df
-      .withColumn("_p", sum(q).over(wRun))
-      .withColumn("_c", count($"x").over(wRun))
-      .select($"t", $"i",
-        (col("_p") - coalesce(lag(col("_p"), 20).over(w), lit(0).cast(dec0)))
-          .cast("double").as("s"),
-        (col("_c") - coalesce(lag(col("_c"), 20).over(w), lit(0L))).as("n"))
-    assert(slide.exceptAll(prefix).count() === 0)
-    assert(prefix.exceptAll(slide).count() === 0)
+      else Some((rng.nextDouble() - 0.4) * math.pow(10, rng.nextInt(5)))))
+      .toDF("t", "i", "x")
+    check(rnd, Det.qfloor($"x", 1e6), dec0)
+
+    // per-ticker scattered nulls plus an all-null stretch (100..189)
+    // wider than every frame, as LongType and DECIMAL(20,4) inputs
+    val nully = (for {
+      t <- Seq("A", "B", "C"); i <- 0 until 300
+    } yield (t, i, if (i % 7 == 0 || (i >= 100 && i < 190)) None
+      else Some((i * 3 + t.hashCode % 11).toDouble / 16.0)))
+      .toDF("t", "i", "v")
+    check(nully, ($"v" * 16).cast("long"), DecimalType(20, 0))
+    val dec = check(nully, $"v".cast("decimal(20,4)"), DecimalType(20, 4))
+    // inside the all-null stretch every frame is empty: sum 0, count 0
+    val empty = dec.where($"i" >= 166 && $"i" < 190).select("s1", "s1_n").collect()
+    assert(empty.nonEmpty && empty.forall(r =>
+      r.getDecimal(0).signum == 0 && r.getLong(1) == 0L))
+
+    val bad = intercept[IllegalArgumentException](
+      Det.SlidingSum("ahead", $"v", dec0, -3, 1))
+    assert(bad.getMessage.contains("SlidingSum(ahead)"))
+    intercept[IllegalArgumentException](Det.SlidingSum("inverted", $"v", dec0, -1, -3))
   }
 
   test("decimal discipline: no unannotated 9/12/18-scale casts in query sources outside Det") {

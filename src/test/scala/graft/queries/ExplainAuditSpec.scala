@@ -117,12 +117,10 @@ class ExplainAuditSpec extends AnyFunSuite with TestSpark {
         .over(w.rowsBetween(-59, 0)))
     assert(ExplainAudit.wideSlidingExactSumViolations(
       slow.queryExecution.sparkPlan).nonEmpty, "control frame must be flagged")
-    // the running-prefix + lag-difference form is clean, and a NARROW
-    // sliding frame (span < 40) stays legal
-    val fast = fact
-      .withColumn("p", sum(floor($"value" * 1e6 + 0.5).cast(dec0))
-        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("s60", $"p" - coalesce(lag($"p", 60).over(w), lit(0).cast(dec0)))
+    // the Det.withSlidingSums plan for the same frame is clean, and a
+    // NARROW sliding frame (span < 40) stays legal
+    val fast = Det.withSlidingSums(fact, w,
+      Det.SlidingSum("s60", floor($"value" * 1e6 + 0.5), dec0, -59, 0))
     assert(ExplainAudit.wideSlidingExactSumViolations(
       fast.queryExecution.sparkPlan).isEmpty)
     val narrow = fact.withColumn("s5",
