@@ -1,73 +1,61 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.GraftSession
 
 /** Dev main: per-query runtime-structure profile for the optimization
   * rounds — wall seconds (min of reps after a warm rep), Spark job /
   * stage / task counts, summed executor task time, shuffle bytes
-  * written, and (optionally) the full `explain("formatted")` dumped to
-  * a file. The task metrics separate "the plan does too much work"
-  * (task time >> wall x cores would allow) from "the query is
-  * scheduling-bound" (many jobs/stages, tiny task time) — the first
-  * question guide §1 asks of every slow entry.
+  * written, and (optionally) the executed plans. The task metrics
+  * separate "the plan does too much work" (task time >> wall x cores
+  * would allow) from "the query is scheduling-bound" (many jobs/stages,
+  * tiny task time) — the first question guide §1 asks of every slow
+  * entry.
+  *
+  * `--plans <outDir>` writes the executed (AQE-final) plan of every
+  * action a query's warm rep ran, one `<query>_<nn>_<action>.txt` file
+  * each — what actually ran, including the eager per-round jobs of
+  * iterative operators, not a re-planning of the returned frame.
   *
   * Usage: runMain graft.tools.QueryProfile [--plans <outDir>] [q...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (32),
-  *      SPARK_GRAFT_REPS (2).
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default
+  *      nproc), SPARK_GRAFT_REPS (2).
   */
 object QueryProfile {
 
-  final class Counts extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var taskTimeMs = 0L
-    @volatile var shuffleWriteBytes = 0L
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      stages += 1
-      tasks += s.stageInfo.numTasks
-      shuffleWriteBytes += s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-      if (sys.env.contains("SPARK_GRAFT_STAGES"))
-        stageLog.add(f"    stage ${s.stageInfo.stageId}%5d tasks=${s.stageInfo.numTasks}%4d " +
-          f"runMs=${s.stageInfo.taskMetrics.executorRunTime}%6d ${s.stageInfo.name.take(90)}")
-    }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null) taskTimeMs += t.taskMetrics.executorRunTime
-    def reset(): Unit = { jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0L
-      shuffleWriteBytes = 0L; stageLog.clear() }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
+    val reps = GraftSession.positiveInt("SPARK_GRAFT_REPS", 2)
     val plansDir = {
       val i = args.indexOf("--plans")
       if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
     }
     val names0 = args.toSeq.filterNot(_.startsWith("--"))
       .filterNot(a => plansDir.contains(a))
-    // dev A/B knobs: SPARK_GRAFT_CONF="key=val;key=val" applies extra
-    // session confs so config hypotheses are measurable without edits
-    val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val listener = new Counts
+    val unknown = names0.filterNot(graft.SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    val spark = GraftSession.local()
+    val listener = new GraftSession.Counts
     spark.sparkContext.addSparkListener(listener)
+    // the query whose actions are being dumped; read on the listener
+    // thread, so each switch happens only after a drain
+    @volatile var planned: Option[String] = None
+    val action = new java.util.concurrent.atomic.AtomicInteger
+    plansDir.foreach { d =>
+      new java.io.File(d).mkdirs()
+      spark.listenerManager.register(new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit = planned.foreach { name =>
+          val f = new java.io.File(d, f"${name}_${action.incrementAndGet()}%02d_$funcName.txt")
+          val w = new java.io.PrintWriter(f)
+          try w.write(qe.explainString(FormattedMode)) finally w.close()
+        }
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = ()
+      })
+    }
 
     val names =
       if (names0.nonEmpty) names0
@@ -81,29 +69,23 @@ object QueryProfile {
       f"${"tasks"}%6s ${"tasktime_s"}%10s ${"shufMB"}%7s")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
+      def once(): Double = GraftSession.clock {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
       }
       try {
-        once() // warm rep: codegen + footers
+        planned = plansDir.map(_ => name); action.set(0)
+        try once() // warm rep: codegen + footers
+        finally { GraftSession.drain(spark.sparkContext); planned = None }
         listener.reset()
         var best = Double.MaxValue
         (1 to reps).foreach(_ => best = math.min(best, once()))
-        Thread.sleep(200) // let straggler listener events drain
+        GraftSession.drain(spark.sparkContext)
         val perRep = reps.toDouble
         println(f"$name%-34s $best%7.2f ${listener.jobs / perRep}%5.1f " +
           f"${listener.stages / perRep}%7.1f ${listener.tasks / perRep}%6.0f " +
           f"${listener.taskTimeMs / perRep / 1e3}%10.2f " +
           f"${listener.shuffleWriteBytes / perRep / 1e6}%7.1f")
         while (!listener.stageLog.isEmpty) println(listener.stageLog.poll())
-        plansDir.foreach { d =>
-          val dir = new java.io.File(d); dir.mkdirs()
-          val w = new java.io.PrintWriter(new java.io.File(dir, s"$name.txt"))
-          try w.write(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
-          finally w.close()
-        }
       } catch {
         case t: Throwable => println(f"$name%-34s FAILED: $t")
       }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.tools.ScaleSweep [baseDir] [outJson] [scale]
   * Env: SPARK_GRAFT_SCALE_DIR (scratch; default /tmp/graft_scale10),
-  *      SPARK_GRAFT_CPUS.
+  *      SPARK_GRAFT_CPUS (default nproc), SPARK_GRAFT_REPS (2).
   *
   * The exact all-pairs baselines q51/q86 are EXCLUDED by design: they
   * are quadratic on purpose (the honesty arms for the LSH/blocked scale
@@ -239,16 +239,8 @@ object ScaleSweep {
     val outJson = args.lift(1).getOrElse("SCALING_r14.json")
     val scale = args.lift(2).map(_.toInt).getOrElse(10)
     val scratch = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val reps = graft.GraftSession.positiveInt("SPARK_GRAFT_REPS", 2)
+    val spark = graft.GraftSession.local()
 
     ensureScaled(spark, base, scratch, scale)
 
@@ -262,15 +254,8 @@ object ScaleSweep {
     def execOn(name: String, dir: String): Unit =
       graft.SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()
-    def clock(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def calib(): Double = clock {
-      spark.range(50000000L)
-        .selectExpr("pmod(id * 2654435761, 1024) AS k", "id AS v")
-        .groupBy("k").sum("v")
-        .write.format("noop").mode("overwrite").save()
-    }
+    import graft.GraftSession.clock
+    def calib(): Double = clock(graft.GraftSession.calibJob(spark))
 
     // Two skip channels, BOTH self-recorded in the artifact's `skipped`
     // map (name -> reason + evidence) so a reader of the JSON alone can

@@ -1,26 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
 /** Shared local session for specs (one JVM-wide session, tests reuse). */
-trait TestSpark extends BeforeAndAfterAll { self: Suite =>
+trait TestSpark { self: Suite =>
   lazy val spark: SparkSession = TestSpark.session
-
-  override def afterAll(): Unit = super.afterAll()
 }
 
 object TestSpark {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(4)
 }

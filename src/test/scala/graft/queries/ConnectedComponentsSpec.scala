@@ -1,8 +1,15 @@
 package graft.queries
 
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
+  ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{GraftSession, TestSpark}
 import graft.operators.ConnectedComponents
 
 class ConnectedComponentsSpec extends AnyFunSuite with TestSpark {
@@ -146,5 +153,49 @@ class ConnectedComponentsSpec extends AnyFunSuite with TestSpark {
     }
     // exactly the pair-graph nodes are clustered (singletons excluded)
     assert(clusters.keySet === pairs.flatMap(p => Seq(p._1, p._2)).toSet)
+  }
+
+  test("run(): every distributed round joins the edge cache with no Exchange on its side") {
+    val spark2 = spark
+    import spark2.implicits._
+    // 50 chains of 8 nodes: 7+ propagation rounds. Each round's join must
+    // read the src-partitioned, sorted edge cache as it is (the shape of
+    // plans/r20/cc_prop_round_after.txt nodes 21-29).
+    val edges = (1L until 400L).filter(_ % 8 != 0).map(i => (i, i + 1)).toDF("src", "dst")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // a broadcast join would hide the sort-merge shape the cache serves
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    spark.listenerManager.register(listener)
+    try {
+      ConnectedComponents.run(edges, localFinishEdges = 0L)
+      GraftSession.drain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(key, prev)
+    }
+    // executed nodes, through AQE stages; a cache scan is a leaf, so the
+    // walk never enters the plan that built the cached relation
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case o => o.children.flatMap(walk)
+    })
+    import scala.jdk.CollectionConverters._
+    val joins = plans.asScala.toSeq.flatMap(walk).collect { case j: SortMergeJoinExec => j }
+    assert(joins.size >= 7, s"expected one sort-merge join per round, got ${joins.size}")
+    joins.foreach { j =>
+      val edgeSide = walk(j.left)
+      assert(!edgeSide.exists(p => p.isInstanceOf[ShuffleExchangeLike] ||
+        p.isInstanceOf[ShuffleQueryStageExec]), s"Exchange on the edge side:\n$j")
+      assert(edgeSide.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"round join does not read the edge cache:\n$j")
+    }
   }
 }
