@@ -42,7 +42,8 @@ final case class QualityReport(
     nNonPositivePrices: Long,
     nNegativeVolume: Long,
     missingRatio: Double,
-    status: String) // PASS | WARN | FAIL
+    status: String, // PASS | WARN | FAIL
+    nFeatureNulls: Long) // rows with a null ticker, date, close, high or low
 
 /** A trading signal (reference models/time_series_signal_generator.py:151). */
 final case class Signal(

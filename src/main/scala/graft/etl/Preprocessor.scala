@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,12 +43,20 @@ object Preprocessor {
     val wBack = Window.partitionBy("ticker").orderBy(col("date").desc)
       .rowsBetween(Window.unboundedPreceding, 0)
     val wGrp = Window.partitionBy("ticker")
-    cols.foldLeft(df) { (acc, c) =>
-      val ff = last(col(c), ignoreNulls = true).over(wAll)
-      val bf = if (backfill) coalesce(ff, last(col(c), ignoreNulls = true).over(wBack)) else ff
-      val gm = if (groupMean) coalesce(bf, avg(col(c)).over(wGrp)) else bf
-      acc.withColumn(c, gm)
-    }
+    require(cols.forall(df.columns.contains),
+      s"handleMissing: no column ${cols.filterNot(df.columns.contains).mkString(", ")}")
+    // one projection fills every column in place (a withColumn per column
+    // re-analyzed the growing plan once each)
+    df.select(df.columns.toSeq.map { c =>
+      val x = df(s"`$c`")
+      if (!cols.contains(c)) x
+      else {
+        val ff = last(x, ignoreNulls = true).over(wAll)
+        val bf = if (backfill) coalesce(ff, last(x, ignoreNulls = true).over(wBack)) else ff
+        val gm = if (groupMean) coalesce(bf, avg(x).over(wGrp)) else bf
+        gm.as(c)
+      }
+    }: _*)
   }
 
   /** Linear interpolation of interior gaps per ticker: previous and next
@@ -88,11 +96,15 @@ object Preprocessor {
     * off-grid doubles quantize ~1e-12 relative — far inside the fit's
     * statistical noise (EtlCoreSpec pins the round trip at 1e-9). */
   def fitZScore(train: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap(c => Seq(
-      graft.queries.Det.davg12(col(c)).as(s"${c}__mean"),
-      graft.queries.Det.dstddev12(col(c)).as(s"${c}__std")))
+    val aggs = zScoreAggs(cols)
     train.groupBy("ticker").agg(aggs.head, aggs.tail: _*)
   }
+
+  /** [[fitZScore]]'s per-ticker aggregates (`<c>__mean`, `<c>__std`), for
+    * callers that fit them in a wider per-ticker aggregate. */
+  def zScoreAggs(cols: Seq[String]): Seq[Column] = cols.flatMap(c => Seq(
+    graft.queries.Det.davg12(col(c)).as(s"${c}__mean"),
+    graft.queries.Det.dstddev12(col(c)).as(s"${c}__std")))
 
   /** Apply previously fitted stats (no refit — leak-safe). std==0 or
     * null → 0.0, matching the reference's std==0→NaN→0 handling. */

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Split drift diagnostics — rebuild of /root/reference/etl/
@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
 object SplitDiagnostics {
 
   /** PSI of `valueCol` between the rows tagged `trainTag` and `otherTag`
-    * in `splitCol`, per ticker, using nBins train-quantile bins. */
+    * in `splitCol`, per ticker, using nBins train-quantile bins. A ticker
+    * with no rows on either side (say, one delisted before the
+    * validation window) has no distribution to compare and gets no row. */
   def psi(
       df: DataFrame,
       valueCol: String,
@@ -25,10 +27,28 @@ object SplitDiagnostics {
       otherTag: String = "validation",
       nBins: Int = 10,
       eps: Double = 1e-6): DataFrame = {
-    val train = df.where(col(splitCol) === trainTag)
+    val cuts = df.where(col(splitCol) === trainTag).groupBy("ticker")
+      .agg(binCuts(valueCol, nBins))
+    psiWithCuts(df, cuts, valueCol, splitCol, trainTag, otherTag, eps)
+  }
+
+  /** The per-ticker train-quantile bin cuts [[psi]] buckets by, as the
+    * aggregate column `cuts` — for callers that fit them in a wider
+    * per-ticker aggregate over the training rows. */
+  def binCuts(valueCol: String, nBins: Int = 10): Column = {
     val probs = (1 until nBins).map(_.toDouble / nBins)
-    val cuts = train.groupBy("ticker")
-      .agg(percentile_approx(col(valueCol), typedLit(probs), lit(10000)).as("cuts"))
+    percentile_approx(col(valueCol), typedLit(probs), lit(10000)).as("cuts")
+  }
+
+  /** [[psi]] over precomputed `cuts` (ticker, cuts — see [[binCuts]]). */
+  def psiWithCuts(
+      df: DataFrame,
+      cuts: DataFrame,
+      valueCol: String,
+      splitCol: String = "split",
+      trainTag: String = "training",
+      otherTag: String = "validation",
+      eps: Double = 1e-6): DataFrame = {
     val bucketed = df.where(col(splitCol).isin(trainTag, otherTag))
       .join(broadcast(cuts), "ticker")
       .withColumn("bin", expr(
@@ -36,8 +56,11 @@ object SplitDiagnostics {
     val counts = bucketed.groupBy("ticker", "bin").agg(
       sum(when(col(splitCol) === trainTag, 1).otherwise(0)).as("n_a"),
       sum(when(col(splitCol) === otherTag, 1).otherwise(0)).as("n_b"))
+    // both sides must hold rows: an empty side divides by zero (an
+    // ANSI-mode DIVIDE_BY_ZERO failure of the whole query)
     val tot = counts.groupBy("ticker")
       .agg(sum("n_a").as("t_a"), sum("n_b").as("t_b"))
+      .where(col("t_a") > 0 && col("t_b") > 0)
     counts.join(tot, "ticker")
       .withColumn("p", col("n_a").cast("double") / col("t_a") + eps)
       .withColumn("q", col("n_b").cast("double") / col("t_b") + eps)

@@ -80,6 +80,42 @@ object Splitter {
       .drop("__d", "__split")
   }
 
+  /** [[chronological]] with its two cut dates derived once, on the
+    * driver, from ONE bounded collect of the distinct-date dimension
+    * (tiny; the collect stops one row past the bound, so an oversized
+    * dimension fails by name instead of flooding the driver). The tagged
+    * frame is then a plain projection of `df` — no join, no tag dim —
+    * so no later action over it re-derives anything. The ranks are
+    * chronological's row_number over the distinct dates (ascending, the
+    * null date first: it takes a rank yet tags no row) and the rounding
+    * is Spark's `round` (HALF_UP on the double's decimal form), so every
+    * row gets chronological's tag (spec: EtlCoreSpec); null dates tag
+    * "testing". */
+  def tagChronological(df: DataFrame, trainFrac: Double = 0.70,
+      valFrac: Double = 0.15): DataFrame = {
+    val maxDates = 1000000
+    val dates = df.select(col("date").cast("timestamp")).distinct()
+      .limit(maxDates + 1).collect().map(r => Option(r.getTimestamp(0)))
+    require(dates.length <= maxDates,
+      s"date dimension unexpectedly large (>$maxDates rows) — not a bar-frequency table")
+    val n = dates.length.toLong
+    require(n >= 3, s"need >=3 distinct dates, got $n")
+    val sorted = dates.sorted(Ordering.Option(
+      Ordering.by[java.sql.Timestamp, (Long, Int)](t => (t.getTime, t.getNanos))))
+    def round(x: Double): Long = java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+    val nTr = math.max(1L, round(n * trainFrac))
+    val nVa = math.max(1L, round(n * valFrac))
+    // a row is at or below the cut at rank r (1-based); a cut on the
+    // null date admits no row
+    def upTo(r: Long) = sorted((r - 1).toInt)
+      .map(c => col("date") <= lit(c)).getOrElse(lit(false))
+    df.withColumn("split",
+      when(upTo(math.min(nTr, n - 2)), "training")
+        .when(upTo(math.min(nTr + nVa, n - 1)), "validation")
+        .otherwise("testing"))
+  }
+
   final case class FoldSpec(foldId: Int, trainStart: java.sql.Timestamp,
       trainEnd: java.sql.Timestamp, valStart: java.sql.Timestamp,
       valEnd: java.sql.Timestamp)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.domain.QualityReport
+import graft.features.FeatureKernel
 
 /** OHLCV validator — rebuild of the reference's predicate set
   * (/root/reference/etl/data_validator.py:36-90: price positivity, volume
@@ -21,16 +22,16 @@ object Validator {
 
   val priceCols: Seq[String] = Seq("open", "high", "low", "close")
 
-  /** `exactDistinct = false` profiles ticker cardinality with HLL
-    * (`approx_count_distinct`, mergeable one-pass sketch) instead of the
-    * exact distinct — at 100 TB with millions of tickers the exact
-    * count is the report's only expensive aggregate; the sketch's ~2%
-    * rsd is irrelevant to a cardinality PROFILE (every pass/fail
-    * predicate here is exact either way). */
   /** The full validation report as a LAZY one-row DataFrame — the same
     * aggregation [[validate]] collects, including the PASS/WARN/FAIL
     * status column, so callers (and the q173 oracle gate) can compose it
-    * without forcing a job at construction time. */
+    * without forcing a job at construction time. `n_feature_nulls`
+    * counts the rows with a null in one of the feature kernel's input
+    * columns (`graft.features.FeatureKernel.inputCols`); it feeds no
+    * status. `exactDistinct = false` profiles ticker cardinality with HLL
+    * (`approx_count_distinct`) — at 100 TB the exact distinct is the
+    * report's only expensive aggregate, and every pass/fail predicate
+    * stays exact either way. */
   def reportDf(
       df: DataFrame,
       missingThreshold: Double = 0.05,
@@ -69,7 +70,9 @@ object Validator {
         nonPositive.as("n_nonpos"),
         sum(when(col("volume") < 0, 1).otherwise(0)).as("n_negvol"),
         missing.as("missing_ratio"),
-        min(col("ticker_bars")).as("min_bars"))
+        min(col("ticker_bars")).as("min_bars"),
+        sum(when(FeatureKernel.inputCols.map(c => col(c).isNull).reduce(_ || _), 1)
+          .otherwise(0)).as("n_feature_nulls"))
       .withColumn("status",
         when(col("n_rows") === 0 || col("n_dup") > 0 || col("n_nonmono") > 0 ||
           col("n_nonfinite") > 0 || col("n_nonpos") > 0 || col("n_negvol") > 0 ||
@@ -101,7 +104,8 @@ object Validator {
       nNonPositivePrices = l("n_nonpos"),
       nNegativeVolume = l("n_negvol"),
       missingRatio = d("missing_ratio"),
-      status = agged.getString(agged.fieldIndex("status")))
+      status = agged.getString(agged.fieldIndex("status")),
+      nFeatureNulls = l("n_feature_nulls"))
   }
 
   /** PASS/WARN/FAIL → routing classification (preprocessor.py:174-186):

@@ -2,8 +2,9 @@ package graft.features
 
 import java.math.{BigDecimal => JBig}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.ChunkedWindow
 
@@ -30,10 +31,16 @@ import graft.operators.ChunkedWindow
   *    ANY prefix depth) where the plain form sums doubles in frame
   *    order. Neither is "the" value; no gate hashes these.
   *
-  * Requires non-null close/high/low (the feature-input contract): the
-  * gap-run feature needs unbounded island lookahead, so null-close
-  * inputs must use the plain form. The kernel throws on null input
-  * rather than degrade silently.
+  * Requires non-null ticker/date/close/high/low (the feature-input
+  * contract, counted by `Validator`'s `n_feature_nulls`): the gap-run
+  * feature needs unbounded island lookahead, so null-close inputs must
+  * use the plain form — `EtlPipeline.run` routes them there. The kernel
+  * throws on null input rather than degrade silently.
+  *
+  * Every other input column (a bar's open, volume, adjClose, source) is
+  * carried through the shuffle on its own row, untouched, and comes out
+  * in its input position — so callers need no join back on
+  * (ticker, date) to recover it.
   */
 object FeatureKernel {
 
@@ -41,13 +48,14 @@ object FeatureKernel {
   case class FRow(ticker: String, dateUs: Long, close: Double,
       high: Double, low: Double)
 
-  /** Kernel output: the per-ticker windowed feature block of build(). */
+  /** Kernel output: the five input columns, then the per-ticker windowed
+    * feature block in build()'s column order. */
   final case class FeatRow(
       ticker: String, date_us: Long, close: Double, high: Double, low: Double,
-      ret_1: Option[Double],
-      close_lag_1: Option[Double], close_lag_5: Option[Double],
-      close_lag_10: Option[Double], close_lag_20: Option[Double],
-      ret_5: Option[Double], ret_10: Option[Double], ret_20: Option[Double],
+      ret_1: Option[Double], close_lag_1: Option[Double],
+      close_lag_5: Option[Double], ret_5: Option[Double],
+      close_lag_10: Option[Double], ret_10: Option[Double],
+      close_lag_20: Option[Double], ret_20: Option[Double],
       diff_1: Option[Double], diff_5: Option[Double],
       roll_mean_5: Double, roll_std_5: Option[Double],
       roll_skew_5: Option[Double],
@@ -69,7 +77,7 @@ object FeatureKernel {
   private val RP = 128 // prefix-ring capacity (P(k-126)..P(k): 127 live)
 
   private final class Kernel
-      extends ChunkedWindow.HaloKernel[FRow, FeatRow] {
+      extends ChunkedWindow.HaloKernel[(FRow, Row), (FeatRow, Row)] {
     // value rings, indexed by local row index j mod R
     private val cvR = new Array[Double](R)
     private val retR = new Array[Double](R)
@@ -106,7 +114,10 @@ object FeatureKernel {
     // global truth (no predecessor in the replay), but haloScan carries
     // H rows and every frame an EMITTED row reads stays > its own depth
     // away from the replay's cold edge — see the parity spec
-    def halo(f: FRow): Unit = push(f)
+    def halo(t: (FRow, Row)): Unit = push(t._1)
+
+    // the carried columns ride along with their row, untouched
+    def row(t: (FRow, Row)): (FeatRow, Row) = (features(t._1), t._2)
 
     private def push(f: FRow): Unit = {
       val j = k // local index of this row
@@ -186,10 +197,12 @@ object FeatureKernel {
     private def gMax(a: Double, b: Double): Double =
       if (java.lang.Double.compare(a, b) >= 0) a else b
 
-    private def diff(p: Array[JBig], rows: Long): Double = {
+    private def diff(p: Array[JBig], rows: Long): Double = exact(p, rows).doubleValue
+
+    private def exact(p: Array[JBig], rows: Long): JBig = {
       val hiP = (k % RP).toInt
       val loP = ((k - rows) % RP).toInt
-      p(hiP).subtract(p(loP)).doubleValue
+      p(hiP).subtract(p(loP))
     }
 
     private def cntDiff(rows: Long): Long = {
@@ -204,7 +217,7 @@ object FeatureKernel {
       math.sqrt(math.max((nd * s2 - s1 * s1) / (nd * (nd - 1.0)), 0.0))
     }
 
-    def row(f: FRow): FeatRow = {
+    private def features(f: FRow): FeatRow = {
       push(f)
       val g = rn // global index of THIS row
       rn += 1
@@ -232,12 +245,19 @@ object FeatureKernel {
         // skewness yields NULL
         if (closeEq >= m - 1) None
         else {
-          val s1 = diff(c1, m); val s2 = diff(c2, m); val s3 = diff(c3, m)
-          val md = m.toDouble
-          val mu = s1 / md
-          val m2 = s2 - mu * s1
-          val m3 = s3 - 3.0 * mu * s2 + 2.0 * mu * mu * s1
-          Some(math.sqrt(md) * m3 / math.sqrt(m2 * m2 * m2))
+          // sqrt(m)·m3/m2^1.5 of the central sums, = N3/N2^1.5 with the
+          // scaled central sums N2 = m·m2 and N3 = m²·m3 formed EXACTLY
+          // from the decimal sums: formed in doubles, Σx³ − 3μΣx² + …
+          // cancelled to a 3.4e-7 relative gap from WindowExec on 5-bar
+          // frames of the seeded bench bars
+          val s1 = exact(c1, m); val s2 = exact(c2, m); val s3 = exact(c3, m)
+          val mb = JBig.valueOf(m)
+          val n2 = mb.multiply(s2).subtract(s1.multiply(s1))
+          val n3 = mb.multiply(mb).multiply(s3)
+            .subtract(JBig.valueOf(3L).multiply(mb).multiply(s1).multiply(s2))
+            .add(JBig.valueOf(2L).multiply(s1).multiply(s1).multiply(s1))
+          val n2d = n2.doubleValue
+          Some(n3.doubleValue / math.sqrt(n2d * n2d * n2d))
         }
       }
 
@@ -337,22 +357,30 @@ object FeatureKernel {
     }
   }
 
+  /** The input columns the kernel reads — each must be non-null. */
+  val inputCols: Seq[String] = Seq("ticker", "date", "close", "high", "low")
+
   /** Run the kernel: df must provide ticker, date (timestamp), close,
     * high, low — all non-null except per the feature-input contract.
-    * Output: the FeatRow columns with `date` restored as a timestamp. */
+    * Output: df's columns in df's order — the five kernel columns as the
+    * kernel read them (string ticker, timestamp date, double prices),
+    * every other column carried through unchanged on its own row — then
+    * the windowed block in build()'s column order. */
   def run(df: DataFrame, numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    import spark.implicits._
     // FRow's primitive fields make the encoder itself the null guard: a
     // null close/high/low/date fails deserialization loudly ("null value
     // appeared in non-nullable field") instead of emitting silently-wrong
     // gap features — gappy inputs must use FeatureBuilder.build.
+    val carried = StructType(df.schema.filterNot(f => inputCols.contains(f.name)))
     val base = df.select(
-      col("ticker").cast("string").as("ticker"),
-      unix_micros(col("date")).as("dateUs"),
-      col("close").cast("double").as("close"),
-      col("high").cast("double").as("high"),
-      col("low").cast("double").as("low"))
+      struct(
+        col("ticker").cast("string").as("ticker"),
+        unix_micros(col("date")).as("dateUs"),
+        col("close").cast("double").as("close"),
+        col("high").cast("double").as("high"),
+        col("low").cast("double").as("low")).as("_1"),
+      struct(carried.fieldNames.toSeq.map(c => df(s"`$c`")): _*).as("_2"))
 
     // data-derived partition count (capped at shuffle.partitions): this
     // range shuffle is RDD-level, so AQE never right-sizes it — see
@@ -364,14 +392,25 @@ object FeatureKernel {
     // chunks (r19 measured: q156 lost ~1 s serial at the 512 KB target).
     val p = if (numPartitions > 0) numPartitions
       else graft.operators.SizedPartitions.of(df, targetBytes = 64L << 10)
-    val keyed = base.as[FRow].rdd.map(r => ((r.ticker, r.dateUs, 0L), r))
-    val light = base.select(col("ticker"), col("dateUs"))
-      .as[(String, Long)].rdd.map(k => ((k._1, k._2, 0L), ()))
+    // the carried values travel as a schema-less Row: a GenericRowWithSchema
+    // would serialize its schema into the shuffle with the values
+    val keyed = base.as(Encoders.tuple(Encoders.product[FRow], Encoders.row(carried)))
+      .rdd.map { case (f, rest) =>
+        ((f.ticker, f.dateUs, 0L), (f, Row.fromSeq(rest.toSeq))) }
+    val light = base.select(col("_1.ticker"), col("_1.dateUs"))
+      .as[(String, Long)](Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .rdd.map(k => ((k._1, k._2, 0L), ()))
 
     val out = ChunkedWindow.haloScan(spark, keyed, light, p, H)(
       () => new Kernel)
-    spark.createDataset(out).toDF()
-      .withColumn("date", timestamp_micros(col("date_us")))
-      .drop("date_us")
+    val featEnc = Encoders.product[FeatRow]
+    val block = featEnc.schema.fieldNames.toSeq.drop(inputCols.size)
+    val passed = df.columns.toSeq.map {
+      case "date" => timestamp_micros(col("_1.date_us")).as("date")
+      case c if inputCols.contains(c) => col(s"_1.$c").as(c)
+      case c => col("_2").getField(c).as(c)
+    }
+    spark.createDataset(out)(Encoders.tuple(featEnc, Encoders.row(carried)))
+      .select(passed ++ block.map(c => col(s"_1.$c").as(c)): _*)
   }
 }

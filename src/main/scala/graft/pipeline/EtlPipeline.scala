@@ -18,6 +18,18 @@ import graft.features.FeatureBuilder
   * Stages are DataFrame→DataFrame transforms; "checkpoints" are parquet
   * stage directories plus a run-catalog row keyed by a per-run id
   * (etl/checkpoint_manager.py:59-436 reduced to its durable core).
+  *
+  * Feature route: input that meets the feature kernel's contract — no
+  * null ticker, date, close, high or low, read from the validator's
+  * `n_feature_nulls` — builds its processed stage through
+  * `FeatureBuilder.buildFast` (the row-parallel halo kernel, which
+  * carries open/volume/adjClose/source through, so the stage keeps the
+  * plain form's exact schema and column order); any other input takes
+  * `FeatureBuilder.build`. The kernel frame is not persisted: recomputing
+  * it for finish()'s three subtrees measured faster than caching it, and
+  * no block outlives the run. The split stage derives its two cut dates
+  * once per run and fits the z-score moments and PSI bin cuts in one
+  * per-ticker aggregate.
   */
 object EtlPipeline {
 
@@ -67,20 +79,45 @@ object EtlPipeline {
     val quality = Validator.validate(raw, minBars = cfg.minBars)
     require(quality.status != "FAIL", s"validation failed: $quality")
 
-    // 3. preprocessing — causal fill unless research mode
-    val filled = Preprocessor.handleMissing(raw,
-      cols = Seq("open", "high", "low", "close"),
-      backfill = cfg.researchMode)
-    val features = FeatureBuilder.build(filled, dropNa = false)
-    val processed = store("processed", features)
+    // 3. preprocessing + features. Input that meets the feature
+    // kernel's contract (the validator's n_feature_nulls: no null
+    // ticker/date/close/high/low; unique keys and monotonic dates are
+    // FAIL conditions above) takes the row-parallel kernel; any other
+    // input takes the plain per-ticker Window form. The causal fill is
+    // the identity on a column without nulls, so the kernel route fills
+    // only `open` (its prices are null-free by the contract), and only
+    // when the report counted a null at all.
+    val prices = Seq("open", "high", "low", "close")
+    def fill(cols: Seq[String]) =
+      Preprocessor.handleMissing(raw, cols, backfill = cfg.researchMode)
+    val processed =
+      if (quality.nFeatureNulls > 0)
+        store("processed", FeatureBuilder.build(fill(prices), dropNa = false))
+      else
+        store("processed", FeatureBuilder.buildFast(
+          if (quality.nResidualNulls > 0) fill(Seq("open")) else raw,
+          dropNa = false))
 
-    // 4. split + post-split normalization (fit on train ONLY) + drift
-    val tagged = Splitter.chronological(processed, cfg.trainFrac, cfg.valFrac)
-    val stats = Preprocessor.fitZScore(
-      tagged.where(col("split") === "training"), cfg.normalizeCols)
-    val normalized = Preprocessor.applyZScore(tagged, stats, cfg.normalizeCols)
-    val psi = SplitDiagnostics.psi(tagged, "close").collect()
-      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // 4. split + post-split normalization (fit on train ONLY) + drift.
+    // The cut dates are derived once (one bounded collect of the date
+    // dim), so `tagged` is a plain projection of the processed stage;
+    // ONE per-ticker aggregate over the training rows fits both the
+    // z-score moments and the PSI bin cuts, collected as a local
+    // (tickers-row) dimension that the PSI counts and the split write
+    // both broadcast without re-running it (a broadcast collects the
+    // dimension to the driver anyway).
+    val tagged = Splitter.tagChronological(processed, cfg.trainFrac, cfg.valFrac)
+    val fit = {
+      val aggs = Preprocessor.zScoreAggs(cfg.normalizeCols) :+
+        SplitDiagnostics.binCuts("close")
+      val agg = tagged.where(col("split") === "training")
+        .groupBy("ticker").agg(aggs.head, aggs.tail: _*)
+      spark.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
+    }
+    val normalized = Preprocessor.applyZScore(tagged, fit.drop("cuts"),
+      cfg.normalizeCols)
+    val psi = SplitDiagnostics.psiWithCuts(tagged, fit.select("ticker", "cuts"),
+      "close").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     // Stage outputs deliberately EXCLUDE the `split` column in every
     // mode (it is constant within a stage dir); the single-pass path
     // below drops it structurally (it becomes the renamed-away partition

@@ -91,7 +91,7 @@ class EtlCoreSpec extends AnyFunSuite with TestSpark {
         Validator.Classification(r.getBoolean(3), r.getBoolean(4), r.getString(5)))
       .toMap
     grid.foreach { case (status, imputed, padding) =>
-      val rep = graft.domain.QualityReport(1, 1, 0, 0, 0, 0, 0, 0, 0.0, status)
+      val rep = graft.domain.QualityReport(1, 1, 0, 0, 0, 0, 0, 0, 0.0, status, 0)
       assert(got((status, imputed, padding)) ===
         Validator.classify(rep, imputed, padding),
         s"($status, $imputed, $padding)")
@@ -154,6 +154,40 @@ class EtlCoreSpec extends AnyFunSuite with TestSpark {
     assert(SplitDiagnostics.nonOverlapping(tagged, tagA = "validation", tagB = "testing"))
     // every date maps to exactly one split
     assert(byDate.groupBy("date").count().where(col("count") > 1).isEmpty)
+  }
+
+  test("tagChronological tags every row exactly as chronological, null dates included") {
+    val spark2 = spark
+    import spark2.implicits._
+    def tags(df: DataFrame) = df.select("ticker", "date", "split").collect()
+      .map(_.toString).sorted.toSeq
+    // a null date ranks FIRST among chronological's distinct dates and
+    // tags no row, yet shifts every cut by one
+    val withNull = bars.unionByName(bars.limit(2)
+      .withColumn("date", lit(null).cast("timestamp")))
+    // 10 distinct dates (9 + the null): fractions whose n·frac land on
+    // .5 exercise the HALF_UP rounding; 0.05·10 clamps to the 1-date floor
+    val tiny = (1 to 9).map(d => ("T", Timestamp.valueOf(s"2024-01-0$d 00:00:00"), 1.0))
+      .toDF("ticker", "date", "close")
+      .unionByName(Seq(("T", null.asInstanceOf[Timestamp], 2.0)).toDF("ticker", "date", "close"))
+    for {
+      df <- Seq(bars, withNull, tiny)
+      (tr, va) <- Seq((0.70, 0.15), (0.25, 0.35), (0.05, 0.45), (0.5, 0.25))
+    } assert(tags(Splitter.tagChronological(df, tr, va)) ===
+      tags(Splitter.chronological(df, tr, va)), s"fractions ($tr, $va)")
+    // the null-date rows are testing rows in both forms
+    assert(Splitter.tagChronological(withNull).where(col("date").isNull)
+      .select("split").distinct().as[String].collect().toSeq === Seq("testing"))
+  }
+
+  test("both chronological forms refuse fewer than 3 distinct dates by name") {
+    val two = bars.where(col("date") <= "2024-01-02")
+    assert(two.select("date").distinct().count() === 2)
+    val eager = intercept[IllegalArgumentException](Splitter.tagChronological(two))
+    assert(eager.getMessage.contains("need >=3 distinct dates, got 2"))
+    val lazyErr = intercept[Exception](Splitter.chronological(two).collect())
+    assert(Iterator.iterate[Throwable](lazyErr)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("need >=3 distinct dates, got 2")))
   }
 
   test("expanding CV folds grow train, isolate test tail, keep order") {

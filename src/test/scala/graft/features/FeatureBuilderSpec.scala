@@ -119,76 +119,19 @@ class FeatureBuilderSpec extends AnyFunSuite with TestSpark {
   }
 
   test("buildFast parity: bit-exact gated columns, ulp-close moments, identical null patterns") {
-    val spark2 = spark
-    import spark2.implicits._
     val in = bars.select("ticker", "date", "close", "high", "low")
-    val plain = FeatureBuilder.build(in, dropNa = false)
     // 8 partitions over 2×200 rows: key runs SPLIT across partitions, so
     // the halo replay path is exercised, not just the fresh-key path
-    val fast = FeatureBuilder.buildFast(in, dropNa = false)
-    assert(plain.columns.sorted.sameElements(fast.columns.sorted))
+    FeatureParity.check(FeatureBuilder.build(in, dropNa = false),
+      FeatureBuilder.buildFast(in, dropNa = false))
+  }
 
-    val cols = plain.columns.sorted
-    def rowsOf(df: org.apache.spark.sql.DataFrame) = df
-      .select(cols.head, cols.tail: _*)
-      .orderBy("ticker", "date").collect()
-    val p = rowsOf(plain)
-    val f = rowsOf(fast)
-    assert(p.length === f.length)
-
-    val exact = Set("ticker", "date", "close", "high", "low",
-      "ret_1", "close_lag_1", "close_lag_5", "close_lag_10", "close_lag_20",
-      "ret_5", "ret_10", "ret_20", "diff_1", "diff_5", "gap_run_len",
-      "drawdown_60", "max_drawdown_60", "cvar_95_60", "true_range",
-      "xsec_rank_ret5", "is_month_end", "is_quarter_end")
-    // vol_regime is NOT in the guaranteed-exact set: it buckets
-    // roll_std_20 (ulp-close, not bit-equal, between the two forms)
-    // against percentile_approx tercile cuts over that same column — a
-    // std landing exactly ON a cut can legitimately flip the bucket by
-    // one. A mismatch is accepted only when it is exactly that: adjacent
-    // buckets AND the row's std within relative 2e-7 of a tercile cut
-    // (recomputed here from the plain frame, the same
-    // percentile_approx(…, 1e4) call finish() uses).
-    val volCuts: Map[String, Seq[Double]] = plain.groupBy("ticker")
-      .agg(percentile_approx(col("roll_std_20"),
-        typedLit(Seq(1.0 / 3, 2.0 / 3)), lit(10000)).as("cuts"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-    val stdIdx = cols.indexOf("roll_std_20")
-    val tickerIdx = cols.indexOf("ticker")
-    p.zip(f).zipWithIndex.foreach { case ((pr, fr), ri) =>
-      cols.zipWithIndex.foreach { case (c, ci) =>
-        val ctx = s"row $ri col $c"
-        assert(pr.isNullAt(ci) === fr.isNullAt(ci), s"null pattern @ $ctx")
-        if (!pr.isNullAt(ci)) {
-          (pr.get(ci), fr.get(ci)) match {
-            case (a: Double, b: Double) =>
-              if (exact(c)) assert(
-                java.lang.Double.compare(a, b) == 0, s"$ctx: $a vs $b")
-              else {
-                // moments: exact-decimal sums vs frame-order double sums
-                assert(a.isNaN === b.isNaN, s"NaN @ $ctx: $a vs $b")
-                if (!a.isNaN)
-                  assert(math.abs(a - b) <=
-                    1e-7 * math.max(1.0, math.max(a.abs, b.abs)),
-                    s"$ctx: $a vs $b")
-              }
-            case (a: Int, b: Int) if c == "vol_regime" && a != b =>
-              val std = pr.getDouble(stdIdx)
-              val cutsT = volCuts(pr.getString(tickerIdx))
-              // 2e-7: the row's std and the recomputed cut can EACH sit
-              // up to rel 1e-7 from their fast-path twins (ulp drift
-              // compounds), so a legitimate flip can show plain-std vs
-              // plain-cut distance up to ~2e-7
-              val nearCut = cutsT.exists(cut =>
-                math.abs(std - cut) <= 2e-7 * math.max(1.0, std.abs))
-              assert(math.abs(a - b) == 1 && nearCut,
-                s"$ctx: bucket $a vs $b with std=$std not at a cut $cutsT")
-            case (a, b) => assert(a === b, s"$ctx: $a vs $b")
-          }
-        }
-      }
-    }
+  test("buildFast carries every other input column through, in build's column order") {
+    // open/volume/adjClose/source ride through the kernel untouched: no
+    // join back on (ticker, date), and the schema is build's exactly
+    FeatureParity.check(FeatureBuilder.build(bars, dropNa = false),
+      FeatureBuilder.buildFast(bars, dropNa = false),
+      carried = Set("open", "volume", "adjClose", "source"))
   }
 
   test("buildFast parity on constant closes: std exactly 0, skew exactly NULL") {

@@ -3,11 +3,22 @@ package graft.pipeline
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{CommandResultExec, ExternalRDDScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{GraftSession, TestSpark}
+import graft.etl.{Preprocessor, Splitter}
 import graft.exec.StrategyOptimizer
+import graft.features.{FeatureBuilder, FeatureParity}
 import graft.sources.{CacheManager, SyntheticSource}
 
 class PipelineSpec extends AnyFunSuite with TestSpark {
@@ -55,6 +66,159 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     assert(EtlPipeline.retention(spark, out, maxAgeDays = 3).isEmpty)
     assert(spark.read.parquet(s"$out/_run_catalog")
       .where(col("run_id") === res2.runId).count() === 1)
+  }
+
+  test("a ticker with no validation rows gets no psi entry instead of failing the run") {
+    val out = Files.createTempDirectory("graft_etl_delisted").toString
+    // DLST stops trading after 120 bars: its dates all fall inside the
+    // training window, so its train-vs-validation PSI has no other side
+    val bars = SyntheticSource.generate(spark, Seq("AAPL"), 300, seed = 3).toDF()
+      .unionByName(SyntheticSource.generate(spark, Seq("DLST"), 120, seed = 4).toDF())
+    val res = EtlPipeline.run(spark, bars, EtlPipeline.Config(outDir = out))
+    assert(res.psi.keySet === Set("AAPL"))
+    assert(!res.psi("AAPL").isNaN)
+    assert(res.rowsPerSplit.values.sum === 420L)
+  }
+
+  // ---- feature route: kernel on contract-clean input, plain otherwise ----
+
+  private lazy val cleanBars =
+    SyntheticSource.generate(spark, Seq("AAPL", "MSFT"), 250, seed = 3).toDF()
+
+  /** Runs the pipeline, keeping the executed plan of every query it ran. */
+  private def runCapturing(bars: DataFrame, out: String)
+      : (EtlPipeline.RunResult, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val res = EtlPipeline.run(spark, bars, EtlPipeline.Config(outDir = out))
+      GraftSession.drain(spark.sparkContext)
+      (res, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper {
+    private def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case n => Seq(n)
+    }.flatten
+
+    /** The executed plan of the feature stage: the processed-stage write. */
+    def featureStage(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+      val hits = plans.map(nodes).filter(_.exists {
+        case w: DataWritingCommandExec => w.cmd match {
+          case i: InsertIntoHadoopFsRelationCommand =>
+            i.outputPath.getName == "processed"
+          case _ => false
+        }
+        case _ => false
+      })
+      assert(hits.size === 1, "one processed-stage write")
+      hits.head
+    }
+
+    /** The Window operators partitioned by `ticker` alone. */
+    def tickerWindows(stage: Seq[SparkPlan]): Seq[WindowExec] = stage.collect {
+      case w: WindowExec if w.partitionSpec.map(_.sql) == Seq("ticker") => w
+    }
+  }
+
+  private def stageRows(dir: String) = spark.read.parquet(dir)
+    .select("ticker", "date").collect().map(_.toString).sorted.toSeq
+
+  test("clean input takes the kernel route: processed stage matches build under the parity check") {
+    val out = Files.createTempDirectory("graft_etl_kernel").toString
+    val (res, plans) = runCapturing(cleanBars, out)
+    assert(res.quality.nFeatureNulls === 0L)
+    val stage = Plans.featureStage(plans)
+    // the kernel's rows enter the plan as an RDD scan
+    assert(stage.exists(_.isInstanceOf[ExternalRDDScanExec[_]]), "kernel route taken")
+    // the reference: build over the same raw stage (its causal fill is
+    // the identity on null-free prices), stored the way the stage is
+    val ref = Files.createTempDirectory("graft_etl_ref").toString + "/features"
+    FeatureBuilder.build(spark.read.parquet(s"$out/raw"), dropNa = false)
+      .write.mode("overwrite").partitionBy("ticker").parquet(ref)
+    FeatureParity.check(spark.read.parquet(ref), spark.read.parquet(s"$out/processed"),
+      carried = Set("open", "volume", "adjClose", "source"))
+  }
+
+  test("kernel route: the feature stage's executed plan has no Window partitioned by ticker alone") {
+    val kernel = Files.createTempDirectory("graft_etl_plan_k").toString
+    assert(Plans.tickerWindows(Plans.featureStage(runCapturing(cleanBars, kernel)._2)).isEmpty)
+    // the detector does see the plain form's per-ticker windows
+    val plain = Files.createTempDirectory("graft_etl_plan_p").toString
+    val gappy = cleanBars.withColumn("close",
+      when(dayofmonth(col("date")) === 7, lit(null).cast("double")).otherwise(col("close")))
+    assert(Plans.tickerWindows(Plans.featureStage(runCapturing(gappy, plain)._2)).nonEmpty)
+  }
+
+  test("interior null closes take the plain route: causal fill, then build") {
+    val out = Files.createTempDirectory("graft_etl_gappy").toString
+    val gappy = cleanBars.withColumn("close",
+      when(dayofmonth(col("date")) === 7, lit(null).cast("double")).otherwise(col("close")))
+    val (res, plans) = runCapturing(gappy, out)
+    assert(res.quality.status === "WARN" && res.quality.nFeatureNulls === 16L)
+    assert(!Plans.featureStage(plans).exists(_.isInstanceOf[ExternalRDDScanExec[_]]), "plain route taken")
+    val ref = Files.createTempDirectory("graft_etl_ref").toString + "/features"
+    FeatureBuilder.build(Preprocessor.handleMissing(spark.read.parquet(s"$out/raw"),
+        Seq("open", "high", "low", "close")), dropNa = false)
+      .write.mode("overwrite").partitionBy("ticker").parquet(ref)
+    val cols = spark.read.parquet(ref).columns
+    def rows(dir: String) = spark.read.parquet(dir).select(cols.map(col): _*)
+      .orderBy("ticker", "date").collect().toSeq
+    assert(spark.read.parquet(s"$out/processed").columns.toSeq === cols.toSeq)
+    assert(rows(s"$out/processed") === rows(ref))
+  }
+
+  test("an all-null-close ticker completes on the plain route") {
+    val out = Files.createTempDirectory("graft_etl_nullclose").toString
+    val bars = cleanBars.unionByName(
+      SyntheticSource.generate(spark, Seq("DARK"), 250, seed = 5).toDF()
+        .withColumn("close", lit(null).cast("double")))
+    val res = EtlPipeline.run(spark, bars, EtlPipeline.Config(outDir = out))
+    assert(res.quality.nFeatureNulls === 250L)
+    assert(res.rowsPerSplit.values.sum === 750L)
+    assert(Set("AAPL", "MSFT").subsetOf(res.psi.keySet))
+    assert(res.psi.values.forall(v => !v.isNaN))
+  }
+
+  test("a null-date row completes on the plain route and tags testing, as chronological does") {
+    val out = Files.createTempDirectory("graft_etl_nulldate").toString
+    val bars = cleanBars.withColumn("date",
+      when(col("ticker") === "MSFT" && col("date") === "2024-03-01",
+        lit(null).cast("timestamp")).otherwise(col("date")))
+    val res = EtlPipeline.run(spark, bars, EtlPipeline.Config(outDir = out))
+    assert(res.quality.nFeatureNulls === 1L)
+    assert(res.rowsPerSplit.values.sum === 500L)
+    // the stage dirs hold exactly chronological's tags over the
+    // processed stage, row for row
+    val tagged = Splitter.chronological(spark.read.parquet(s"$out/processed"))
+    Seq("training", "validation", "testing").foreach { sp =>
+      assert(stageRows(s"$out/$sp") ===
+        tagged.where(col("split") === sp).select("ticker", "date").collect()
+          .map(_.toString).sorted.toSeq, sp)
+    }
+    assert(spark.read.parquet(s"$out/testing").where(col("date").isNull).count() === 1L)
+  }
+
+  test("a run leaves no persisted kernel blocks: persistent RDDs and the cache manager are unchanged") {
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // start from an empty cache so its emptiness is evidence
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    (1 to 2).foreach { i =>
+      val out = Files.createTempDirectory(s"graft_etl_blocks_$i").toString
+      EtlPipeline.run(spark, cleanBars, EtlPipeline.Config(outDir = out))
+      assert(sc.getPersistentRDDs.keySet === before, s"run $i")
+      assert(cache.isEmpty, s"run $i")
+    }
   }
 
   test("versioned stages: each run is a snapshot version; prior runs stay readable") {
