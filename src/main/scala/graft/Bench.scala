@@ -317,6 +317,7 @@ object Bench {
           sigCfg = sigCfg, gateCfg = None, riskMode = mode)
         val batchFills = batchFillsDf.select(cols.map(col): _*)
           .collect().map(_.toString).sorted
+        batchFillsDf.unpersist()
         require(batchFills.nonEmpty, "lc_soak: zero batch fills — parity vacuous")
         val minBars = graft.etl.Splitter.distinctDates(bars).length - cycles + 1
         val src = bars.select($"ticker", $"date".as("ts"), $"close", $"high", $"low")

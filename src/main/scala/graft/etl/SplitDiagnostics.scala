@@ -40,7 +40,9 @@ object SplitDiagnostics {
     percentile_approx(col(valueCol), typedLit(probs), lit(10000)).as("cuts")
   }
 
-  /** [[psi]] over precomputed `cuts` (ticker, cuts — see [[binCuts]]). */
+  /** [[psi]] over precomputed `cuts` (ticker, cuts — see [[binCuts]]). A
+    * ticker with null cuts (no non-null training value) has no bins and
+    * gets no row. */
   def psiWithCuts(
       df: DataFrame,
       cuts: DataFrame,
@@ -50,7 +52,7 @@ object SplitDiagnostics {
       otherTag: String = "validation",
       eps: Double = 1e-6): DataFrame = {
     val bucketed = df.where(col(splitCol).isin(trainTag, otherTag))
-      .join(broadcast(cuts), "ticker")
+      .join(broadcast(cuts.where(col("cuts").isNotNull)), "ticker")
       .withColumn("bin", expr(
         s"size(filter(cuts, c -> c <= $valueCol))")) // 0..nBins-1
     val counts = bucketed.groupBy("ticker", "bin").agg(

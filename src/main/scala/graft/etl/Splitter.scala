@@ -23,25 +23,25 @@ import org.apache.spark.sql.functions._
   */
 object Splitter {
 
-  /** Distinct sorted dates of the frame — the split dimension. This is a
-    * driver collect by design: the date dimension of a bar table is tiny
-    * (decades of daily bars < 20k rows) regardless of how many tickers ×
-    * rows the fact side has. The bound is probed with a LIMIT count
-    * BEFORE collecting — a guard after the collect couldn't save the
-    * driver from the oversized collect it exists to prevent. Shared by
-    * [[chronological]]/[[cvFolds]] and pipeline.AutoTrader. */
+  /** Distinct sorted dates of the frame — the split dimension, the null
+    * date (if any) first. This is a driver collect by design: the date
+    * dimension of a bar table is tiny (decades of daily bars < 20k rows)
+    * regardless of how many tickers × rows the fact side has. ONE query
+    * collects at most one row past the bound and the driver sorts it, so
+    * an oversized dimension fails by name instead of flooding the driver.
+    * Shared by [[tagChronological]], [[cvFolds]] and pipeline.AutoTrader. */
   private[graft] def distinctDates(df: DataFrame,
       dateCol: String = "date"): Array[java.sql.Timestamp] = {
+    val maxDates = 1000000
     // cast("timestamp") tolerates a TIMESTAMP_NTZ date column (drifting
     // testdata parquet) — rows then always carry java.sql.Timestamp.
-    val distinctDs = df.select(col(dateCol).cast("timestamp").as("date")).distinct()
-    val probe = distinctDs.limit(1000001).count()
-    require(probe <= 1000000,
-      s"date dimension unexpectedly large (>$probe rows) — not a bar-frequency table")
-    distinctDs.orderBy(col("date")).collect().map(_.getTimestamp(0))
+    val dates = df.select(col(dateCol).cast("timestamp")).distinct()
+      .limit(maxDates + 1).collect().map(_.getTimestamp(0))
+    require(dates.length <= maxDates,
+      s"date dimension unexpectedly large (>${dates.length} rows) — not a bar-frequency table")
+    dates.sorted(Ordering.by[java.sql.Timestamp, Option[(Long, Int)]](t =>
+      Option(t).map(t => (t.getTime, t.getNanos))))
   }
-
-  private def dates(df: DataFrame): Array[java.sql.Timestamp] = distinctDates(df)
 
   /** Tag each row train/validation/testing by unique-date fractions.
     *
@@ -82,26 +82,18 @@ object Splitter {
 
   /** [[chronological]] with its two cut dates derived once, on the
     * driver, from ONE bounded collect of the distinct-date dimension
-    * (tiny; the collect stops one row past the bound, so an oversized
-    * dimension fails by name instead of flooding the driver). The tagged
-    * frame is then a plain projection of `df` — no join, no tag dim —
-    * so no later action over it re-derives anything. The ranks are
-    * chronological's row_number over the distinct dates (ascending, the
-    * null date first: it takes a rank yet tags no row) and the rounding
-    * is Spark's `round` (HALF_UP on the double's decimal form), so every
-    * row gets chronological's tag (spec: EtlCoreSpec); null dates tag
-    * "testing". */
+    * ([[distinctDates]]). The tagged frame is then a plain projection of
+    * `df` — no join, no tag dim — so no later action over it re-derives
+    * anything. The ranks are chronological's row_number over the
+    * distinct dates (ascending, the null date first: it takes a rank yet
+    * tags no row) and the rounding is Spark's `round` (HALF_UP on the
+    * double's decimal form), so every row gets chronological's tag (spec:
+    * EtlCoreSpec); null dates tag "testing". */
   def tagChronological(df: DataFrame, trainFrac: Double = 0.70,
       valFrac: Double = 0.15): DataFrame = {
-    val maxDates = 1000000
-    val dates = df.select(col("date").cast("timestamp")).distinct()
-      .limit(maxDates + 1).collect().map(r => Option(r.getTimestamp(0)))
-    require(dates.length <= maxDates,
-      s"date dimension unexpectedly large (>$maxDates rows) — not a bar-frequency table")
-    val n = dates.length.toLong
+    val sorted = distinctDates(df).map(Option(_))
+    val n = sorted.length.toLong
     require(n >= 3, s"need >=3 distinct dates, got $n")
-    val sorted = dates.sorted(Ordering.Option(
-      Ordering.by[java.sql.Timestamp, (Long, Int)](t => (t.getTime, t.getNanos))))
     def round(x: Double): Long = java.math.BigDecimal.valueOf(x)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValue
     val nTr = math.max(1L, round(n * trainFrac))
@@ -128,7 +120,7 @@ object Splitter {
       testFrac: Double = 0.15,
       expanding: Boolean = true,
       gap: Int = 0): Seq[FoldSpec] = {
-    val ds = dates(df)
+    val ds = distinctDates(df)
     val nTest = math.round(ds.length * testFrac).toInt
     val cv = ds.take(ds.length - nTest)
     val foldSize = cv.length / (k + 1)

@@ -61,8 +61,13 @@ object ForecastEngine {
     def attempt[T](f: => T): Option[T] =
       try Some(f) catch { case _: Exception => None } // failure isolation per model
 
-    def runModels(px: Array[Double], horizon: Int): Map[String, Array[Double]] = Seq(
-      "AR" -> attempt(Ar.fit(px, cfg.arMaxP, warm, cfg.arMaxQ, cfg.arExactMle)).map(f => Ar.forecast(px, f, horizon)._1),
+    def fitAr(px: Array[Double]) =
+      attempt(Ar.fit(px, cfg.arMaxP, warm, cfg.arMaxQ, cfg.arExactMle))
+
+    // `ar` is the AR arm's point forecast of `px` over `horizon`
+    def runModels(px: Array[Double], horizon: Int,
+        ar: Option[Array[Double]]): Map[String, Array[Double]] = Seq(
+      "AR" -> ar,
       "SSA" -> (if (px.length > cfg.ssaWindow * 2)
         attempt(Ssa.forecast(px, horizon, cfg.ssaWindow)) else None),
       "NAIVE_DRIFT" -> Some {
@@ -71,13 +76,13 @@ object ForecastEngine {
       }).collect { case (m, Some(f)) if f.forall(v => !v.isNaN && !v.isInfinite) => m -> f }
       .toMap
 
-    val arFit = attempt(Ar.fit(prices, cfg.arMaxP, warm, cfg.arMaxQ, cfg.arExactMle))
+    val arFit = fitAr(prices)
     val arFc = arFit.map(f => Ar.forecast(prices, f, cfg.horizon))
     val garchFit = attempt(Garch.fit(rets))
     val volFc = garchFit.map(g => Garch.forecastVol(rets, g, cfg.horizon))
       .getOrElse(Ewma.forecastVol(rets, cfg.horizon))
 
-    val forecasts = runModels(prices, cfg.horizon)
+    val forecasts = runModels(prices, cfg.horizon, arFc.map(_._1))
 
     // Confidence from a trailing out-of-sample backtest vs the random-walk
     // baseline (the reference's relative-RMSE score + OOS trailing gate,
@@ -100,7 +105,8 @@ object ForecastEngine {
             math.signum(pred(i) - prev(i)) == math.signum(actual(i) - prev(i))
           ).toDouble / pred.length
         val rw = rmse(Array.fill(evalH)(fitPart.last))
-        val oos = runModels(fitPart, evalH)
+        val oos = runModels(fitPart, evalH,
+          fitAr(fitPart).map(f => Ar.forecast(fitPart, f, evalH)._1))
         (oos.map { case (m, pred) =>
           m -> rw / (rmse(pred) + rw + 1e-12) // 0.5 = ties RW, >0.5 beats it
         }.withDefaultValue(0.25),

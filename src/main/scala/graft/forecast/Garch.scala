@@ -29,16 +29,31 @@ object Garch {
     returns.map(r => math.max(-cap, math.min(cap, r)))
   }
 
-  private[forecast] def negLogLik(r: Array[Double], omega: Double, alpha: Double, beta: Double): Double = {
+  /** The filter's unconditional init h₁ = Σr²/n, summed in array order. */
+  private def unconditional(r: Array[Double]): Double = r.map(x => x * x).sum / r.length
+
+  private val log2Pi = math.log(2 * math.Pi)
+
+  private[forecast] def negLogLik(r: Array[Double], omega: Double, alpha: Double,
+      beta: Double): Double =
+    negLogLik(r, omega, alpha, beta, unconditional(r))
+
+  /** Gaussian negative log-likelihood with the filter started at `h0`,
+    * which must be [[unconditional]]`(r)`: [[fit]] computes it once per
+    * arm instead of once per optimizer evaluation. The three likelihoods
+    * keep their per-element IEEE ops in the original order; only values
+    * that do not change along the loop are hoisted out of it. */
+  private[forecast] def negLogLik(r: Array[Double], omega: Double, alpha: Double,
+      beta: Double, h0: Double): Double = {
     if (omega <= 0 || alpha < 0 || beta < 0 || alpha + beta >= 0.9999) return 1e12
     val n = r.length
-    var h = r.map(x => x * x).sum / n // unconditional init
+    var h = h0
     var nll = 0.0
     var i = 0
     while (i < n) {
       if (i > 0) h = omega + alpha * r(i - 1) * r(i - 1) + beta * h
       if (h <= 0) return 1e12
-      nll += 0.5 * (math.log(2 * math.Pi) + math.log(h) + r(i) * r(i) / h)
+      nll += 0.5 * (log2Pi + math.log(h) + r(i) * r(i) / h)
       i += 1
     }
     nll
@@ -48,20 +63,26 @@ object Garch {
     * innovation is t_ν scaled so Var = h_t, i.e. density uses h(ν−2)/ν.
     * Same variance recursion as the Gaussian filter. */
   private[forecast] def negLogLikT(r: Array[Double], omega: Double, alpha: Double,
-      beta: Double, nu: Double): Double = {
+      beta: Double, nu: Double): Double =
+    negLogLikT(r, omega, alpha, beta, nu, unconditional(r))
+
+  private[forecast] def negLogLikT(r: Array[Double], omega: Double, alpha: Double,
+      beta: Double, nu: Double, h0: Double): Double = {
     if (omega <= 0 || alpha < 0 || beta < 0 || alpha + beta >= 0.9999 ||
       nu <= 2.05 || nu > 200) return 1e12
     val n = r.length
     val cst = lnGamma((nu + 1) / 2) - lnGamma(nu / 2) -
       0.5 * math.log(math.Pi * (nu - 2))
-    var h = r.map(x => x * x).sum / n
+    val halfNu1 = (nu + 1) / 2
+    val nuM2 = nu - 2
+    var h = h0
     var nll = 0.0
     var i = 0
     while (i < n) {
       if (i > 0) h = omega + alpha * r(i - 1) * r(i - 1) + beta * h
       if (h <= 0) return 1e12
       nll -= cst - 0.5 * math.log(h) -
-        ((nu + 1) / 2) * math.log1p(r(i) * r(i) / (h * (nu - 2)))
+        halfNu1 * math.log1p(r(i) * r(i) / (h * nuM2))
       i += 1
     }
     nll
@@ -75,7 +96,11 @@ object Garch {
     * b² = 1+3λ²−a². λ=0 reduces exactly to the standardized t. Same
     * variance recursion as the Gaussian/t filters; r_t = √h_t · z_t. */
   private[forecast] def negLogLikSkewT(r: Array[Double], omega: Double, alpha: Double,
-      beta: Double, nu: Double, lambda: Double): Double = {
+      beta: Double, nu: Double, lambda: Double): Double =
+    negLogLikSkewT(r, omega, alpha, beta, nu, lambda, unconditional(r))
+
+  private[forecast] def negLogLikSkewT(r: Array[Double], omega: Double, alpha: Double,
+      beta: Double, nu: Double, lambda: Double, h0: Double): Double = {
     if (omega <= 0 || alpha < 0 || beta < 0 || alpha + beta >= 0.9999 ||
       nu <= 2.05 || nu > 200 || lambda <= -0.99 || lambda >= 0.99) return 1e12
     val lnc = lnGamma((nu + 1) / 2) - lnGamma(nu / 2) -
@@ -86,18 +111,21 @@ object Garch {
     if (b2 <= 0) return 1e12
     val b = math.sqrt(b2)
     val lnb = 0.5 * math.log(b2)
+    val mode = -a / b
+    val left = 1 - lambda
+    val right = 1 + lambda
+    val halfNu1 = (nu + 1) / 2
+    val nuM2 = nu - 2
     val n = r.length
-    var h = r.map(x => x * x).sum / n
+    var h = h0
     var nll = 0.0
     var i = 0
     while (i < n) {
       if (i > 0) h = omega + alpha * r(i - 1) * r(i - 1) + beta * h
       if (h <= 0) return 1e12
       val z = r(i) / math.sqrt(h)
-      val denom = if (z < -a / b) 1 - lambda else 1 + lambda
-      val t = (b * z + a) / denom
-      nll -= lnb + lnc -
-        ((nu + 1) / 2) * math.log1p(t * t / (nu - 2)) - 0.5 * math.log(h)
+      val t = (b * z + a) / (if (z < mode) left else right)
+      nll -= lnb + lnc - halfNu1 * math.log1p(t * t / nuM2) - 0.5 * math.log(h)
       i += 1
     }
     nll
@@ -131,13 +159,13 @@ object Garch {
   private[forecast] def ewmaNegLogLik(r: Array[Double], lambda: Double = 0.94): Double = {
     val n = r.length
     if (n == 0) return 1e12
-    var h = r.map(x => x * x).sum / n // unconditional init, as in negLogLik
+    var h = unconditional(r) // as in negLogLik
     var nll = 0.0
     var i = 0
     while (i < n) {
       if (i > 0) h = (1 - lambda) * r(i - 1) * r(i - 1) + lambda * h
       if (h <= 0) return 1e12
-      nll += 0.5 * (math.log(2 * math.Pi) + math.log(h) + r(i) * r(i) / h)
+      nll += 0.5 * (log2Pi + math.log(h) + r(i) * r(i) / h)
       i += 1
     }
     nll
@@ -182,10 +210,10 @@ object Garch {
       (meanName, c, phi, e, kMean) <- meanModels
       dist <- dists
       fit <- {
-        val v = e.map(x => x * x).sum / e.length
+        val v = unconditional(e)
         dist match {
           case "normal" =>
-            val (p, nll, conv) = nelderMead(a => negLogLik(e, a(0), a(1), a(2)),
+            val (p, nll, conv) = nelderMead(a => negLogLik(e, a(0), a(1), a(2), v),
               Array(0.05 * v, 0.08, 0.90))
             val ll = -nll
             if (!ll.isFinite) None
@@ -194,7 +222,7 @@ object Garch {
               mean = meanName, meanC = c, meanPhi = phi))
           case "t" =>
             val (p, nll, conv) = nelderMead(
-              a => negLogLikT(e, a(0), a(1), a(2), a(3)),
+              a => negLogLikT(e, a(0), a(1), a(2), a(3), v),
               Array(0.05 * v, 0.08, 0.90, 8.0))
             val ll = -nll
             if (!ll.isFinite) None
@@ -211,7 +239,7 @@ object Garch {
             // ν while chasing λ, and reopening it at the optimum
             // recovers the tail axis.
             val obj = (a: Array[Double]) =>
-              negLogLikSkewT(e, a(0), a(1), a(2), a(3), a(4))
+              negLogLikSkewT(e, a(0), a(1), a(2), a(3), a(4), v)
             val w0 = 0.05 * v
             val open = Array(0.25 * w0, 0.02, 0.1, 2.0, 0.05)
             val first = nelderMead(obj, Array(w0, 0.08, 0.90, 8.0, 0.0),
@@ -241,7 +269,7 @@ object Garch {
       beta: Double): Array[Double] = {
     if (r.isEmpty) return Array.empty
     val out = new Array[Double](r.length)
-    out(0) = r.map(x => x * x).sum / r.length
+    out(0) = unconditional(r)
     var i = 1
     while (i < r.length) {
       out(i) = omega + alpha * r(i - 1) * r(i - 1) + beta * out(i - 1)

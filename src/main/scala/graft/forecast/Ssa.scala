@@ -54,24 +54,31 @@ object Ssa {
     DenseMatrix.tabulate(window, k)((i, j) => x(i + j))
   }
 
-  /** Rank-r SSA reconstruction, r chosen to reach `varianceTarget` of
-    * the squared singular-value mass. */
-  def decompose(x: Array[Double], window: Int, varianceTarget: Double = 0.90): Decomposition = {
-    require(window >= 2 && window < x.length, s"bad SSA window $window for n=${x.length}")
-    val h = hankel(x, window)
+  /** H's Gram spectrum: σ² (clamped at 0, descending), U, their total,
+    * and the smallest count of leading σ² that reaches `varianceTarget`
+    * of the total (before either caller's clamp). */
+  private final case class Spectrum(ev: Array[Double], u: DenseMatrix[Double],
+      total: Double, targetRank: Int)
+
+  private def spectrum(h: DenseMatrix[Double], varianceTarget: Double): Spectrum = {
     val (evv, uu) = gramEig(h)
     val ev = evv.toArray.map(v => math.max(v, 0.0)) // σ², already sorted
     val total = math.max(ev.sum, 1e-300)
-    val rank = {
-      var acc = 0.0; var r = 0
-      while (r < ev.length && acc / total < varianceTarget) { acc += ev(r); r += 1 }
-      math.max(1, r)
-    }
+    var acc = 0.0; var r = 0
+    while (r < ev.length && acc / total < varianceTarget) { acc += ev(r); r += 1 }
+    Spectrum(ev, uu, total, r)
+  }
+
+  private def requireWindow(n: Int, window: Int): Unit =
+    require(window >= 2 && window < n, s"bad SSA window $window for n=$n")
+
+  /** The series of length `n` behind the rank-r projection U_r·U_rᵀ·H of
+    * its trajectory matrix, by diagonal averaging. */
+  private def reconstruct(h: DenseMatrix[Double], u: DenseMatrix[Double], rank: Int,
+      n: Int): Array[Double] = {
     // low-rank trajectory matrix via the left-projector (no V needed)
-    val u = uu(::, 0 until rank)
-    val approx = mm(u, mm(u.t, h))
-    // diagonal averaging back to a series
-    val n = x.length
+    val ur = u(::, 0 until rank)
+    val approx = mm(ur, mm(ur.t, h))
     val recon = new Array[Double](n)
     val counts = new Array[Int](n)
     (0 until approx.rows).foreach { i =>
@@ -81,22 +88,32 @@ object Ssa {
       }
     }
     (0 until n).foreach(i => recon(i) /= counts(i))
-    Decomposition(window, rank, recon,
-      ev.take(rank).sum / math.max(total, 1e-300))
+    recon
+  }
+
+  /** Rank-r SSA reconstruction, r chosen to reach `varianceTarget` of
+    * the squared singular-value mass. */
+  def decompose(x: Array[Double], window: Int, varianceTarget: Double = 0.90): Decomposition = {
+    requireWindow(x.length, window)
+    val h = hankel(x, window)
+    val sp = spectrum(h, varianceTarget)
+    val rank = math.max(1, sp.targetRank)
+    Decomposition(window, rank, reconstruct(h, sp.u, rank, x.length),
+      sp.ev.take(rank).sum / math.max(sp.total, 1e-300))
   }
 
   /** Recurrent SSA forecast: the last window row is projected through
     * the linear recurrence implied by the leading eigenvectors
-    * (standard SSA R-forecasting). */
+    * (standard SSA R-forecasting). The history it extends is
+    * [[decompose]]'s reconstruction (its rank rule, without the
+    * recurrence's window−1 cap), built from the same spectrum. */
   def forecast(x: Array[Double], horizon: Int, window: Int, varianceTarget: Double = 0.90)
       : Array[Double] = {
+    requireWindow(x.length, window)
     val h = hankel(x, window)
-    val (evv, uu) = gramEig(h)
-    val ev = evv.toArray.map(v => math.max(v, 0.0)) // σ², already sorted
-    val total = math.max(ev.sum, 1e-300)
-    var acc = 0.0; var rank = 0
-    while (rank < ev.length && acc / total < varianceTarget) { acc += ev(rank); rank += 1 }
-    rank = math.max(1, math.min(rank, window - 1))
+    val sp = spectrum(h, varianceTarget)
+    val uu = sp.u
+    val rank = math.max(1, math.min(sp.targetRank, window - 1))
     // recurrence coefficients from leading left singular vectors
     val pi = DenseVector((0 until rank).map(c => uu(window - 1, c)).toArray)
     val nu2 = { var s = 0.0; var c = 0; while (c < rank) { s += pi(c) * pi(c); c += 1 }; s }
@@ -106,7 +123,7 @@ object Ssa {
     }
     val uHead = uu(0 until window - 1, 0 until rank)
     val rCoef = mm(uHead, pi.toDenseMatrix.t)(::, 0) * (1.0 / (1.0 - nu2)) // length window-1, oldest→newest
-    val recon = decompose(x, window, varianceTarget).reconstruction
+    val recon = reconstruct(h, uu, math.max(1, sp.targetRank), x.length)
     val hist = scala.collection.mutable.ArrayBuffer(recon.toSeq: _*)
     (1 to horizon).map { _ =>
       val next = (0 until window - 1).map { j =>

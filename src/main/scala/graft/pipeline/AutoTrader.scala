@@ -51,19 +51,26 @@ object AutoTrader {
   }
 
   /** Run `cycles` cycles over the bar table: cycle c sees bars up to
-    * (maxDate - cycles + c) and trades on the signal at that bar. */
+    * (maxDate - cycles + c) and trades on the signal at that bar. Leaves
+    * nothing cached. */
   def run(spark: SparkSession, bars: DataFrame, cycles: Int,
       fcCfg: ForecastEngine.Config = ForecastEngine.Config(horizon = 5, mcPaths = 100),
       sigCfg: SignalGenerator.Config = SignalGenerator.Config(),
       engineCfg: PortfolioEngine.Config = PortfolioEngine.Config(),
       gateCfg: Option[QuantGate.Config] = Some(QuantGate.Config()),
-      riskMode: Option[RiskPolicy] = None): Seq[CycleResult] =
-    runDetailed(spark, bars, cycles, fcCfg, sigCfg, engineCfg, gateCfg,
-      riskMode)._1
+      riskMode: Option[RiskPolicy] = None): Seq[CycleResult] = {
+    val (results, fills) = runDetailed(spark, bars, cycles, fcCfg, sigCfg, engineCfg,
+      gateCfg, riskMode)
+    fills.unpersist()
+    results
+  }
 
   /** [[run]] plus the fill table itself — the streaming cycle
     * ([[graft.streaming.LiveCycle]]) specs fill-for-fill parity against
-    * these rows, not just the per-cycle aggregates. */
+    * these rows, not just the per-cycle aggregates. The returned fills
+    * frame is cached (and materialized), so reading it runs no forecast
+    * again; the caller owns that cache entry and may `unpersist` it. The
+    * intermediate signal cache is released before this returns. */
   def runDetailed(spark: SparkSession, bars: DataFrame, cycles: Int,
       fcCfg: ForecastEngine.Config = ForecastEngine.Config(horizon = 5, mcPaths = 100),
       sigCfg: SignalGenerator.Config = SignalGenerator.Config(),
@@ -73,8 +80,7 @@ object AutoTrader {
     import spark.implicits._
     // driver collect of the DATE DIMENSION only (distinct daily dates —
     // thousands of entries for decades of history, independent of the
-    // ticker × row fact volume); bound probed before collecting inside
-    // the shared helper
+    // ticker × row fact volume); bounded inside the shared helper
     val dates = graft.etl.Splitter.distinctDates(bars)
     require(dates.length > cycles + 60, "not enough history for the lookback window")
 
@@ -135,10 +141,17 @@ object AutoTrader {
       .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Int]).getOrElse(-1) ->
         (r.getLong(1), r.getDouble(2))).toMap
 
+    // the per-cycle action census in ONE aggregate: at most
+    // cycles × |actions| rows reach the driver
+    val census = signals.groupBy(col("cycle"), col("action")).count().collect()
+      .groupBy(_.getInt(0))
+      .map { case (c, rows) => c -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap }
+    // fills is materialized (fillsByCycle read it) and the census is
+    // collected: nothing reads the signal cache any more
+    signals.unpersist()
+
     val resultsSeq = (0 until cycles).map { c =>
-      val cycleSignals = signals.where(col("cycle") === c)
-      val acts = cycleSignals.groupBy(col("action")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val acts = census.getOrElse(c, Map.empty[String, Long])
       val (nf, pnl) = fillsByCycle.getOrElse(c, (0L, 0.0))
       CycleResult(c, acts.values.sum, acts.getOrElse("BUY", 0L),
         acts.getOrElse("SELL", 0L), nf, pnl)

@@ -224,4 +224,12 @@ class EtlCoreSpec extends AnyFunSuite with TestSpark {
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     psiDrift.foreach { case (t, v) => assert(v > psi(t)) }
   }
+
+  test("PSI gives a ticker whose closes are all null no entry") {
+    val tagged = Splitter.chronological(bars.withColumn("close",
+      when(col("ticker") === "GOOG", lit(null).cast("double")).otherwise(col("close"))))
+    val psi = SplitDiagnostics.psi(tagged, "close").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(psi.keySet === Set("AAPL", "MSFT"))
+  }
 }

@@ -183,7 +183,8 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     val res = EtlPipeline.run(spark, bars, EtlPipeline.Config(outDir = out))
     assert(res.quality.nFeatureNulls === 250L)
     assert(res.rowsPerSplit.values.sum === 750L)
-    assert(Set("AAPL", "MSFT").subsetOf(res.psi.keySet))
+    // its train cuts are null, so it has no bins to compare: no psi entry
+    assert(res.psi.keySet === Set("AAPL", "MSFT"))
     assert(res.psi.values.forall(v => !v.isNaN))
   }
 
