@@ -86,19 +86,20 @@ object MssaRl {
     State(volB, resB, breaks.exists(_ >= residuals.length - breakLookback))
   }
 
-  /** Policy-dispatched forecast. */
+  /** Policy-dispatched forecast. The state's residuals and the SSA
+    * forecast come from one decomposition of `prices`. */
   def forecast(prices: Array[Double], horizon: Int, ssaWindow: Int = 30,
       policy: Map[State, Action] = defaultPolicy): (Array[Double], Action) = {
-    val dec = Ssa.decompose(prices, math.min(ssaWindow, prices.length / 2))
+    val (dec, ssaForecast) =
+      Ssa.decomposeWithForecast(prices, math.min(ssaWindow, prices.length / 2))
     val resid = prices.zip(dec.reconstruction).map { case (a, b) => a - b }
     val state = currentState(prices, resid)
     val action = policy.getOrElse(state, FallbackNaive)
     val naive = Array.fill(horizon)(prices.last)
     val fc = action match {
-      case TrustSsa => Ssa.forecast(prices, horizon, math.min(ssaWindow, prices.length / 2))
+      case TrustSsa => ssaForecast(horizon)
       case BlendDrift =>
-        val ssa = Ssa.forecast(prices, horizon, math.min(ssaWindow, prices.length / 2))
-        ssa.zip(naive).map { case (s, n) => 0.5 * s + 0.5 * n }
+        ssaForecast(horizon).zip(naive).map { case (s, n) => 0.5 * s + 0.5 * n }
       case FallbackNaive => naive
     }
     (fc, action)

@@ -93,14 +93,8 @@ object Ssa {
 
   /** Rank-r SSA reconstruction, r chosen to reach `varianceTarget` of
     * the squared singular-value mass. */
-  def decompose(x: Array[Double], window: Int, varianceTarget: Double = 0.90): Decomposition = {
-    requireWindow(x.length, window)
-    val h = hankel(x, window)
-    val sp = spectrum(h, varianceTarget)
-    val rank = math.max(1, sp.targetRank)
-    Decomposition(window, rank, reconstruct(h, sp.u, rank, x.length),
-      sp.ev.take(rank).sum / math.max(sp.total, 1e-300))
-  }
+  def decompose(x: Array[Double], window: Int, varianceTarget: Double = 0.90): Decomposition =
+    decomposeWithForecast(x, window, varianceTarget)._1
 
   /** Recurrent SSA forecast: the last window row is projected through
     * the linear recurrence implied by the leading eigenvectors
@@ -108,10 +102,26 @@ object Ssa {
     * [[decompose]]'s reconstruction (its rank rule, without the
     * recurrence's window−1 cap), built from the same spectrum. */
   def forecast(x: Array[Double], horizon: Int, window: Int, varianceTarget: Double = 0.90)
-      : Array[Double] = {
+      : Array[Double] =
+    decomposeWithForecast(x, window, varianceTarget)._2(horizon)
+
+  /** [[decompose]] and [[forecast]] of one series and window from ONE
+    * Hankel matrix and spectrum: the decomposition, and the forecast for
+    * a horizon, built on demand over the decomposition's reconstruction. */
+  def decomposeWithForecast(x: Array[Double], window: Int, varianceTarget: Double = 0.90)
+      : (Decomposition, Int => Array[Double]) = {
     requireWindow(x.length, window)
     val h = hankel(x, window)
     val sp = spectrum(h, varianceTarget)
+    val rank = math.max(1, sp.targetRank)
+    val dec = Decomposition(window, rank, reconstruct(h, sp.u, rank, x.length),
+      sp.ev.take(rank).sum / math.max(sp.total, 1e-300))
+    (dec, horizon => recurrent(sp, window, horizon, x.last, dec.reconstruction))
+  }
+
+  /** The R-forecast recurrence over `recon`, the history it extends. */
+  private def recurrent(sp: Spectrum, window: Int, horizon: Int, last: Double,
+      recon: Array[Double]): Array[Double] = {
     val uu = sp.u
     val rank = math.max(1, math.min(sp.targetRank, window - 1))
     // recurrence coefficients from leading left singular vectors
@@ -119,11 +129,10 @@ object Ssa {
     val nu2 = { var s = 0.0; var c = 0; while (c < rank) { s += pi(c) * pi(c); c += 1 }; s }
     if (nu2 >= 1.0 - 1e-9) {
       // degenerate (verticality ~1): fall back to last-value forecast
-      return Array.fill(horizon)(x.last)
+      return Array.fill(horizon)(last)
     }
     val uHead = uu(0 until window - 1, 0 until rank)
     val rCoef = mm(uHead, pi.toDenseMatrix.t)(::, 0) * (1.0 / (1.0 - nu2)) // length window-1, oldest→newest
-    val recon = reconstruct(h, uu, math.max(1, sp.targetRank), x.length)
     val hist = scala.collection.mutable.ArrayBuffer(recon.toSeq: _*)
     (1 to horizon).map { _ =>
       val next = (0 until window - 1).map { j =>

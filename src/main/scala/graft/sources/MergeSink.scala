@@ -10,23 +10,30 @@ import org.apache.spark.sql.functions._
   * database_manager.py:1603-1687), shaped like Delta's `MERGE WHEN
   * MATCHED UPDATE / WHEN NOT MATCHED INSERT`.
   *
-  * Scale design: only partitions TOUCHED by the update batch are read,
-  * merged (update-wins anti-join), rewritten to a staging dir, and
-  * swapped in via filesystem rename — a 100 TB table with a daily delta
-  * rewrites only the delta's partitions, never the table.
+  * Scale design: the batch is staged first, and only live partitions it
+  * COLLIDES with are read, merged (update-wins anti-join), rewritten to
+  * a staging dir, and swapped in via filesystem rename — a 100 TB table
+  * with a daily delta rewrites only the delta's partitions, never the
+  * table, and a delta that lands in new partitions (every live fill
+  * date) reads no live data at all.
   *
   * Atomicity contract (plain parquet, no log): readers never see a
-  * HALF-WRITTEN partition (data is staged under a dot-dir that parquet
-  * readers ignore, and enters the live tree only by rename). The swap
-  * itself is two renames per partition — live aside to `.trash_<tx>`,
-  * then staged in — so no committed data is ever deleted before its
-  * replacement is live; a crash anywhere leaves both copies on disk.
-  * A reader racing the two renames can still observe the partition
-  * MISSING for that instant (rename-window, not data-loss), and a crash
-  * between partitions leaves a torn multi-partition upsert: both are
-  * detectable (`lastCommit` manifest is written only after all swaps)
-  * and repairable by `recover()`, which rolls forward any staging dir
-  * that finished writing (`_SUCCESS` present) and discards the rest.
+  * HALF-WRITTEN partition (data is staged under dot-dirs that parquet
+  * readers ignore, and enters the live tree only by rename). The batch
+  * lands first in `.incoming_<tx>`; that dir is never a merged
+  * replacement, so it is renamed to `.staging_<tx>` only when no live
+  * partition collides, and otherwise feeds a merge written to
+  * `.staging_<tx>` and is deleted. The swap is two renames per
+  * partition — live aside to `.trash_<tx>`, then staged in — so no
+  * committed data is ever deleted before its replacement is live; a
+  * crash anywhere leaves both copies on disk. A reader racing the two
+  * renames can still observe the partition MISSING for that instant
+  * (rename-window, not data-loss), and a crash between partitions
+  * leaves a torn multi-partition upsert: both are detectable
+  * (`lastCommit` manifest is written only after all swaps) and
+  * repairable by `recover()`, which rolls forward any staging dir that
+  * finished writing (`_SUCCESS` present) and discards the rest,
+  * `.incoming_` dirs included.
   */
 final class MergeSink(spark: SparkSession, path: String,
     keyCols: Seq[String], partitionCol: String) {
@@ -41,10 +48,25 @@ final class MergeSink(spark: SparkSession, path: String,
 
   def read(): DataFrame = spark.read.parquet(path)
 
+  /** The `<partitionCol>=<fragment>` dirs directly under `dir`. Every
+    * bookkeeping step (collision probe, swap, marker) works on these
+    * LISTED names, never on names rebuilt from raw values: Spark
+    * percent-escapes special characters (and maps null to the Hive
+    * default token) in partition dir names, and String.valueOf is not
+    * its SQL cast (java.sql.Timestamp appends ".0"), so a rebuilt name
+    * misses such a dir. */
+  private def partDirs(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq
+    .filter(_.isDirectory).map(_.getPath).filter(_.getName.startsWith(s"$partitionCol="))
+
   /** Upsert `updates`; rows matching an existing key replace it, others
     * insert. Duplicate keys WITHIN the batch keep the row with the
     * highest `versionCol` (ties broken arbitrarily but deterministically
     * by a final row_number), mirroring last-write-wins.
+    *
+    * The batch executes ONCE, in the `.incoming_` write (under
+    * foreachBatch that write is also the job that runs the stream's
+    * stateful operator), with its row count observed on the way; an
+    * upsert into new partitions is that one job plus renames.
     *
     * `assumeUniqueKeys`: the caller asserts `updates` already holds at
     * most one row per key, skipping the dedupe window (a shuffle + sort
@@ -55,153 +77,117 @@ final class MergeSink(spark: SparkSession, path: String,
     * uniqueness (a spec-checked invariant, not a convenience flag). */
   def upsert(updates: DataFrame, versionCol: Option[String] = None,
       assumeUniqueKeys: Boolean = false): MergeStats = {
-    val batch = MergeStaging
-      .dedupe(updates, keyCols, versionCol, assumeUniqueKeys).cache()
-
-    // ONE census job replaces the old empty-guard count + touched-
-    // partitions collect + two stats counts: per-partition counts
-    // answer all of them, so a streaming caller folding many
-    // micro-batches pays one scheduled job per batch instead of three
-    // before the write even starts.
-    val census = MergeStaging.census(batch, partitionCol)
-    if (census.isEmpty) {
+    val batch = MergeStaging.dedupe(updates, keyCols, versionCol, assumeUniqueKeys)
+    val root = new Path(path)
+    val created = !exists
+    val txid = java.util.UUID.randomUUID().toString.take(8)
+    val incoming = new Path(root, s".incoming_$txid")
+    val staging = new Path(root, s".staging_$txid")
+    // ONE file per touched partition: an unrepartitioned partitionBy
+    // write fans out to (upstream tasks × partition values) fragments,
+    // inflating every later read's file-open tax (the VersionedTable
+    // lesson). The observation must live on the batch's session (see
+    // MergeStaging's session-discipline note).
+    val obs = org.apache.spark.sql.Observation()
+    batch.observe(obs, count(lit(1)).as("n")).repartition(col(partitionCol))
+      .write.partitionBy(partitionCol).parquet(incoming.toString)
+    val batchTotal = obs.get("n").asInstanceOf[Long]
+    val parts = partDirs(incoming)
+    if (parts.isEmpty) {
       // an empty batch must NOT create (or version) the table: a
       // zero-row partitionBy write leaves a directory with no parquet
       // footer, and every later upsert/read dies on schema inference (a
       // streaming query whose first micro-batch produces no rows —
       // e.g. warmup bars — hits exactly this)
-      batch.unpersist()
+      fs.delete(if (created) root else incoming, true)
       return MergeStats(inserted = 0, updated = 0, partitions = 0)
     }
-    val touched = census.touched
-    val batchTotal = census.total
+    val colliding = parts.map(p => new Path(root, p.getName)).filter(fs.exists)
+    val (inserted, updated) =
+      if (colliding.isEmpty) {
+        if (!fs.rename(incoming, staging))
+          throw new java.io.IOException(
+            s"upsert: failed to move incoming $incoming to $staging")
+        (batchTotal, 0L)
+      } else {
+        // read with the batch's schema (no inference job) and only the
+        // colliding live dirs (no full-table listing); basePath keeps
+        // the partition column. ins/upd stats ride the staged write as
+        // Observation metrics (MergeStaging.observedMerge, which also
+        // enforces that both sides are read via the batch's session).
+        def reader = updates.sparkSession.read.schema(batch.schema)
+        val staged = reader.parquet(incoming.toString)
+        val existing = reader.option("basePath", path)
+          .parquet(colliding.map(_.toString): _*)
+        val (merged, statsOf) =
+          MergeStaging.observedMerge(staged, existing, keyCols, batchTotal)
+        merged.repartition(col(partitionCol))
+          .write.partitionBy(partitionCol).parquet(staging.toString)
+        fs.delete(incoming, true)
+        statsOf()
+      }
+    val swapped = swapIn(staging, txid, "upsert")
+    writeCommitMarker(swapped, inserted, updated, txid)
+    fs.delete(staging, true)
+    fs.delete(new Path(root, s".trash_$txid"), true)
+    MergeStats(inserted, updated, swapped.length.toLong)
+  }
 
-    if (!exists) {
-      batch.write.partitionBy(partitionCol).parquet(path)
-      batch.unpersist()
-      // marker partitions in FRAGMENT form, taken by LISTING the dirs
-      // the write just produced — the exact namespace the swap path
-      // records. Deriving fragments from raw census values diverges:
-      // String.valueOf is not Spark's SQL cast (java.sql.Timestamp
-      // appends ".0"; dates/decimals have their own forms), and a
-      // value-derived fragment then never matches a dir-listed one,
-      // breaking the documented same-namespace contract with later
-      // commits' markers.
-      val parts = fs.listStatus(new Path(path)).filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith(s"$partitionCol="))
-        .map(_.stripPrefix(s"$partitionCol=")).toSeq
-      writeCommitMarker(parts, batchTotal, 0, java.util.UUID.randomUUID().toString.take(8))
-      return MergeStats(inserted = batchTotal, updated = 0,
-        partitions = parts.length.toLong)
-    }
-
-    // ins/upd stats ride the staged write as Observation metrics
-    // (MergeStaging.observedMerge — which also enforces that `existing`
-    // is read via the BATCH's session; see the session-discipline note
-    // there: the cross-session form hangs under foreachBatch).
-    // touchedFilter, not a bare isin: isin is three-valued-logic-NULL
-    // for null-partition rows, which silently drops every pre-existing
-    // row of the null partition from the merge (they miss the anti-join
-    // and the staged swap replaces their directory with batch-only data)
-    val existing = updates.sparkSession.read.parquet(path)
-      .where(MergeStaging.touchedFilter(partitionCol, touched))
-    val (merged, statsOf) =
-      MergeStaging.observedMerge(batch, existing, keyCols, batchTotal)
-
-    // stage the merged partitions, then swap each partition dir in:
-    // live is renamed ASIDE (never deleted) before staged replaces it,
-    // so a crash at any point leaves every row recoverable on disk.
-    // The staged delta coalesces to ONE file per touched partition —
-    // an unrepartitioned partitionBy write fans out to (upstream tasks
-    // × partition values) fragments, inflating every later read's
-    // file-open tax (the VersionedTable lesson); merge deltas are small
-    // by design, bulk loads go through the first-create branch.
-    val txid = java.util.UUID.randomUUID().toString.take(8)
-    val staging = s"$path/.staging_$txid"
-    merged.repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(staging)
-    batch.unpersist()
-    val (inserted, updated) = statsOf()
+  /** Swap each partition dir of the committed staging dir `st` in: live
+    * is renamed ASIDE to `.trash_<txid>` (never deleted) before staged
+    * replaces it, so a crash at any point leaves every row recoverable
+    * on disk. Both renames are CHECKED: a swallowed false would record
+    * the partition as swapped, publish the marker, then DELETE the
+    * staged dir — losing the batch's rows with a marker claiming
+    * success. Throwing instead leaves staging (with _SUCCESS) and trash
+    * on disk, which is exactly the crash shape recover() rolls forward.
+    * Returns the swapped fragments. */
+  private def swapIn(st: Path, txid: String, caller: String): Seq[String] = {
     val trash = new Path(s"$path/.trash_$txid")
     fs.mkdirs(trash)
-    // Swap by LISTING the staged partition dirs (the recover() idiom),
-    // not by rebuilding names from raw values: Spark percent-escapes
-    // special characters (and maps null to the Hive default token) in
-    // partition dir names, so an interpolated s"$partitionCol=$v" probe
-    // misses such a dir and would silently drop its merged rows.
-    // Both renames are CHECKED: a swallowed false here would record the
-    // partition as swapped, publish the marker, then DELETE the staged
-    // dir — losing the batch's rows with a marker claiming success.
-    // Throwing instead leaves staging (with _SUCCESS) and trash on disk,
-    // which is exactly the crash shape recover() rolls forward.
-    val swapped = fs.listStatus(new Path(staging)).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith(s"$partitionCol="))
-      .map { staged =>
-        val part = staged.getName
-        val live = new Path(s"$path/$part")
-        if (fs.exists(live) && !fs.rename(live, new Path(trash, part)))
-          throw new java.io.IOException(
-            s"upsert swap: failed to move live $live aside to $trash")
-        if (!fs.rename(staged, live))
-          throw new java.io.IOException(
-            s"upsert swap: failed to move staged $staged into place at $live")
-        part.stripPrefix(s"$partitionCol=")
-      }.toSeq
-    writeCommitMarker(swapped, inserted, updated, txid)
-    fs.delete(new Path(staging), true)
-    fs.delete(trash, true)
-    MergeStats(inserted, updated, swapped.length.toLong)
+    partDirs(st).map { staged =>
+      val part = staged.getName
+      val live = new Path(s"$path/$part")
+      if (fs.exists(live) && !fs.rename(live, new Path(trash, part)))
+        throw new java.io.IOException(
+          s"$caller swap: failed to move live $live aside to $trash")
+      if (!fs.rename(staged, live))
+        throw new java.io.IOException(
+          s"$caller swap: failed to move staged $staged into place at $live")
+      part.stripPrefix(s"$partitionCol=")
+    }
   }
 
   /** Repair after a crashed `upsert`: roll FORWARD every staging dir
     * whose parquet job committed (`_SUCCESS` present — its partitions
     * are complete merged replacements, so finishing the swap is always
     * safe), discard staging dirs that never finished writing (no swap
-    * was attempted for those: swaps start only after the write returns),
-    * and clear trash dirs last. Idempotent; returns swapped partitions.
+    * was attempted for those: swaps start only after the write returns)
+    * and every `.incoming_` dir (a staged batch, not a replacement), and
+    * clear trash dirs last. Idempotent; returns swapped partitions.
     */
   def recover(): Seq[String] = {
     val root = new Path(path)
     if (!fs.exists(root)) return Seq.empty
     val entries = fs.listStatus(root).map(_.getPath).toSeq
-    val swapped = scala.collection.mutable.ArrayBuffer[String]()
-    entries.filter(_.getName.startsWith(".staging_")).foreach { st =>
+    entries.filter(_.getName.startsWith(".incoming_")).foreach(fs.delete(_, true))
+    val swapped = entries.filter(_.getName.startsWith(".staging_")).flatMap { st =>
       val txid = st.getName.stripPrefix(".staging_")
-      val trash = new Path(s"$path/.trash_$txid")
-      // per-txid buffer: each txid's commit marker must list only the
-      // partitions swapped under THAT txid, and no marker is written for
-      // a txid whose staging dir held nothing to swap
-      val txSwapped = scala.collection.mutable.ArrayBuffer[String]()
-      if (fs.exists(new Path(st, "_SUCCESS"))) {
-        fs.mkdirs(trash)
-        fs.listStatus(st).filter(_.isDirectory)
-          .map(_.getPath).filter(_.getName.startsWith(s"$partitionCol="))
-          .foreach { staged =>
-            val part = staged.getName
-            val live = new Path(s"$path/$part")
-            // checked for the same reason as the upsert swap: a false
-            // here followed by the staging delete below would lose the
-            // rolled-forward partition; throwing leaves everything on
-            // disk for the next recover() attempt
-            if (fs.exists(live) && !fs.rename(live, new Path(trash, part)))
-              throw new java.io.IOException(
-                s"recover swap: failed to move live $live aside to $trash")
-            if (!fs.rename(staged, live))
-              throw new java.io.IOException(
-                s"recover swap: failed to move staged $staged into place")
-            txSwapped += part.stripPrefix(s"$partitionCol=")
-          }
-        if (txSwapped.nonEmpty)
-          writeCommitMarker(txSwapped.toSeq, -1, -1, txid, recovered = true)
-      }
-      swapped ++= txSwapped
+      // per-txid: each txid's commit marker lists only the partitions
+      // swapped under THAT txid, and no marker is written for a txid
+      // whose staging dir held nothing to swap
+      val txSwapped =
+        if (fs.exists(new Path(st, "_SUCCESS"))) swapIn(st, txid, "recover") else Nil
+      if (txSwapped.nonEmpty)
+        writeCommitMarker(txSwapped, -1, -1, txid, recovered = true)
       fs.delete(st, true)
-      if (fs.exists(trash)) fs.delete(trash, true)
+      fs.delete(new Path(s"$path/.trash_$txid"), true)
+      txSwapped
     }
     // trash dirs with no staging sibling: their swap completed; just clear
     entries.filter(_.getName.startsWith(".trash_"))
       .foreach(tr => if (fs.exists(tr)) fs.delete(tr, true))
-    swapped.toSeq
+    swapped
   }
 
   /** Cross-partition atomicity is per-directory only on plain parquet;
@@ -221,7 +207,11 @@ final class MergeSink(spark: SparkSession, path: String,
     out.write(payload.getBytes("UTF-8"))
     out.close()
     if (fs.exists(marker)) fs.delete(marker, false)
-    fs.rename(tmp, marker)
+    // checked: a false here would leave NO marker while the upsert
+    // reports success, hiding the commit from `lastCommit` readers
+    if (!fs.rename(tmp, marker))
+      throw new java.io.IOException(
+        s"commit marker: failed to move $tmp into place at $marker")
   }
 
   final case class Commit(ts: Long, partitions: Seq[String], inserted: Long, updated: Long,

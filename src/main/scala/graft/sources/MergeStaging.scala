@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The merge machinery shared by [[MergeSink]] (directory-swap table)
-  * and [[VersionedTable]] (file-log table): batch dedupe, the single
-  * partition-census job, and the observed update-wins merge whose
-  * ins/upd stats ride the staged write as Observation metrics.
+  * and [[VersionedTable]] (file-log table): batch dedupe, the observed
+  * update-wins merge whose ins/upd stats ride the staged write as
+  * Observation metrics, and VersionedTable's partition census.
   *
   * SESSION DISCIPLINE lives HERE, once: under foreachBatch the batch
   * DataFrame runs on the stream's cloned session, and an Observation
@@ -34,25 +34,11 @@ private[sources] object MergeStaging {
         .where(col("__rn") === 1).drop("__rn")
     }
 
-  final case class Census(touched: Seq[Any], total: Long) {
-    def isEmpty: Boolean = touched.isEmpty
-  }
-
-  /** ONE census job answering the empty-guard, the touched-partition
-    * list, and the batch row count (three separate driver jobs in the
-    * pre-census shape). */
-  def census(batch: DataFrame, partitionCol: String): Census = {
-    val rows = batch.groupBy(col(partitionCol)).agg(count(lit(1)).as("__n"))
-      .collect()
-    Census(rows.map(_.get(0)).toSeq, rows.map(_.getLong(1)).sum)
-  }
-
-  /** The same one-job census over SQL CAST-STRING values, for callers
-    * whose bookkeeping lives in fragment space ([[VersionedTable]]'s
-    * file log): (castString, rowCount) per touched partition. Kept here
-    * beside [[census]] so the two value namespaces (raw for
-    * `touchedFilter`, cast-string feeding [[partFragment]]) stay one
-    * decision, not two drifting copies. */
+  /** ONE census job over SQL CAST-STRING partition values, answering
+    * the empty-guard, the touched-partition list and the batch row count
+    * for [[VersionedTable]], whose bookkeeping lives in fragment space
+    * (its file log): (castString, rowCount) per touched partition, fed
+    * to [[partFragment]]. */
   def censusStrings(batch: DataFrame, partitionCol: String): Seq[(String, Long)] =
     batch.groupBy(col(partitionCol).cast("string").as("__p"))
       .agg(count(lit(1)).as("__n")).collect()
@@ -68,19 +54,6 @@ private[sources] object MergeStaging {
     if (castString == null) "__HIVE_DEFAULT_PARTITION__"
     else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .escapePathName(castString)
-
-  /** Null-safe touched-partition predicate over RAW census values:
-    * `isin(...)` alone is three-valued-logic-NULL for null-partition
-    * rows, which silently drops every pre-existing null-partition row
-    * from a merge (they fail the filter, miss the anti-join, and the
-    * staged swap then replaces their directory). */
-  def touchedFilter(partitionCol: String, touched: Seq[Any]): org.apache.spark.sql.Column = {
-    val nonNull = touched.filterNot(_ == null)
-    val base =
-      if (nonNull.nonEmpty) col(partitionCol).isin(nonNull: _*)
-      else lit(false)
-    if (touched.exists(_ == null)) base || col(partitionCol).isNull else base
-  }
 
   /** Update-wins merge plan + deferred stats: merged = batch ∪
     * (existing anti batch), with existing-total and anti-survivor

@@ -39,7 +39,9 @@ object LivePortfolio {
     * key — a checkpoint replay or restart re-emits the SAME rows and
     * the MERGE collapses them instead of double-counting fills.
     * Partitioned by fill date: a replay rewrites only the partitions it
-    * touches. */
+    * touches, and a new bar-date's fills land in a new partition, so a
+    * live micro-batch is ONE job — the sink's staged write, which also
+    * runs the stateful engine — plus renames. */
   def upsertFills(fills: Dataset[ExecRow], sink: graft.sources.MergeSink,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.DataFrame

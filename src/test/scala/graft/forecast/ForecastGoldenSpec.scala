@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * recorded from the kernels as they stood before the GARCH likelihoods
   * took the unconditional variance from `fit` and hoisted their
   * loop-invariant constants, before `forecastOneDetailed` reused its
-  * full-series AR fit, and before `Ssa.forecast` reused its own
-  * eigendecomposition for the reconstruction: those are pure
+  * full-series AR fit, before `Ssa.forecast` reused its own
+  * eigendecomposition for the reconstruction, and before `MssaRl.forecast`
+  * fed its state and its forecast from one decomposition: those are pure
   * refactorings, so not one output bit may move. */
 class ForecastGoldenSpec extends AnyFunSuite {
 
@@ -119,6 +120,20 @@ class ForecastGoldenSpec extends AnyFunSuite {
     243 -> "8ed4fe2ecc8187fdad716aed0d0bacb261d0671c31649b6dedde23b22978c355",
     400 -> "302779cb8df099abef057d8991357d4d59b6623621cbe997e54f48aa2a0f05b3")
 
+  /** Lengths whose series take each of the three policy actions. */
+  private val mssaLengths = Seq(60, 120, 150, 200, 243, 300, 400)
+
+  private def mssa(n: Int): (Array[Double], MssaRl.Action) = MssaRl.forecast(series(n), 10)
+
+  private val goldenMssa = Map(
+    60 -> "0dcd3757030cc421bb377374f121c8407287b5672b7f9b76968bf8844086f379",
+    120 -> "f436dfa17084e9e6972c8b4f1e0d17a1a1f7f29a96ef7f3682b6f2b10f803cd9",
+    150 -> "6347be966054b0ac062b977a21420b6cdd992edff6732277fff7106f7dccd23b",
+    200 -> "fd4f82c1509eb31b3eb738b6ba97bfd8690155d0e9f5da82f023c758980bded8",
+    243 -> "afaa8bcfc3f27194374eadf3f1ac65caaf94f07f5b76c018c4336ade4e69db02",
+    300 -> "a86c05ea9354f507a70663e215a7294cc9b632ee084e3b9afebfe22c52dbcf24",
+    400 -> "2ca5bf0440ce08d3f61ca4dfb8f22a20dc2c44bf44f92015cc1a4971178ac649")
+
   test("forecastOne rows are bit-identical to the recorded outputs") {
     val got = (for (n <- lengths; (name, cfg) <- configs)
       yield (n, name) -> forecastDigest(n, cfg)).toMap
@@ -133,5 +148,15 @@ class ForecastGoldenSpec extends AnyFunSuite {
   test("Ssa.decompose and Ssa.forecast are bit-identical to the recorded outputs") {
     val got = lengths.map(n => n -> ssaDigest(n)).toMap
     assert(got === goldenSsa)
+  }
+
+  test("MssaRl.forecast is bit-identical to the recorded outputs under all three actions") {
+    val runs = mssaLengths.map(n => n -> mssa(n))
+    assert(runs.map(_._2._2).toSet ===
+      Set(MssaRl.TrustSsa, MssaRl.BlendDrift, MssaRl.FallbackNaive))
+    val got = runs.map { case (n, (fc, action)) =>
+      n -> digest { out => out.writeUTF(action.toString); bits(out, fc.toSeq: _*) }
+    }.toMap
+    assert(got === goldenMssa)
   }
 }

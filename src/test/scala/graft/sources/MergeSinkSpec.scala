@@ -4,10 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{GraftSession, TestSpark}
 
 class MergeSinkSpec extends AnyFunSuite with TestSpark {
 
@@ -63,7 +66,7 @@ class MergeSinkSpec extends AnyFunSuite with TestSpark {
       .toDF("ticker", "seq", "price", "d")
     sink.upsert(init)
     // the physical dirs live in fragment space (escaped / Hive sentinel),
-    // and the first-create commit marker must use the SAME namespace
+    // and the first upsert's commit marker must use the SAME namespace
     assert(Files.exists(Paths.get(dir, "d=a%3Ab")))
     assert(Files.exists(Paths.get(dir, "d=__HIVE_DEFAULT_PARTITION__")))
     assert(sink.lastCommit.get.partitions.toSet ===
@@ -158,10 +161,10 @@ class MergeSinkSpec extends AnyFunSuite with TestSpark {
     val dir = Files.createTempDirectory("graft_merge_comma").toString + "/t"
     val sink = new MergeSink(spark, dir, keyCols = Seq("k"), partitionCol = "m")
     sink.upsert(Seq((1L, 10.0, "us,eu")).toDF("k", "price", "m")): Unit
-    // first-create marker: one fragment, not sheared at the comma
+    // insert-only marker: one fragment, not sheared at the comma
     assert(sink.lastCommit.get.partitions === Seq("us,eu"))
     sink.upsert(Seq((1L, 99.0, "us,eu")).toDF("k", "price", "m")): Unit
-    // swap-path marker: same
+    // merge marker: same
     assert(sink.lastCommit.get.partitions === Seq("us,eu"))
     assert(sink.read().select("k", "price", "m").as[(Long, Double, String)]
       .collect().toSet === Set((1L, 99.0, "us,eu")))
@@ -182,7 +185,7 @@ class MergeSinkSpec extends AnyFunSuite with TestSpark {
     assert(first === onDisk, s"marker $first vs dirs $onDisk")
     sink.upsert(Seq((1L, 99.0, ts)).toDF("k", "price", "m")): Unit
     assert(sink.lastCommit.get.partitions === first,
-      "swap-path marker disagrees with the first-create marker namespace")
+      "merge marker disagrees with the first upsert's marker namespace")
   }
 
   test("a failed partition-swap rename aborts the upsert with the staged data intact; recover() completes the commit") {
@@ -212,25 +215,170 @@ class MergeSinkSpec extends AnyFunSuite with TestSpark {
       === Set((1L, 99.0), (2L, 20.0)))
     assert(sink.lastCommit.get.recovered)
   }
+
+  /** A table on the failure-injecting filesystem, seeded with m=1 and m=2. */
+  private def swapFailSink(name: String): (String, MergeSink) = {
+    val s = spark; import s.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftswapf.impl", classOf[GraftSwapFailFs].getName)
+    val local = Files.createTempDirectory(name).toString + "/t"
+    val sink = new MergeSink(spark, s"graftswapf://$local", keyCols = Seq("k"), partitionCol = "m")
+    sink.upsert(Seq((1L, 10.0, 1), (2L, 20.0, 2)).toDF("k", "price", "m")): Unit
+    (local, sink)
+  }
+
+  private def dotDirs(local: String, prefix: String): Seq[String] =
+    Files.list(Paths.get(local)).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(prefix)).toSeq
+
+  private def armed[T](flag: java.util.concurrent.atomic.AtomicBoolean)(body: => T): T = {
+    flag.set(true)
+    try body finally flag.set(false)
+  }
+
+  test("a crash between the incoming write and its rename: recover() discards the incoming dir, live rows and lastCommit unchanged") {
+    val s = spark; import s.implicits._
+    val (local, sink) = swapFailSink("graft_merge_incf")
+    val before = sink.lastCommit.get
+    val e = intercept[java.io.IOException] {
+      armed(GraftSwapFailFs.failIncoming)(sink.upsert(Seq((3L, 30.0, 3)).toDF("k", "price", "m")))
+    }
+    assert(e.getMessage.contains("failed to move incoming"))
+    // the staged batch sits in .incoming_<txid>, which readers ignore
+    assert(dotDirs(local, ".incoming_").size === 1)
+    assert(dotDirs(local, ".staging_").isEmpty)
+    assert(sink.read().select("k", "price").as[(Long, Double)].collect().toSet
+      === Set((1L, 10.0), (2L, 20.0)))
+    // an incoming dir is never rolled forward: it is not a merged replacement
+    assert(sink.recover() === Seq.empty)
+    assert(dotDirs(local, ".incoming_").isEmpty)
+    assert(sink.read().select("k", "price").as[(Long, Double)].collect().toSet
+      === Set((1L, 10.0), (2L, 20.0)))
+    assert(sink.lastCommit.get === before)
+  }
+
+  test("a crash after the incoming rename: recover() rolls the insert forward") {
+    val s = spark; import s.implicits._
+    val (local, sink) = swapFailSink("graft_merge_insf")
+    val e = intercept[java.io.IOException] {
+      armed(GraftSwapFailFs.failStagedSwaps)(sink.upsert(Seq((3L, 30.0, 3)).toDF("k", "price", "m")))
+    }
+    assert(e.getMessage.contains("failed to move staged"))
+    assert(dotDirs(local, ".incoming_").isEmpty)
+    assert(dotDirs(local, ".staging_").size === 1)
+    assert(sink.recover() === Seq("3"))
+    assert(sink.read().select("k", "price").as[(Long, Double)].collect().toSet
+      === Set((1L, 10.0), (2L, 20.0), (3L, 30.0)))
+    assert(sink.lastCommit.get.recovered)
+    assert(dotDirs(local, ".").filterNot(_.endsWith(".crc")).isEmpty)
+  }
+
+  test("a failed commit-marker rename fails the upsert by name instead of reporting success with no marker") {
+    val s = spark; import s.implicits._
+    val (_, sink) = swapFailSink("graft_merge_markf")
+    val e = intercept[java.io.IOException] {
+      armed(GraftSwapFailFs.failMarker)(sink.upsert(Seq((3L, 30.0, 3)).toDF("k", "price", "m")))
+    }
+    assert(e.getMessage.contains("commit marker"))
+    // the swap itself completed before the marker: the rows are live
+    assert(sink.read().select("k", "price").as[(Long, Double)].collect().toSet
+      === Set((1L, 10.0), (2L, 20.0), (3L, 30.0)))
+  }
+
+  test("a pure-insert upsert into new partitions runs exactly one Spark job and caches nothing") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_merge_1job").toString + "/t"
+    val sink = new MergeSink(spark, dir, keyCols = Seq("ticker", "seq"), partitionCol = "m")
+    sink.upsert(Seq(("AAPL", 1L, 10.0, 1), ("MSFT", 1L, 20.0, 2))
+      .toDF("ticker", "seq", "price", "m")): Unit
+    val batch = Seq(("AAPL", 2L, 11.0, 3), ("MSFT", 2L, 21.0, 3), ("MSFT", 3L, 22.0, 4))
+      .toDF("ticker", "seq", "price", "m")
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val counts = new GraftSession.Counts
+    // a foreachBatch batch runs on the stream's session, which turns AQE
+    // off; under AQE the repartition's map stage would be a job of its own
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    GraftSession.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counts)
+    val st = try sink.upsert(batch, assumeUniqueKeys = true) finally {
+      GraftSession.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(counts)
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    }
+    assert(st === sink.MergeStats(inserted = 3, updated = 0, partitions = 2))
+    assert(counts.jobs === 1, counts.toString)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
+    assert(sink.lastCommit.get.partitions.toSet === Set("3", "4"))
+    assert(sink.read().count() === 5)
+  }
+
+  test("an empty batch leaves no directory on a missing table and no trace on an existing one") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_merge_empty").toString + "/t"
+    val sink = new MergeSink(spark, dir, keyCols = Seq("k"), partitionCol = "m")
+    val empty = Seq.empty[(Long, Double, Int)].toDF("k", "price", "m")
+    assert(sink.upsert(empty) === sink.MergeStats(0, 0, 0))
+    assert(!Files.exists(Paths.get(dir)) && !sink.exists)
+    sink.upsert(Seq((1L, 10.0, 1)).toDF("k", "price", "m")): Unit
+    val before = sink.lastCommit.get
+    assert(sink.upsert(empty) === sink.MergeStats(0, 0, 0))
+    assert(dotDirs(dir, ".").filterNot(_.endsWith(".crc")).isEmpty)
+    assert(sink.lastCommit.get === before)
+    assert(sink.read().count() === 1)
+  }
+
+  test("a colliding upsert scans only the live partition dirs it collides with") {
+    val s = spark; import s.implicits._
+    val dir = Files.createTempDirectory("graft_merge_scan").toString + "/t"
+    val sink = new MergeSink(spark, dir, keyCols = Seq("k"), partitionCol = "m")
+    sink.upsert(Seq((1L, 10.0, 1), (2L, 20.0, 2), (3L, 30.0, 3)).toDF("k", "price", "m")): Unit
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan): Unit
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val st = try {
+      val r = sink.upsert(Seq((2L, 99.0, 2), (4L, 40.0, 4)).toDF("k", "price", "m"))
+      GraftSession.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(st === sink.MergeStats(inserted = 1, updated = 1, partitions = 2))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val roots = plans.asScala.toSeq.flatMap(p => helper.collectWithSubqueries(p) {
+      case scan: FileSourceScanExec => scan.relation.location.rootPaths
+    }).flatten.map(_.toUri.getPath).filterNot(_.contains("/."))
+    assert(roots.map(_.stripPrefix(dir + "/")).toSet === Set("m=2"), roots)
+    assert(sink.read().select("k", "price").as[(Long, Double)].collect().toSet
+      === Set((1L, 10.0), (2L, 99.0), (3L, 30.0), (4L, 40.0)))
+  }
 }
 
 /** RawLocalFileSystem under a fake scheme whose rename FAILS (returns
   * false, like a transient HDFS failure) when armed and the source is a
-  * staged partition dir being swapped live — task-commit renames inside
-  * the staging dir (src under `_temporary`) pass through, so the parquet
-  * write itself succeeds and only the swap is hit. */
+  * staged partition dir being swapped live (`failStagedSwaps`), the
+  * incoming dir being renamed to staging (`failIncoming`), or the commit
+  * marker being moved into place (`failMarker`) — task-commit renames
+  * (src under `_temporary`) pass through, so the parquet writes
+  * themselves succeed and only the named rename is hit. */
 class GraftSwapFailFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "graftswapf"
   override def getUri: java.net.URI = java.net.URI.create("graftswapf:///")
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean = {
     val s = src.toString
-    if (GraftSwapFailFs.failStagedSwaps.get() && s.contains("/.staging_") &&
-      !s.contains("_temporary") && !dst.toString.contains("/.staging_"))
-      false
-    else super.rename(src, dst)
+    val d = dst.toString
+    val hit = !s.contains("_temporary") && (
+      GraftSwapFailFs.failStagedSwaps.get() && s.contains("/.staging_") &&
+        !d.contains("/.staging_") ||
+      GraftSwapFailFs.failIncoming.get() && s.contains("/.incoming_") ||
+      GraftSwapFailFs.failMarker.get() && src.getName == "._graft_commit_tmp")
+    !hit && super.rename(src, dst)
   }
 }
 object GraftSwapFailFs {
   val failStagedSwaps = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val failIncoming = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val failMarker = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
