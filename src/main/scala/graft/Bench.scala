@@ -176,7 +176,8 @@ object Bench {
     val failed = work.map(_._1).filterNot(best.contains)
 
     // Every timed soak arm prints the Spark work it ran (jobs, tasks,
-    // summed task time, shuffle MB) to stderr beside its wall seconds.
+    // summed task time, shuffle MB, codegen compiles) to stderr beside
+    // its wall seconds.
     val counts = new GraftSession.Counts
     spark.sparkContext.addSparkListener(counts)
     def soakArm(name: String)(f: => Unit): Double = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.{GraftListenerBus, SparkConf, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -60,9 +61,15 @@ object GraftSession {
   def drain(sc: SparkContext): Unit = GraftListenerBus.drain(sc)
 
   /** Spark work since the last `reset`: jobs, stages, tasks, summed
-    * executor task time and shuffle bytes written. With SPARK_GRAFT_STAGES
-    * set, each completed stage is also logged to `stageLog`. */
+    * executor task time, shuffle bytes written and generated classes
+    * compiled (`compiles`: the JVM-wide codegen compile count, so it
+    * counts the compiles of every session in the JVM). With
+    * SPARK_GRAFT_STAGES set, each completed stage is also logged to
+    * `stageLog`. */
   final class Counts extends SparkListener {
+    private def compileCount = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    @volatile private var compileBase = compileCount
+    def compiles: Long = compileCount - compileBase
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
@@ -81,9 +88,9 @@ object GraftSession {
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
       if (t.taskMetrics != null) taskTimeMs += t.taskMetrics.executorRunTime
     def reset(): Unit = { jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0L
-      shuffleWriteBytes = 0L; stageLog.clear() }
+      shuffleWriteBytes = 0L; compileBase = compileCount; stageLog.clear() }
     override def toString: String =
       f"jobs=$jobs%d tasks=$tasks%d tasktime=${taskTimeMs / 1e3}%.1fs " +
-        f"shufMB=${shuffleWriteBytes / 1e6}%.1f"
+        f"shufMB=${shuffleWriteBytes / 1e6}%.1f compiles=$compiles%d"
   }
 }

@@ -101,19 +101,29 @@ object Preprocessor {
   }
 
   /** [[fitZScore]]'s per-ticker aggregates (`<c>__mean`, `<c>__std`), for
-    * callers that fit them in a wider per-ticker aggregate. */
-  def zScoreAggs(cols: Seq[String]): Seq[Column] = cols.flatMap(c => Seq(
-    graft.queries.Det.davg12(col(c)).as(s"${c}__mean"),
-    graft.queries.Det.dstddev12(col(c)).as(s"${c}__std")))
+    * callers that fit them in a wider per-ticker aggregate: over the rows
+    * where `rows` holds, the same as fitting a frame filtered by it (both
+    * moments skip nulls). */
+  def zScoreAggs(cols: Seq[String], rows: Column = lit(true)): Seq[Column] =
+    cols.flatMap(c => Seq(
+      graft.queries.Det.davg12(when(rows, col(c))).as(s"${c}__mean"),
+      graft.queries.Det.dstddev12(when(rows, col(c))).as(s"${c}__std")))
 
   /** Apply previously fitted stats (no refit — leak-safe). std==0 or
     * null → 0.0, matching the reference's std==0→NaN→0 handling. */
-  def applyZScore(df: DataFrame, stats: DataFrame, cols: Seq[String]): DataFrame = {
-    val joined = df.join(broadcast(stats), Seq("ticker"), "left")
+  def applyZScore(df: DataFrame, stats: DataFrame, cols: Seq[String]): DataFrame =
+    zScored(df.join(broadcast(stats), Seq("ticker"), "left"), cols)
+
+  /** [[applyZScore]] over a frame that already carries each row's
+    * `<c>__mean` and `<c>__std` (dropped from the result). Rows where
+    * `rows` does not hold keep their values (the columns must then be
+    * doubles already). */
+  def zScored(joined: DataFrame, cols: Seq[String], rows: Column = lit(true)): DataFrame = {
     val out = cols.foldLeft(joined) { (acc, c) =>
       val m = col(s"${c}__mean"); val sd = col(s"${c}__std")
       acc.withColumn(c,
-        when(sd.isNull || sd === 0.0 || m.isNull, lit(0.0))
+        when(!rows, col(c))
+          .when(sd.isNull || sd === 0.0 || m.isNull, lit(0.0))
           .otherwise((col(c) - m) / sd))
     }
     out.drop(cols.flatMap(c => Seq(s"${c}__mean", s"${c}__std")): _*)

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Chronological train/val/test split + expanding/rolling k-fold CV —
@@ -29,19 +29,26 @@ object Splitter {
     * regardless of how many tickers × rows the fact side has. ONE query
     * collects at most one row past the bound and the driver sorts it, so
     * an oversized dimension fails by name instead of flooding the driver.
-    * Shared by [[tagChronological]], [[cvFolds]] and pipeline.AutoTrader. */
+    * Shared by [[tagChronological]], [[cvFolds]] and pipeline.AutoTrader;
+    * `Validator.validateWithDates` collects the same dimension. */
   private[graft] def distinctDates(df: DataFrame,
       dateCol: String = "date"): Array[java.sql.Timestamp] = {
-    val maxDates = 1000000
     // cast("timestamp") tolerates a TIMESTAMP_NTZ date column (drifting
     // testdata parquet) — rows then always carry java.sql.Timestamp.
     val dates = df.select(col(dateCol).cast("timestamp")).distinct()
       .limit(maxDates + 1).collect().map(_.getTimestamp(0))
     require(dates.length <= maxDates,
       s"date dimension unexpectedly large (>${dates.length} rows) — not a bar-frequency table")
+    sortDates(dates)
+  }
+
+  /** The bound on a collected date dimension. */
+  private[graft] val maxDates = 1000000
+
+  /** Ascending, the null date first. */
+  private[graft] def sortDates(dates: Array[java.sql.Timestamp]): Array[java.sql.Timestamp] =
     dates.sorted(Ordering.by[java.sql.Timestamp, Option[(Long, Int)]](t =>
       Option(t).map(t => (t.getTime, t.getNanos))))
-  }
 
   /** Tag each row train/validation/testing by unique-date fractions.
     *
@@ -90,8 +97,14 @@ object Splitter {
     * double's decimal form), so every row gets chronological's tag (spec:
     * EtlCoreSpec); null dates tag "testing". */
   def tagChronological(df: DataFrame, trainFrac: Double = 0.70,
-      valFrac: Double = 0.15): DataFrame = {
-    val sorted = distinctDates(df).map(Option(_))
+      valFrac: Double = 0.15): DataFrame =
+    df.withColumn("split", splitOf(distinctDates(df), trainFrac, valFrac))
+
+  /** [[tagChronological]]'s `split` column over an already collected
+    * date dimension: `sorted` holds the frame's distinct dates in
+    * [[distinctDates]]'s form (ascending, the null date first). */
+  def splitOf(sorted: Array[java.sql.Timestamp], trainFrac: Double,
+      valFrac: Double): Column = {
     val n = sorted.length.toLong
     require(n >= 3, s"need >=3 distinct dates, got $n")
     def round(x: Double): Long = java.math.BigDecimal.valueOf(x)
@@ -100,12 +113,11 @@ object Splitter {
     val nVa = math.max(1L, round(n * valFrac))
     // a row is at or below the cut at rank r (1-based); a cut on the
     // null date admits no row
-    def upTo(r: Long) = sorted((r - 1).toInt)
+    def upTo(r: Long) = Option(sorted((r - 1).toInt))
       .map(c => col("date") <= lit(c)).getOrElse(lit(false))
-    df.withColumn("split",
-      when(upTo(math.min(nTr, n - 2)), "training")
-        .when(upTo(math.min(nTr + nVa, n - 1)), "validation")
-        .otherwise("testing"))
+    when(upTo(math.min(nTr, n - 2)), "training")
+      .when(upTo(math.min(nTr + nVa, n - 1)), "validation")
+      .otherwise("testing")
   }
 
   final case class FoldSpec(foldId: Int, trainStart: java.sql.Timestamp,

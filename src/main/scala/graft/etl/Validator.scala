@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.domain.QualityReport
@@ -14,9 +13,9 @@ import graft.features.FeatureKernel
   * duplicate (ticker,date) keys, non-monotonic dates, non-finite values,
   * residual NaNs, min-bar floor).
   *
-  * Everything is ONE aggregation job over the frame (plus one windowed
-  * pass for monotonicity) — a full-scan report, the way a 100 TB table
-  * must be profiled. No collect of row-level data.
+  * The report is one query of three aggregation levels — a full-scan
+  * report, the way a 100 TB table must be profiled. No collect of
+  * row-level data.
   */
 object Validator {
 
@@ -31,48 +30,65 @@ object Validator {
     * status. `exactDistinct = false` profiles ticker cardinality with HLL
     * (`approx_count_distinct`) — at 100 TB the exact distinct is the
     * report's only expensive aggregate, and every pass/fail predicate
-    * stays exact either way. */
+    * stays exact either way.
+    *
+    * Plan: three aggregation levels and no window or sort. Level 1 is
+    * one row per (ticker, date) key with its row count and the row-level
+    * counts; a key counted more than once is a duplicate, and every row
+    * after the first of a non-null-date key is one the reference's
+    * (ticker ORDER BY date) lag reads as non-monotonic. Level 2 is one
+    * row per ticker (its bar count); level 3 is the report. All three
+    * are hash aggregates, so the report is a handful of generated
+    * classes and, with AQE, 4 jobs (three shuffles and the result). */
   def reportDf(
       df: DataFrame,
       missingThreshold: Double = 0.05,
       minBars: Int = 30,
-      exactDistinct: Boolean = true): DataFrame = {
-    val w = Window.partitionBy("ticker").orderBy("date")
-    val nonFinite = priceCols
-      .map(c => sum(when(isnan(col(c)) || col(c) === Double.PositiveInfinity ||
-        col(c) === Double.NegativeInfinity, 1).otherwise(0)))
-      .reduce(_ + _)
-    val residualNulls = (priceCols :+ "volume")
-      .map(c => sum(when(col(c).isNull, 1).otherwise(0)))
-      .reduce(_ + _)
-    val nonPositive = priceCols
-      .map(c => sum(when(col(c) <= 0, 1).otherwise(0)))
-      .reduce(_ + _)
-    val missing = (priceCols :+ "volume")
-      .map(c => avg(col(c).isNull.cast("int")))
-      .reduce(_ + _) / (priceCols.size + 1)
+      exactDistinct: Boolean = true): DataFrame =
+    reportOf(keysOf(df), missingThreshold, minBars, exactDistinct)
 
-    df
-      .withColumn("prev_date", lag(col("date"), 1).over(w))
-      .withColumn("key_cnt",
-        count(lit(1)).over(Window.partitionBy("ticker", "date")))
-      .withColumn("ticker_bars",
-        count(lit(1)).over(Window.partitionBy("ticker")))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        (if (exactDistinct) countDistinct(col("ticker"))
+  private def cnt(c: Column) = sum(when(c, 1).otherwise(0))
+  private def sumOf(cs: Seq[Column]) = cs.map(cnt).reduce(_ + _)
+
+  // the per-row counts, summed up through every level
+  private def rowCounts: Seq[(String, Column)] = Seq(
+    "n_nonfinite" -> sumOf(priceCols.map(c => isnan(col(c)) ||
+      col(c) === Double.PositiveInfinity || col(c) === Double.NegativeInfinity)),
+    "n_nulls" -> sumOf((priceCols :+ "volume").map(c => col(c).isNull)),
+    "n_nonpos" -> sumOf(priceCols.map(c => col(c) <= 0)),
+    "n_negvol" -> cnt(col("volume") < 0),
+    "n_feature_nulls" -> cnt(FeatureKernel.inputCols.map(c => col(c).isNull)
+      .reduce(_ || _))) ++
+    (priceCols :+ "volume").map(c => s"_null_$c" -> cnt(col(c).isNull))
+
+  /** Level 1: one row per (ticker, date) key. */
+  private def keysOf(df: DataFrame): DataFrame =
+    df.groupBy("ticker", "date").agg(count(lit(1)).as("_k"),
+      rowCounts.map { case (n, c) => c.as(n) }: _*)
+
+  /** Levels 2 and 3 over [[keysOf]]. */
+  private def reportOf(keys: DataFrame, missingThreshold: Double, minBars: Int,
+      exactDistinct: Boolean): DataFrame = {
+    def summed = rowCounts.map { case (n, _) => sum(col(n)).as(n) }
+    val k = col("_k")
+    val tickers = keys.groupBy("ticker").agg(sum(k).as("_bars"), Seq(
+      sum(when(k > 1, k).otherwise(0L)).as("n_dup"),
+      sum(when(col("date").isNotNull, k - 1).otherwise(0L)).as("n_nonmono")) ++
+      summed: _*)
+    // avg(isNull) per column, as avg computes it: null over no rows
+    val nRows = col("n_rows")
+    val missing = (priceCols :+ "volume")
+      .map(c => when(nRows > 0, col(s"_null_$c").cast("double") / nRows.cast("double")))
+      .reduce(_ + _) / (priceCols.size + 1)
+    tickers
+      .agg(coalesce(sum("_bars"), lit(0L)).as("n_rows"), Seq(
+        (if (exactDistinct) count(col("ticker"))
          else approx_count_distinct(col("ticker"))).as("n_tickers"),
-        sum(when(col("key_cnt") > 1, 1).otherwise(0)).as("n_dup"),
-        sum(when(col("prev_date").isNotNull && col("date") <= col("prev_date"), 1)
-          .otherwise(0)).as("n_nonmono"),
-        nonFinite.as("n_nonfinite"),
-        residualNulls.as("n_nulls"),
-        nonPositive.as("n_nonpos"),
-        sum(when(col("volume") < 0, 1).otherwise(0)).as("n_negvol"),
-        missing.as("missing_ratio"),
-        min(col("ticker_bars")).as("min_bars"),
-        sum(when(FeatureKernel.inputCols.map(c => col(c).isNull).reduce(_ || _), 1)
-          .otherwise(0)).as("n_feature_nulls"))
+        sum("n_dup").as("n_dup"), sum("n_nonmono").as("n_nonmono"),
+        min("_bars").as("min_bars")) ++ summed: _*)
+      .select(col("n_rows"), col("n_tickers"), col("n_dup"), col("n_nonmono"),
+        col("n_nonfinite"), col("n_nulls"), col("n_nonpos"), col("n_negvol"),
+        missing.as("missing_ratio"), col("min_bars"), col("n_feature_nulls"))
       .withColumn("status",
         when(col("n_rows") === 0 || col("n_dup") > 0 || col("n_nonmono") > 0 ||
           col("n_nonfinite") > 0 || col("n_nonpos") > 0 || col("n_negvol") > 0 ||
@@ -86,9 +102,32 @@ object Validator {
       df: DataFrame,
       missingThreshold: Double = 0.05,
       minBars: Int = 30,
-      exactDistinct: Boolean = true): QualityReport = {
-    val agged: Row = reportDf(df, missingThreshold, minBars, exactDistinct).head()
+      exactDistinct: Boolean = true): QualityReport =
+    qualityOf(reportDf(df, missingThreshold, minBars, exactDistinct).head())
 
+  /** [[validate]] plus the frame's distinct dates — the split stage's
+    * date dimension, in [[Splitter.distinctDates]]'s form and bound — from
+    * ONE query: the dates are a second aggregate over the report's own
+    * (ticker, date) level (its shuffle is reused, the frame is scanned
+    * once), unioned into the report's result as rows of their own. */
+  def validateWithDates(
+      df: DataFrame,
+      missingThreshold: Double = 0.05,
+      minBars: Int = 30): (QualityReport, Array[java.sql.Timestamp]) = {
+    val keys = keysOf(df)
+    val dates = keys.select(col("date").cast("timestamp").as("_date")).distinct()
+      .limit(Splitter.maxDates + 1)
+    val rows = reportOf(keys, missingThreshold, minBars, exactDistinct = true)
+      .unionByName(dates, allowMissingColumns = true).collect()
+    // the report row is the one with a status
+    val (report, dateRows) = rows.partition(r => !r.isNullAt(r.fieldIndex("status")))
+    require(dateRows.length <= Splitter.maxDates,
+      s"date dimension unexpectedly large (>${dateRows.length} rows) — not a bar-frequency table")
+    (qualityOf(report.head),
+      Splitter.sortDates(dateRows.map(r => r.getTimestamp(r.fieldIndex("_date")))))
+  }
+
+  private def qualityOf(agged: Row): QualityReport = {
     // sums over an empty frame come back null — read defensively
     def l(name: String): Long =
       Option(agged.get(agged.fieldIndex(name))).map(_.asInstanceOf[Long]).getOrElse(0L)

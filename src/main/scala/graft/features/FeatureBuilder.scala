@@ -1,8 +1,10 @@
 package graft.features
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 /** The feature engine — rebuild of /root/reference/etl/
   * time_series_feature_builder.py:71-290 (~40 engineered columns) as one
@@ -12,7 +14,8 @@ import org.apache.spark.sql.functions._
   * (partitionBy ticker, orderBy date), so Catalyst collapses them into a
   * single Window operator → exactly ONE shuffle by ticker for ~30
   * features. Cross-sectional features (per-date rank/z-score) are the
-  * only second shuffle (by date). Nothing touches the driver.
+  * only second shuffle (by date). Only the per-ticker dimensions (vol
+  * cuts, seasonal index: at most tickers × 126 rows) reach the driver.
   *
   * Feature ↔ reference map (file:line of time_series_feature_builder.py):
   *  lags/returns :105-108 · rolling mean/std/skew :110-116 · diff :117-119
@@ -42,7 +45,11 @@ object FeatureBuilder {
     * the spec-pinned reference for [[buildFast]]. Each dependency level
     * is ONE projection (a withColumn per feature re-analyzed the whole
     * growing plan ~60 times, about a second of driver time per call). */
-  def build(df: DataFrame, dropNa: Boolean = true): DataFrame = {
+  def build(df: DataFrame, dropNa: Boolean = true): DataFrame =
+    finish(windowed(df), dropNa, Nil, Nil).features
+
+  /** [[build]]'s per-ticker windowed block, before [[finish]]. */
+  private def windowed(df: DataFrame): DataFrame = {
     val w = Window.partitionBy("ticker").orderBy("date")
     def wN(n: Int) = w.rowsBetween(-(n - 1), 0)
     val close = col("close")
@@ -103,10 +110,10 @@ object FeatureBuilder {
         |  [CAST(floor(0.05 * (size(_cv_lst) - 1)) AS INT)]
         |END""".stripMargin))
     val inputCols = df.columns.toSeq.filterNot(windowedCols.contains)
-    finish(level2.select(inputCols.map(c => col(s"`$c`")) ++ windowedCols.map {
+    level2.select(inputCols.map(c => col(s"`$c`")) ++ windowedCols.map {
       case "cvar_95_60" => cvar.as("cvar_95_60")
       case c => col(c)
-    }: _*), dropNa)
+    }: _*)
   }
 
   /** The fast twin of [[build]]: the same columns in the same order, the
@@ -127,70 +134,130 @@ object FeatureBuilder {
     * WindowExec sums doubles). */
   def buildFast(df: DataFrame, dropNa: Boolean = true,
       reuseKernel: Boolean = false): DataFrame = {
-    // reuseKernel: finish() consumes the kernel frame from three
-    // subtrees (vol-regime cuts, the seasonal index, the main stream),
-    // and a kernel RDD has no exchange for Spark to reuse — when a
-    // caller's projection keeps those joins alive (q158's health over
-    // every feature), the whole halo pass re-ran per subtree (r19
-    // measured: 2 kernel scans in the plan). Persisting costs one
-    // full-width cache write, so it stays OFF for callers whose final
-    // projection lets Catalyst prune the joins away (q156 keeps only
-    // cvar — its plan is a single kernel scan already). Blocks are
-    // reclaimed by the ContextCleaner when the caller drops the frame.
+    // reuseKernel: finish() consumes the kernel frame twice (its
+    // dimension aggregate, collected at once, then the main stream), and
+    // a kernel RDD has no exchange for Spark to reuse, so the halo pass
+    // runs once per consumer. Persisting costs one full-width cache
+    // write, so it stays OFF unless a caller reads the frame more than
+    // the pipeline's one write does (q158). Blocks are reclaimed by the
+    // ContextCleaner when the caller drops the frame.
     val kernel = FeatureKernel.run(df)
     finish(if (reuseKernel)
       kernel.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else kernel, dropNa)
+    else kernel, dropNa, Nil, Nil).features
   }
+
+  /** A feature frame and its per-ticker fit: `fit` holds one row per
+    * ticker (a null ticker included), in `fitSchema`: ticker, then the
+    * fit columns. */
+  final case class Fitted(features: DataFrame, fitSchema: StructType, fit: Array[Row])
+
+  /** The feature frame with dropNa = false — [[buildFast]]'s when `fast`,
+    * else [[build]]'s — plus `perTicker`: aggregate columns (or
+    * expressions over aggregates) on the windowed block, input columns
+    * included, evaluated inside the one per-ticker aggregate [[finish]]
+    * already runs and returned collected. The `carry` columns of the fit
+    * also ride [[finish]]'s dimension join onto every feature row of a
+    * non-null ticker (null on the others), appended after the feature
+    * columns. */
+  def buildFitting(df: DataFrame, fast: Boolean, perTicker: Seq[Column],
+      carry: Seq[String]): Fitted =
+    finish(if (fast) FeatureKernel.run(df) else windowed(df), dropNa = false,
+      perTicker, carry)
 
   /** Cross-sectional + dimension-join tail shared by both forms: vol
     * regime, per-date rank/z, the seasonal index join, calendar flags,
     * and the dropNa gate. `out` carries the per-ticker windowed block
     * (incl. `_detrended`, `_phase`). Output: ticker, the other columns of
-    * `out` but the two scratch ones, then the tail's columns. */
-  private def finish(out: DataFrame, dropNa: Boolean): DataFrame = {
-    // volatility regime bucket from rolling σ20 terciles (per ticker)
+    * `out` but the two scratch ones, then the tail's columns.
+    *
+    * The two per-ticker dimensions — the σ20 tercile cuts and the
+    * per-(ticker, phase) seasonal index — come from ONE aggregate over
+    * `out`, collected as a local (ticker, _phase) dimension of at most
+    * tickers × 126 rows and broadcast back, so `out`'s lineage runs
+    * twice (that aggregate, then the main stream), not once per
+    * dimension. The aggregate runs when the frame is built (one job), so
+    * [[build]] and [[buildFast]] are not lazy. */
+  private def finish(out: DataFrame, dropNa: Boolean, perTicker: Seq[Column],
+      carry: Seq[String]): Fitted = {
     val vol = col("roll_std_20")
-    val cuts = out.groupBy("ticker")
-      .agg(percentile_approx(vol, typedLit(Seq(1.0 / 3, 2.0 / 3)), lit(10000))
-        .as("_vol_cuts"))
-    // cross-sectional (per-date) rank and z-score of 5d returns
-    val wDate = Window.partitionBy("date")
-    val sd = stddev_samp(col("ret_20")).over(wDate)
-    val ranked = out.join(broadcast(cuts), Seq("ticker"), "left")
-      .select(col("*"),
+    val agg = out.groupBy("ticker").agg(
+        // volatility regime bucket from rolling σ20 terciles (per ticker)
+        percentile_approx(vol, typedLit(Seq(1.0 / 3, 2.0 / 3)), lit(10000))
+          .as("_vol_cuts"),
+        collect_list(struct(col("_phase"), col("date"), col("_detrended")))
+          .as("_season") +: perTicker: _*)
+      .withColumn("_season", seasonalIndex(col("_season")))
+    val rows = agg.collect()
+    val fitSchema = StructType(agg.schema.fields.head +: agg.schema.fields.drop(3).toSeq)
+    val fit = rows.map(r => Row.fromSeq(r.get(0) +: r.toSeq.drop(3)))
+    // a join never matches a null ticker, so the dimension drops it, and
+    // its keys are declared non-null (no inferred not-null filter)
+    val carried = carry.map(agg.schema.fieldIndex)
+    val dimRows = rows.toSeq.filter(!_.isNullAt(0)).flatMap { r =>
+      val c = carried.map(r.get)
+      r.getSeq[Row](2).map(p => Row.fromSeq(Seq(r.get(0), p.get(0), r.get(1), p.get(1)) ++ c))
+    }
+    val dim = out.sparkSession.createDataFrame(java.util.Arrays.asList(dimRows: _*),
+      StructType(Seq(out.schema("ticker").copy(nullable = false),
+        out.schema("_phase").copy(nullable = false), agg.schema("_vol_cuts"),
+        StructField("seasonal_126", DoubleType)) ++ carried.map(agg.schema(_))))
+    // cross-sectional (per-date) rank and z-score of 5d returns, over
+    // one window spec: the moments read the whole date partition in the
+    // rank's (ret_5, ticker) order
+    val wDate = Window.partitionBy("date").orderBy(col("ret_5"), col("ticker"))
+    val wAll = wDate.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val sd = stddev_samp(col("ret_20")).over(wAll)
+    val date = to_date(col("date"))
+    val monthEnd = last_day(date) === date
+    val kept = out.columns.toSeq.filterNot(Set("ticker", "_detrended", "_phase"))
+    val res = out.join(broadcast(dim), Seq("ticker", "_phase"), "left")
+      .select((col("ticker") +: kept.map(c => col(s"`$c`"))) ++ Seq(
         when(vol.isNull, lit(null))
           .when(vol <= col("_vol_cuts")(0), 0)
           .when(vol <= col("_vol_cuts")(1), 1)
           .otherwise(2).as("vol_regime"),
-        percent_rank().over(wDate.orderBy(col("ret_5"), col("ticker")))
-          .as("xsec_rank_ret5"),
-        when(sd =!= 0.0, (col("ret_20") - avg(col("ret_20")).over(wDate)) / sd)
-          .as("xsec_z_ret20"))
-    // seasonal = per-(ticker, phase) mean of the detrended series with
-    // phase = bar index mod 126 (the same shape q17 oracles at period
-    // 7); resid = detrended − seasonal. The phase index is a tiny
-    // (tickers × 126) dimension → broadcast joined back, so the big
-    // side is never reshuffled for it.
-    val seasonalIdx = ranked.groupBy(col("ticker"), col("_phase"))
-      .agg(avg(col("_detrended")).as("seasonal_126"))
-    val date = to_date(col("date"))
-    val monthEnd = last_day(date) === date
-    val kept = out.columns.toSeq.filterNot(Set("ticker", "_detrended", "_phase"))
-    val res = ranked.join(broadcast(seasonalIdx), Seq("ticker", "_phase"), "left")
-      .select((col("ticker") +: kept.map(c => col(s"`$c`"))) ++ Seq(
-        col("vol_regime"), col("xsec_rank_ret5"), col("xsec_z_ret20"),
+        percent_rank().over(wDate).as("xsec_rank_ret5"),
+        when(sd =!= 0.0, (col("ret_20") - avg(col("ret_20")).over(wAll)) / sd)
+          .as("xsec_z_ret20"),
         col("seasonal_126"),
         (col("_detrended") - col("seasonal_126")).as("seasonal_resid_126"),
         // calendar flags
         monthEnd.cast("int").as("is_month_end"),
         (monthEnd && month(col("date")).isin(3, 6, 9, 12)).cast("int")
-          .as("is_quarter_end")): _*)
+          .as("is_quarter_end")) ++ carry.map(col): _*)
 
-    if (dropNa) {
-      val needed = Seq("ret_20", "roll_std_60", "atr_14")
-      res.na.drop(needed)
-    } else res
+    Fitted(if (dropNa) res.na.drop(Seq("ret_20", "roll_std_60", "atr_14")) else res,
+      fitSchema, fit)
+  }
+
+  /** Seasonal index of one ticker: from its (_phase, date, _detrended)
+    * structs, one (_phase, seasonal_126) per phase present, where
+    * seasonal_126 is the mean of the phase's non-null `_detrended` (null
+    * when it has none) — phase = bar index mod 126, the one-sided
+    * decompose-lite of the reference (the same shape q17 oracles at
+    * period 7); resid = detrended − seasonal. Each phase's sum runs in
+    * date order from 0.0, adding 0.0 for a null, exactly as Spark's
+    * `avg` accumulates, so the result does not depend on how the
+    * ticker's rows were partitioned. */
+  private def seasonalIndex(season: Column): Column = {
+    def acc(p: Column, s: Column, c: Column, o: Column) =
+      struct(p.as("p"), s.as("s"), c.as("c"), o.as("o"))
+    // the finished phases, plus the open one (none before the first)
+    def closed(a: Column) = when(a("p") < 0, a("o")).otherwise(
+      concat(a("o"), array(struct(a("p").as("p"), a("s").as("s"), a("c").as("c")))))
+    val slot = StructType(Seq(StructField("p", IntegerType),
+      StructField("s", DoubleType), StructField("c", LongType)))
+    val zero = acc(lit(-1), lit(0.0), lit(0L), array().cast(ArrayType(slot)))
+    aggregate(array_sort(season), zero,
+      (a, x) => {
+        val v = coalesce(x("_detrended"), lit(0.0))
+        val n = when(x("_detrended").isNull, 0L).otherwise(1L)
+        when(x("_phase") === a("p"), acc(a("p"), a("s") + v, a("c") + n, a("o")))
+          .otherwise(acc(x("_phase"), lit(0.0) + v, n, closed(a)))
+      },
+      a => transform(closed(a), e => struct(e("p").as("_phase"),
+        when(e("c") > 0, e("s") / e("c")).as("seasonal_126"))))
   }
 
   /** Feature-health telemetry (time_series_feature_builder.py:243-289):

@@ -3,6 +3,7 @@ package graft.features
 import java.math.{BigDecimal => JBig}
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -357,6 +358,20 @@ object FeatureKernel {
     }
   }
 
+  private def nonNull(r: InternalRow, i: Int, name: String): InternalRow = {
+    if (r.isNullAt(i))
+      throw new NullPointerException(s"Null value appeared in non-nullable field: $name")
+    r
+  }
+
+  private def frowTicker(r: InternalRow): String =
+    if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+
+  /** A kernel input row from its (ticker, dateUs, close, high, low) struct. */
+  private def frow(k: InternalRow): FRow = FRow(frowTicker(k),
+    nonNull(k, 1, "dateUs").getLong(1), nonNull(k, 2, "close").getDouble(2),
+    nonNull(k, 3, "high").getDouble(3), nonNull(k, 4, "low").getDouble(4))
+
   /** The input columns the kernel reads — each must be non-null. */
   val inputCols: Seq[String] = Seq("ticker", "date", "close", "high", "low")
 
@@ -368,8 +383,7 @@ object FeatureKernel {
     * the windowed block in build()'s column order. */
   def run(df: DataFrame, numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    // FRow's primitive fields make the encoder itself the null guard: a
-    // null close/high/low/date fails deserialization loudly ("null value
+    // A null date/close/high/low fails the read loudly ("null value
     // appeared in non-nullable field") instead of emitting silently-wrong
     // gap features — gappy inputs must use FeatureBuilder.build.
     val carried = StructType(df.schema.filterNot(f => inputCols.contains(f.name)))
@@ -392,14 +406,20 @@ object FeatureKernel {
     // chunks (r19 measured: q156 lost ~1 s serial at the 512 KB target).
     val p = if (numPartitions > 0) numPartitions
       else graft.operators.SizedPartitions.of(df, targetBytes = 64L << 10)
-    // the carried values travel as a schema-less Row: a GenericRowWithSchema
-    // would serialize its schema into the shuffle with the values
-    val keyed = base.as(Encoders.tuple(Encoders.product[FRow], Encoders.row(carried)))
-      .rdd.map { case (f, rest) =>
-        ((f.ticker, f.dateUs, 0L), (f, Row.fromSeq(rest.toSeq))) }
-    val light = base.select(col("_1.ticker"), col("_1.dateUs"))
-      .as[(String, Long)](Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-      .rdd.map(k => ((k._1, k._2, 0L), ()))
+    // Both inputs are read as the plans' own InternalRows and converted
+    // here, so neither needs a generated deserializer class (a pipeline
+    // run's classes must fit Spark's codegen cache; see EtlPipeline).
+    // The carried values travel as a schema-less Row: a
+    // GenericRowWithSchema would serialize its schema into the shuffle
+    // with the values.
+    val toScala = CatalystTypeConverters.createToScalaConverter(carried)
+    val keyed = base.queryExecution.toRdd.map { r =>
+      val f = frow(r.getStruct(0, 5))
+      ((f.ticker, f.dateUs, 0L),
+        (f, Row.fromSeq(toScala(r.getStruct(1, carried.size)).asInstanceOf[Row].toSeq)))
+    }
+    val light = base.select(col("_1.ticker"), col("_1.dateUs")).queryExecution.toRdd
+      .map(r => ((frowTicker(r), nonNull(r, 1, "dateUs").getLong(1), 0L), ()))
 
     val out = ChunkedWindow.haloScan(spark, keyed, light, p, H)(
       () => new Kernel)

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField,
+  StructType}
 
 import graft.domain.QualityReport
 import graft.etl.{Preprocessor, Splitter, SplitDiagnostics, Validator}
@@ -21,15 +23,22 @@ import graft.features.FeatureBuilder
   *
   * Feature route: input that meets the feature kernel's contract — no
   * null ticker, date, close, high or low, read from the validator's
-  * `n_feature_nulls` — builds its processed stage through
-  * `FeatureBuilder.buildFast` (the row-parallel halo kernel, which
-  * carries open/volume/adjClose/source through, so the stage keeps the
-  * plain form's exact schema and column order); any other input takes
-  * `FeatureBuilder.build`. The kernel frame is not persisted: recomputing
-  * it for finish()'s three subtrees measured faster than caching it, and
-  * no block outlives the run. The split stage derives its two cut dates
-  * once per run and fits the z-score moments and PSI bin cuts in one
-  * per-ticker aggregate.
+  * `n_feature_nulls` — builds its processed stage on the row-parallel
+  * halo kernel (`FeatureBuilder.buildFast`'s route, which carries
+  * open/volume/adjClose/source through, so the stage keeps the plain
+  * form's exact schema and column order); any other input takes
+  * `FeatureBuilder.build`'s. The kernel frame is not persisted:
+  * recomputing it for its two readers measured faster than caching it,
+  * and no block outlives the run.
+  *
+  * Plan budget: a run is five queries — the raw write, the validation
+  * report (which also collects the date dimension), the feature stage's
+  * per-ticker aggregate (which also fits the split stage: z-score
+  * moments, PSI bins, split census), the one write of the processed and
+  * split stages, and the catalog append — so every class Spark generates
+  * for a run (59 on the kernel route) fits its codegen cache (100
+  * entries in 4 LRU segments) and a warm run compiles none of them again
+  * (plans/etl_codegen).
   */
 object EtlPipeline {
 
@@ -38,6 +47,8 @@ object EtlPipeline {
       trainFrac: Double = 0.70,
       valFrac: Double = 0.15,
       researchMode: Boolean = false, // research mode may backfill
+      // input or windowed-feature columns: their fit rides the feature
+      // stage's per-ticker aggregate, before the cross-sectional tail
       normalizeCols: Seq[String] = Seq("close"),
       minBars: Int = 30,
       // stage sinks as VersionedTables: each run overwrites into a NEW
@@ -70,13 +81,17 @@ object EtlPipeline {
         table.read()
       } else {
         df.write.mode("overwrite").partitionBy("ticker").parquet(dir)
-        spark.read.parquet(dir)
+        // read back with the schema it was written with: no inference
+        // job over the footers; the partition column comes last, as
+        // inference puts it
+        spark.read.schema(df.schema).parquet(dir)
       }
     }
     val raw = store("raw", rawBars)
 
     // 2. validation — FAIL raises, WARN proceeds (run_etl_pipeline :1375-1389)
-    val quality = Validator.validate(raw, minBars = cfg.minBars)
+    // the same query collects the date dimension the split stage cuts on
+    val (quality, dates) = Validator.validateWithDates(raw, minBars = cfg.minBars)
     require(quality.status != "FAIL", s"validation failed: $quality")
 
     // 3. preprocessing + features. Input that meets the feature
@@ -87,110 +102,108 @@ object EtlPipeline {
     // the identity on a column without nulls, so the kernel route fills
     // only `open` (its prices are null-free by the contract), and only
     // when the report counted a null at all.
+    //
+    // The split's cut dates are known before the features (the
+    // processed stage keeps the raw stage's rows, so the raw stage's date
+    // dimension is its own), so the split stage's fit rides the feature
+    // stage's own per-ticker aggregate: the z-score moments and the PSI
+    // bin cuts over the TRAINING rows only, the PSI bin counts of both
+    // sides and the row census of every split. It comes back collected
+    // (one row per ticker); the PSI is finished on the driver, and the
+    // moments ride the feature stage's dimension join onto its rows.
+    val split = Splitter.splitOf(dates, cfg.trainFrac, cfg.valFrac)
+    val training = split === "training"
     val prices = Seq("open", "high", "low", "close")
     def fill(cols: Seq[String]) =
       Preprocessor.handleMissing(raw, cols, backfill = cfg.researchMode)
-    val processed =
-      if (quality.nFeatureNulls > 0)
-        store("processed", FeatureBuilder.build(fill(prices), dropNa = false))
-      else
-        store("processed", FeatureBuilder.buildFast(
-          if (quality.nResidualNulls > 0) fill(Seq("open")) else raw,
-          dropNa = false))
-
-    // 4. split + post-split normalization (fit on train ONLY) + drift.
-    // The cut dates are derived once (one bounded collect of the date
-    // dim), so `tagged` is a plain projection of the processed stage;
-    // ONE per-ticker aggregate over the training rows fits both the
-    // z-score moments and the PSI bin cuts, collected as a local
-    // (tickers-row) dimension that the PSI counts and the split write
-    // both broadcast without re-running it (a broadcast collects the
-    // dimension to the driver anyway).
-    val tagged = Splitter.tagChronological(processed, cfg.trainFrac, cfg.valFrac)
-    val fit = {
-      val aggs = Preprocessor.zScoreAggs(cfg.normalizeCols) :+
-        SplitDiagnostics.binCuts("close")
-      val agg = tagged.where(col("split") === "training")
-        .groupBy("ticker").agg(aggs.head, aggs.tail: _*)
-      spark.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), agg.schema)
-    }
-    val normalized = Preprocessor.applyZScore(tagged, fit.drop("cuts"),
-      cfg.normalizeCols)
-    val psi = SplitDiagnostics.psiWithCuts(tagged, fit.select("ticker", "cuts"),
-      "close").collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    // Stage outputs deliberately EXCLUDE the `split` column in every
-    // mode (it is constant within a stage dir); the single-pass path
-    // below drops it structurally (it becomes the renamed-away partition
-    // dir), so the versioned and empty-split paths drop it explicitly —
-    // one schema across modes.
+    val fast = quality.nFeatureNulls == 0
     val splitNames = Seq("training", "validation", "testing")
-    // row census: the versioned path counts through the table lineage
-    // (stage dirs hold superseded snapshot files too); the plain path
-    // OBSERVES the per-split counts on the write itself — no separate
-    // count jobs, and no re-read of the freshly written splits (at
-    // 100 TB that census re-read is a full extra pass over the output)
-    val rows: Map[String, Long] =
-      if (cfg.versionedStages) {
-        // each overwrite already OBSERVED its exact row count into the
-        // commit log (Entry.inserted) — read it back instead of paying a
-        // fourth full aggregation pass over the normalized lineage
-        splitNames.map { sp =>
-          val dir = s"${cfg.outDir}/$sp"
-          stages(sp) = dir
-          val table = new graft.sources.VersionedTable(spark, dir,
-            partitionCol = "ticker")
-          table.overwrite(
-            normalized.where(col("split") === sp).drop("split")): Unit
-          sp -> table.history().last.inserted
-        }.toMap
-      } else {
-        // ONE pass over the processed table writes every split (three
-        // per-split writes scanned it once each — two wasted full-table
-        // scans at 100 TB); the split=X partition dirs are then renamed
-        // into the top-level stage-dir contract (metadata ops, no data
-        // movement). Ticker partitioning is preserved beneath each split.
-        val obs = org.apache.spark.sql.Observation(s"splits_$runId")
-        val tmp = s"${cfg.outDir}/_splits_tmp"
-        val census = splitNames.map(sp =>
-          sum(when(col("split") === sp, 1L).otherwise(0L)).as(sp))
-        normalized
-          .observe(obs, census.head, census.tail: _*)
-          .write.mode("overwrite")
-          .partitionBy("split", "ticker").parquet(tmp)
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        splitNames.foreach { sp =>
-          val src = new org.apache.hadoop.fs.Path(s"$tmp/split=$sp")
-          val dst = new org.apache.hadoop.fs.Path(s"${cfg.outDir}/$sp")
-          fs.delete(dst, true)
-          if (fs.exists(src)) {
-            require(fs.rename(src, dst), s"stage rename failed: $src -> $dst")
-            stages(sp) = dst.toString
-          } else {
-            // degenerate empty split (e.g. tiny input): keep the contract
-            // with an explicit empty write so readers see a schema. The
-            // write must be UNPARTITIONED — a zero-row partitionBy write
-            // emits no parquet footer (only _SUCCESS) and the stage dir
-            // would then die on schema inference, crashing exactly the
-            // case this branch exists to absorb
-            normalized.where(col("split") === sp).drop("split")
-              .write.mode("overwrite").parquet(dst.toString)
-            stages(sp) = dst.toString
-          }
-        }
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        val got = obs.get
-        splitNames.map(sp =>
-          sp -> Option(got.getOrElse(sp, null)).map(_.asInstanceOf[Long])
-            .getOrElse(0L)).toMap
+    val moments = cfg.normalizeCols.flatMap(c => Seq(s"${c}__mean", s"${c}__std"))
+    val fitted = FeatureBuilder.buildFitting(
+      if (!fast) fill(prices) else if (quality.nResidualNulls > 0) fill(Seq("open")) else raw,
+      fast, Preprocessor.zScoreAggs(cfg.normalizeCols, training) ++
+        splitNames.map(sp => count(when(split === sp, 1)).as(s"_n_$sp")) :+
+        SplitDiagnostics.binCountsAgg("close", split,
+          SplitDiagnostics.binCuts("close", rows = training)).as("_psi_counts"),
+      carry = moments)
+    def fitCol(name: String) = fitted.fitSchema.fieldIndex(name)
+    val perTicker = fitted.fit.filter(!_.isNullAt(0))
+    val psi = perTicker.flatMap { r =>
+      Option(r.getSeq[Long](fitCol("_psi_counts")))
+        .flatMap(SplitDiagnostics.psiOfCounts(_)).map(r.getString(0) -> _)
+    }.toMap
+    // the split stages hold every processed row, a null ticker's too
+    val rows = splitNames.map(sp =>
+      sp -> fitted.fit.map(_.getLong(fitCol(s"_n_$sp"))).sum).toMap
+    val features = fitted.features.drop(moments: _*)
+
+    // 4. split + post-split normalization (fit on train ONLY). Stage
+    // outputs deliberately EXCLUDE the `split` column in every mode (it
+    // is constant within a stage dir); the single-pass path below drops
+    // it structurally (it becomes the renamed-away partition dir), so
+    // the versioned and empty-stage paths drop it explicitly — one
+    // schema across modes.
+    if (cfg.versionedStages) {
+      val stats = spark.createDataFrame(java.util.Arrays.asList(perTicker: _*),
+          fitted.fitSchema)
+        .select((col("ticker") +: moments.map(col)): _*)
+      val normalized = Preprocessor.applyZScore(
+        store("processed", features).withColumn("split", split),
+        stats, cfg.normalizeCols)
+      splitNames.foreach { sp =>
+        val dir = s"${cfg.outDir}/$sp"
+        stages(sp) = dir
+        new graft.sources.VersionedTable(spark, dir, partitionCol = "ticker")
+          .overwrite(normalized.where(col("split") === sp).drop("split"))
       }
+    } else {
+      // ONE write emits every stage: each feature row twice, as is under
+      // `_stage=processed` and z-scored under its split's name (two
+      // writes read the features, or their stage, once each — a wasted
+      // full pass at 100 TB); the `_stage` partition dirs are then
+      // renamed into the top-level stage-dir contract (metadata ops, no
+      // data movement). Ticker partitioning is preserved beneath each
+      // stage.
+      require(cfg.normalizeCols.forall(c => features.schema(c).dataType == DoubleType),
+        s"normalizeCols must be double columns: ${cfg.normalizeCols}")
+      val tmp = s"${cfg.outDir}/_stages_tmp"
+      val stage = col("_stage")
+      Preprocessor.zScored(
+          fitted.features.withColumn("_stage", explode(array(lit("processed"), split))),
+          cfg.normalizeCols, rows = stage =!= "processed")
+        .write.mode("overwrite")
+        .partitionBy("_stage", "ticker").parquet(tmp)
+      val fs = new org.apache.hadoop.fs.Path(tmp)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      ("processed" +: splitNames).foreach { st =>
+        val src = new org.apache.hadoop.fs.Path(s"$tmp/_stage=$st")
+        val dst = new org.apache.hadoop.fs.Path(s"${cfg.outDir}/$st")
+        fs.delete(dst, true)
+        if (fs.exists(src))
+          require(fs.rename(src, dst), s"stage rename failed: $src -> $dst")
+        else {
+          // degenerate empty stage (e.g. tiny input): keep the contract
+          // with an explicit empty write so readers see a schema. The
+          // write must be UNPARTITIONED — a zero-row partitionBy write
+          // emits no parquet footer (only _SUCCESS) and the stage dir
+          // would then die on schema inference, crashing exactly the
+          // case this branch exists to absorb
+          spark.createDataFrame(java.util.Collections.emptyList[Row](),
+              StructType(features.schema.map(_.copy(nullable = true))))
+            .write.mode("overwrite").parquet(dst.toString)
+        }
+        stages(st) = dst.toString
+      }
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    }
 
     // run catalog row (checkpoint metadata keyed by the per-run id)
-    val catalog = spark.createDataFrame(Seq(
-      (runId, quality.status, rows.getOrElse("training", 0L),
-        rows.getOrElse("validation", 0L), rows.getOrElse("testing", 0L),
-        System.currentTimeMillis())))
-      .toDF("run_id", "status", "n_train", "n_val", "n_test", "created_at")
+    val catalog = spark.createDataFrame(java.util.List.of(Row(runId, quality.status,
+        rows.getOrElse("training", 0L), rows.getOrElse("validation", 0L),
+        rows.getOrElse("testing", 0L), System.currentTimeMillis())),
+      StructType(Seq("run_id", "status").map(StructField(_, StringType)) ++
+        Seq("n_train", "n_val", "n_test", "created_at")
+          .map(StructField(_, LongType, nullable = false))))
     catalog.write.mode("append").parquet(s"${cfg.outDir}/_run_catalog")
 
     RunResult(runId, quality, rows, psi, stages.toMap)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.exec.PortfolioEngine
@@ -48,10 +49,63 @@ object LiveCycle {
   def barKey(b: Bar): (Long, Int, Double) =
     (b.ts.getTime, b.ts.getNanos, b.close)
 
-  /** Rolling history (ms-epoch, close, high, low) + engine state. */
+  /** Rolling history (ms-epoch, close, high, low) + engine state — the
+    * form [[foldBars]] works on. The state store holds [[StoredCycle]]. */
   final case class CycleState(
       hist: Seq[(Long, Double, Double, Double)],
       engine: EngineState)
+
+  /** [[CycleState]] as the state store holds it: scalar columns, and the
+    * history and each side's open lots packed into binary columns
+    * ([[packRows]], [[packLots]]). A Seq of tuples, a List of case classes
+    * and even a primitive array decode through a collection loop
+    * (MapObjects) whose generated code names fresh lambda variables on
+    * every micro-batch, so every batch compiled a new state decoder; a
+    * binary column decodes without one. A checkpoint written by the
+    * earlier (Seq/List-of-structs) state schema cannot be restarted. */
+  final case class StoredCycle(hist: Array[Byte], cash: Double, nextId: Long,
+      lots: Array[Byte], shortLots: Array[Byte], entryPrice: Double,
+      entryAtr: Double, stopLevel: Double, targetLevel: Double, entryBar: Int,
+      barIdx: Int)
+
+  /** (long, double, double, double) rows, 32 bytes each, bits exact. */
+  private def packRows(rows: Seq[(Long, Double, Double, Double)]): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(rows.size * 32)
+    rows.foreach { case (k, x, y, z) => b.putLong(k).putDouble(x).putDouble(y).putDouble(z) }
+    b.array
+  }
+
+  private def unpackRows(bytes: Array[Byte]): Vector[(Long, Double, Double, Double)] = {
+    val b = java.nio.ByteBuffer.wrap(bytes)
+    Vector.fill(bytes.length / 32)((b.getLong, b.getDouble, b.getDouble, b.getDouble))
+  }
+
+  /** Open lots, 29 bytes each, bits exact. */
+  private def packLots(ls: List[PortfolioEngine.Lot]): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(ls.size * 29)
+    ls.foreach { l =>
+      b.putLong(l.tradeId).putDouble(l.qty).putDouble(l.price).putInt(l.barIdx)
+        .put(if (l.isSynthetic) 1.toByte else 0.toByte)
+    }
+    b.array
+  }
+
+  private def unpackLots(bytes: Array[Byte]): List[PortfolioEngine.Lot] = {
+    val b = java.nio.ByteBuffer.wrap(bytes)
+    List.fill(bytes.length / 29)(PortfolioEngine.Lot(b.getLong, b.getDouble,
+      b.getDouble, b.getInt, b.get != 0))
+  }
+
+  private def store(st: CycleState): StoredCycle = {
+    val e = st.engine
+    StoredCycle(packRows(st.hist), e.cash, e.nextId, packLots(e.lots),
+      packLots(e.shortLots), e.entryPrice, e.entryAtr, e.stopLevel,
+      e.targetLevel, e.entryBar, e.barIdx)
+  }
+
+  private def load(s: StoredCycle): CycleState = CycleState(unpackRows(s.hist),
+    EngineState(s.cash, s.nextId, unpackLots(s.lots), unpackLots(s.shortLots),
+      s.entryPrice, s.entryAtr, s.stopLevel, s.targetLevel, s.entryBar, s.barIdx))
 
   /** bars (streaming) → fills. `minBars`: trade only once a ticker has
     * this much history (the batch loop's warmup: its first cycle sees
@@ -115,26 +169,25 @@ object LiveCycle {
     val effCfg = riskMode.fold(engineCfg)(_.engine(engineCfg))
     bars
       .groupByKey(_.ticker)
-      .flatMapGroupsWithState[CycleState, ExecRow](
+      .flatMapGroupsWithState[StoredCycle, ExecRow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (ticker: String, rows: Iterator[Bar], state: GroupState[CycleState]) =>
-          val st0 = state.getOption.getOrElse(
+        (ticker: String, rows: Iterator[Bar], state: GroupState[StoredCycle]) =>
+          val st0 = state.getOption.map(load).getOrElse(
             CycleState(Vector.empty, EngineState.init(effCfg)))
           val (st, out) = foldBars(ticker, rows.toArray.sortBy(barKey).toSeq,
             st0, minBars, histCap, fcCfg, sigCfg, engineCfg, gateCfg,
             riskMode, effCfg)
-          state.update(st)
+          state.update(store(st))
           out.iterator
       }
   }
 
-  /** [[CycleState]] plus the reorder buffer of the late-tolerant
+  /** [[StoredCycle]] plus the reorder buffer of the late-tolerant
     * variant — one state object so the whole cycle stays a single
-    * stateful operator (see [[LivePortfolio.fillsOrdered]]). */
-  final case class OrderedCycleState(
-      buffered: Seq[Bar],
-      hist: Seq[(Long, Double, Double, Double)],
-      engine: EngineState)
+    * stateful operator (see [[LivePortfolio.fillsOrdered]]). The buffered
+    * bars are the group's own, so they are packed without their ticker:
+    * (epoch microseconds, close, high, low) rows ([[packRows]]). */
+  final case class OrderedCycleState(buffered: Array[Byte], cycle: StoredCycle)
 
   /** [[fills]] with the ordering contract enforced in code: bars buffer
     * per ticker and reach the cycle only in full event-time order once
@@ -159,14 +212,18 @@ object LiveCycle {
       .flatMapGroupsWithState[OrderedCycleState, ExecRow](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (ticker: String, rows: Iterator[Bar], state: GroupState[OrderedCycleState]) =>
-          val st0 = state.getOption.getOrElse(
-            OrderedCycleState(Seq.empty, Vector.empty, EngineState.init(effCfg)))
+          val stored = state.getOption
+          val buffered = stored.toSeq.flatMap(s => unpackRows(s.buffered)).map {
+            case (us, c, h, l) => Bar(ticker, DateTimeUtils.toJavaTimestamp(us), c, h, l)
+          }
           val wm = state.getCurrentWatermarkMs()
-          val (due, keep) = (st0.buffered ++ rows).partition(_.ts.getTime <= wm)
+          val (due, keep) = (buffered ++ rows).partition(_.ts.getTime <= wm)
           val (st, out) = foldBars(ticker, due.sortBy(barKey),
-            CycleState(st0.hist, st0.engine), minBars, histCap, fcCfg,
-            sigCfg, engineCfg, gateCfg, riskMode, effCfg)
-          state.update(OrderedCycleState(keep, st.hist, st.engine))
+            stored.map(b => load(b.cycle))
+              .getOrElse(CycleState(Vector.empty, EngineState.init(effCfg))),
+            minBars, histCap, fcCfg, sigCfg, engineCfg, gateCfg, riskMode, effCfg)
+          state.update(OrderedCycleState(packRows(keep.map(b =>
+            (DateTimeUtils.fromJavaTimestamp(b.ts), b.close, b.high, b.low))), store(st)))
           // keep's timestamps are all > wm (partition above): legal
           // future timeout, fires when the watermark reaches it
           if (keep.nonEmpty) state.setTimeoutTimestamp(keep.map(_.ts.getTime).min)

@@ -66,7 +66,7 @@ object QueryProfile {
       catch { case t: Throwable => System.err.println(s"[profile] serve warmup FAILED: $t") }
 
     println(f"${"query"}%-34s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%7s " +
-      f"${"tasks"}%6s ${"tasktime_s"}%10s ${"shufMB"}%7s")
+      f"${"tasks"}%6s ${"tasktime_s"}%10s ${"shufMB"}%7s ${"compiles"}%8s")
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       def once(): Double = GraftSession.clock {
@@ -84,7 +84,8 @@ object QueryProfile {
         println(f"$name%-34s $best%7.2f ${listener.jobs / perRep}%5.1f " +
           f"${listener.stages / perRep}%7.1f ${listener.tasks / perRep}%6.0f " +
           f"${listener.taskTimeMs / perRep / 1e3}%10.2f " +
-          f"${listener.shuffleWriteBytes / perRep / 1e6}%7.1f")
+          f"${listener.shuffleWriteBytes / perRep / 1e6}%7.1f " +
+          f"${listener.compiles / perRep}%8.1f")
         while (!listener.stageLog.isEmpty) println(listener.stageLog.poll())
       } catch {
         case t: Throwable => println(f"$name%-34s FAILED: $t")

@@ -15,6 +15,21 @@ class GraftSessionSpec extends AnyFunSuite with TestSpark {
     }
   }
 
+  test("Counts.compiles counts the generated classes compiled since reset") {
+    val counts = new GraftSession.Counts
+    // a literal inlined into the generated code: a class no run compiled yet
+    val q = spark.range(3).selectExpr(s"id * ${System.nanoTime()}L + 7 AS v")
+    counts.reset()
+    assert(counts.compiles === 0L)
+    q.collect()
+    assert(counts.compiles >= 1L, counts.toString)
+    assert(counts.toString.contains(s"compiles=${counts.compiles}"))
+    // the same plan again is served from the codegen cache
+    counts.reset()
+    q.collect()
+    assert(counts.compiles === 0L, counts.toString)
+  }
+
   test("the test session has the local policy: UTC, 4 shuffle partitions, AQE on") {
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")

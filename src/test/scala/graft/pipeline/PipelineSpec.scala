@@ -108,17 +108,18 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
       case n => Seq(n)
     }.flatten
 
-    /** The executed plan of the feature stage: the processed-stage write. */
+    /** The executed plan of the feature stage: the one write that emits
+      * the processed stage and the split stages. */
     def featureStage(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
       val hits = plans.map(nodes).filter(_.exists {
         case w: DataWritingCommandExec => w.cmd match {
           case i: InsertIntoHadoopFsRelationCommand =>
-            i.outputPath.getName == "processed"
+            i.outputPath.getName == "_stages_tmp"
           case _ => false
         }
         case _ => false
       })
-      assert(hits.size === 1, "one processed-stage write")
+      assert(hits.size === 1, "one stage write")
       hits.head
     }
 
@@ -205,6 +206,46 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
           .map(_.toString).sorted.toSeq, sp)
     }
     assert(spark.read.parquet(s"$out/testing").where(col("date").isNull).count() === 1L)
+  }
+
+  test("a run fits Spark's codegen cache: at most 80 entries from an empty cache, 14 jobs") {
+    // Spark keeps compiled classes in one JVM-wide cache of 100 entries
+    // in 4 LRU segments of 25, keyed by (class loader, source): a class
+    // compiled on the driver and again in a task takes two entries. A run
+    // whose entries fit every segment compiles nothing when it runs
+    // again; one that needs more than the cache holds recompiles most of
+    // them every run. Which segment an entry lands in follows the class
+    // loaders' identity hashes, so it varies between JVMs, and at ~74
+    // entries one segment overflows in roughly one JVM in eight; the
+    // footprint itself does not vary. The warm bound allows one
+    // overflowing segment and no more.
+    val sc = spark.sparkContext
+    val counts = new GraftSession.Counts
+    sc.addSparkListener(counts)
+    try {
+      val out = Files.createTempDirectory("graft_etl_warm").toString
+      emptyCodegenCache()
+      counts.reset()
+      EtlPipeline.run(spark, cleanBars, EtlPipeline.Config(outDir = out))
+      GraftSession.drain(sc)
+      val cold = counts.toString
+      assert(counts.compiles <= 80L, s"cold run: $cold")
+      counts.reset()
+      EtlPipeline.run(spark, cleanBars, EtlPipeline.Config(outDir = out))
+      GraftSession.drain(sc)
+      assert(counts.compiles <= 40L, s"warm run: $counts (cold run: $cold)")
+      assert(counts.jobs <= 14, s"warm run: $counts")
+    } finally sc.removeSparkListener(counts)
+  }
+
+  /** Empties Spark's codegen cache, so the next run's compiles count
+    * every cache entry it needs. */
+  private def emptyCodegenCache(): Unit = {
+    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val field = gen.getClass.getDeclaredField("cache")
+    field.setAccessible(true)
+    val cache = field.get(gen)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
   }
 
   test("a run leaves no persisted kernel blocks: persistent RDDs and the cache manager are unchanged") {

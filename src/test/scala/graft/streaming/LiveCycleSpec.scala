@@ -70,6 +70,31 @@ class LiveCycleSpec extends AnyFunSuite with TestSpark {
     } finally q.stop()
   }
 
+  test("a warm micro-batch of the live cycle compiles no generated class") {
+    val (_, minBars, src) = fixture
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[LiveCycle.Bar]
+    val q = LiveCycle.fills(input.toDS(), minBars,
+        sigCfg = sigCfg, gateCfg = gateCfg, riskMode = mode)
+      .writeStream.format("noop").outputMode("append").start()
+    val counts = new graft.GraftSession.Counts
+    try {
+      // the history in one batch, then one batch per bar-date: the first
+      // two read and write the state (its decoder is compiled there), the
+      // last two are warm
+      val byDate = src.groupBy(_.ts.getTime).toSeq.sortBy(_._1).map(_._2.toSeq)
+      val (history, live) = byDate.splitAt(byDate.size - 4)
+      input.addData(history.flatten)
+      q.processAllAvailable()
+      live.take(2).foreach { b => input.addData(b); q.processAllAvailable() }
+      counts.reset()
+      live.drop(2).foreach { b => input.addData(b); q.processAllAvailable() }
+      assert(counts.compiles === 0L, s"warm micro-batches: $counts")
+    } finally q.stop()
+  }
+
   test("checkpoint restart: a NEW query resumes per-ticker cycle state and converges the sink") {
     val (batchFills, minBars, src) = fixture
     val spark2 = spark
