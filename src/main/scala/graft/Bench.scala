@@ -189,37 +189,36 @@ object Bench {
       d
     }
 
-    // CC soak (phase `cc`): ~1M-edge synthetic graph — 100k
-    // dense 6-node clusters + 16k 32-node chains — timing min-label
-    // propagation (O(diameter) rounds: ~33 here) against the star
-    // contraction (O(log n) rounds + bounded local finish) on the SAME
-    // edges, with label parity REQUIRED after the clocks stop. Not
-    // min-of-3: each algorithm runs tens of jobs, so rep noise
-    // amortizes internally, and 3 reps of a ~30 s propagation would
-    // dominate the whole bench budget (the soakPhase stabilizer below
-    // adds at most one re-run when the phase lands under 60 s).
+    // CC soak (phase `cc`): ~1M-edge synthetic graph — 100k dense
+    // 6-node clusters + 16k 32-node chains — past
+    // ConnectedComponents.run's local-finish bound, so it times the star
+    // contraction's distributed rounds and their bounded local finish.
+    // The labels are checked against the generator's closed form after
+    // the clock stops. Not min-of-3: the arm runs tens of jobs, so rep
+    // noise amortizes internally (the soakPhase stabilizer below adds
+    // at most one re-run when the phase lands under 60 s).
     def ccSoakRun(): Seq[(String, Double)] = {
         import graft.operators.ConnectedComponents
+        import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum}
         val edges = ConnectedComponents.soakEdges(spark)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         edges.count() // materialize the generator outside the clocks
-        var stars: org.apache.spark.sql.DataFrame = null
-        var rounds = -1
-        val tStars = soakArm("cc_soak_stars_1m") {
-          val (df, r) = ConnectedComponents.runStarsCounted(edges)
-          stars = df; rounds = r; stars.count(): Unit
+        var labels: org.apache.spark.sql.DataFrame = null
+        val t = soakArm("cc_soak_1m") {
+          labels = ConnectedComponents.run(edges); labels.count(): Unit
         }
-        var prop: org.apache.spark.sql.DataFrame = null
-        val tProp = soakArm("cc_soak_prop_1m") {
-          prop = ConnectedComponents.run(edges); prop.count(): Unit
-        }
-        require(stars.exceptAll(prop).isEmpty && prop.exceptAll(stars).isEmpty,
-          "cc soak: star-contraction labels diverged from min-propagation")
-        System.err.println(
-          f"[bench] cc_soak: stars=$tStars%.2fs ($rounds%d rounds + local finish), " +
-            f"prop=$tProp%.2fs")
+        // closed form of soakEdges' defaults: 600,000 cluster nodes in
+        // 100,000 components labeled 6k, and 512,000 chain nodes in
+        // 16,000 components labeled 10,000,000 + 32c
+        val r = labels.agg(count(lit(1)), countDistinct(col("component")),
+          sum(col("component").cast("decimal(38,0)"))).head()
+        require(r.getLong(0) == 1112000L && r.getLong(1) == 116000L &&
+          r.getDecimal(2).longValueExact == 5431062008000L,
+          s"cc soak: (rows, components, component sum) = $r, want " +
+            "(1112000, 116000, 5431062008000)")
+        System.err.println(f"[bench] cc_soak: $t%.2fs, closed form OK")
         edges.unpersist()
-        Seq("cc_soak_stars_1m" -> tStars, "cc_soak_prop_1m" -> tProp)
+        Seq("cc_soak_1m" -> t)
       }
 
     // Streaming throughput soak (phase `ss`): the sf docs in
@@ -533,8 +532,8 @@ object Bench {
       "short bench keys must stay unique")
     val qs = results.map { case (k, v) => "\"" + shortName(k) + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    // headline total = the repeatable query workload; the cc_soak pair is
-    // a one-shot scale experiment (~70 s of deliberate O(diameter) work)
+    // headline total = the repeatable query workload; the cc soak is a
+    // one-shot scale experiment (tens of seconds of distributed rounds)
     // and would swamp round-over-round total comparisons. calib measures
     // the BOX, not the engine — report it, don't sum it.
     val headline = results

@@ -26,11 +26,13 @@ import graft.sources.VersionedTable
   * represented by its label alone. A new batch therefore reduces to a
   * graph over component REPRESENTATIVES — each new pair becomes an edge
   * between its endpoints' current labels — and connected components of
-  * that reduced graph (|edges| ≤ |batch|, solved by
-  * [[ConnectedComponents.runStars]], which drains graphs this small to
-  * a driver union-find) yield the merge decisions. Min-over-merged-
-  * labels equals min-over-merged-components BECAUSE labels are minima —
-  * canonicality is what makes the reduction lossless.
+  * that reduced graph (|edges| ≤ |batch|: one bounded collect into
+  * [[ConnectedComponents.minRootLabels]], the driver union-find behind
+  * [[ConnectedComponents.run]]'s local finish; a bulk backfill past the
+  * bound goes through [[ConnectedComponents.run]] itself) yield the
+  * merge decisions. Min-over-merged-labels equals
+  * min-over-merged-components BECAUSE labels are minima — canonicality
+  * is what makes the reduction lossless.
   *
   * Scale design (100 TB component table, small continuous batches):
   *  - The only reads of the big table are (a) one key-probe join of the
@@ -58,15 +60,15 @@ object IncrementalCC {
     * table. `comps` must satisfy the canonical-minimum invariant (an
     * empty frame is fine); passing a non-canonical table would break
     * the representative reduction, so labels are NOT re-derived here.
-    */
-  /** `maxLocalEdges`: reduced graphs at or below this take the bounded
-    * collect → driver union-find fast path; larger ones (a bulk
-    * backfill) go through the distributed star contraction. */
+    * A pair with a null endpoint is not an edge and is dropped, as in
+    * [[ConnectedComponents.run]]. `maxLocalEdges`: reduced graphs at or
+    * below this take the bounded collect → driver union-find fast path;
+    * larger ones (a bulk backfill) go through
+    * [[ConnectedComponents.run]]. */
   def step(comps: DataFrame, pairs: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
       maxLocalEdges: Int = 100000): Step = {
-    val e = pairs.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e = ConnectedComponents.edgeSet(pairs, srcCol, dstCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val cmp = comps.select(col("node").cast("long").as("node"),
       col("component").cast("long").as("component"))
@@ -95,19 +97,20 @@ object IncrementalCC {
     // A micro-batch-sized reduced graph (the normal continuous-ingest
     // case) takes ONE bounded collect into a driver union-find — the
     // distributed star contraction would spend ~8 fixed-cost scheduled
-    // jobs on a graph of a few hundred edges. Batches past the bound
-    // (a bulk backfill) fall back to runStars, whose own hybrid local
-    // finish takes over once contraction shrinks the edge set.
+    // jobs on a graph of a few hundred edges. Only non-roots relabel.
+    // Batches past the bound (a bulk backfill) fall back to
+    // ConnectedComponents.run, whose own local finish takes over once
+    // its contraction shrinks the edge set.
     val s = pairs.sparkSession
     import s.implicits._
     val redRows = red.limit(maxLocalEdges + 1)
       .as[(Long, Long)].collect()
     val relabel = broadcast(
       if (redRows.length <= maxLocalEdges)
-        ConnectedComponents.minRootStars(redRows).toSeq
-          .toDF("old_lab", "new_lab")
+        ConnectedComponents.minRootLabels(redRows).filter(p => p._1 != p._2)
+          .toSeq.toDF("old_lab", "new_lab")
       else
-        ConnectedComponents.runStars(red)
+        ConnectedComponents.run(red)
           .where(col("node") =!= col("component"))
           .select(col("node").as("old_lab"), col("component").as("new_lab")))
 

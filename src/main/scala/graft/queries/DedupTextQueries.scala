@@ -206,26 +206,26 @@ object DedupTextQueries extends QueryModule {
     }),
 
     // Dedup CLUSTERS from the verified near-dup pairs: connected
-    // components by min-label propagation (operators/ConnectedComponents)
-    // — the step a production dedup pipeline runs after pair generation,
-    // so each group keeps one canonical doc (doc_id == cluster_id) and
-    // drops the rest. Oracled against a DuckDB recursive reachability
-    // walk over the same pair set.
+    // components (operators/ConnectedComponents: a bounded driver
+    // union-find, or the large-star/small-star contraction past the
+    // bound) — the step a production dedup pipeline runs after pair
+    // generation, so each group keeps one canonical doc
+    // (doc_id == cluster_id) and drops the rest. Oracled against a
+    // DuckDB recursive reachability walk over the same pair set.
     "q95_dedup_clusters" -> ((s, dir) => {
       val pairs = queries("q90_neardup_lsh_verify")(s, dir)
       graft.operators.ConnectedComponents.run(pairs, "da", "db")
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
     }),
 
-    // q95's clusters through the ALTERNATING large-star/small-star
-    // contraction (operators/ConnectedComponents.runStars) instead of
-    // min-label propagation — the variant a 100 TB run picks when the
-    // pair graph may contain adversarial long chains (O(log² n) rounds
-    // vs O(diameter)). Same output contract, same recursive oracle:
-    // both algorithms must land on identical canonical clusters.
+    // q95's clusters under the name of the large-star/small-star
+    // contraction, which ConnectedComponents.run runs for every graph
+    // past its local-finish bound (O(log² n) rounds on adversarial long
+    // chains, not O(diameter)). A declared query with its own artifacts
+    // and oracle: same call and same recursive oracle as q95.
     "q112_dedup_clusters_stars" -> ((s, dir) => {
       val pairs = queries("q90_neardup_lsh_verify")(s, dir)
-      graft.operators.ConnectedComponents.runStars(pairs, "da", "db")
+      graft.operators.ConnectedComponents.run(pairs, "da", "db")
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
     }),
 
@@ -744,7 +744,7 @@ object DedupTextQueries extends QueryModule {
 
     // TextRank (Mihalcea & Tarau 2004) — weighted PageRank over the
     // word co-occurrence graph: the iterative message-passing operator
-    // class beyond CC's label propagation (q95/q112), producing the
+    // class beyond CC's star contraction (q95/q112), producing the
     // corpus-level keyword salience every extractive summarizer /
     // keyword tagger consumes. (PR over the near-dup PAIR graph is
     // uninformative here — dup clusters are cliques, and PR on a
@@ -1089,8 +1089,8 @@ object DedupTextQueries extends QueryModule {
          |  SELECT e.dst, w.label FROM walk w JOIN edges e ON e.src = w.node)
          |SELECT node AS doc_id, MIN(label) AS cluster_id
          |FROM walk GROUP BY node""".stripMargin,
-    // identical oracle to q95 on purpose: the star contraction and
-    // min-label propagation must produce the same canonical clusters
+    // identical oracle to q95 on purpose: both run the same engine and
+    // must produce the same canonical clusters
     "q112_dedup_clusters_stars" ->
       s"""WITH RECURSIVE $verifiedPairsSql,
          |edges AS (

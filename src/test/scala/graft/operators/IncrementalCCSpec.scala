@@ -96,6 +96,21 @@ class IncrementalCCSpec extends AnyFunSuite with TestSpark {
     assert(compsOf(fresh.delta) === Map(30L -> 30L, 31L -> 30L))
   }
 
+  test("null-endpoint pairs are not edges: the delta from an empty table equals a batch run") {
+    val s = spark; import s.implicits._
+    // node 7 appears only beside a null: batch run labels neither it nor
+    // the null, so the fold must not add a row for either
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(7L), None), (None, Some(3L)), (None, None),
+      (Some(1L), Some(2L)), (Some(2L), Some(3L))).toDF("src", "dst")
+    val empty = Seq.empty[(Long, Long)].toDF("node", "component")
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (Option(r.get(0)), Option(r.get(1)))).toSet
+    val want = rows(ConnectedComponents.run(pairs))
+    assert(want === Set((Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(3L), Some(1L))))
+    assert(rows(IncrementalCC.step(empty, pairs).delta) === want)
+  }
+
   test("real pairs in shards: incremental table equals batch q95 clusters") {
     val s = spark; import s.implicits._
     val got = graft.queries.DedupTextQueries

@@ -1,15 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
-  ShuffleQueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{GraftSession, TestSpark}
+import graft.TestSpark
 import graft.operators.ConnectedComponents
 
 class ConnectedComponentsSpec extends AnyFunSuite with TestSpark {
@@ -17,37 +10,46 @@ class ConnectedComponentsSpec extends AnyFunSuite with TestSpark {
   test("min-label propagation: chain, triangle, and singleton-free components") {
     val spark2 = spark
     import spark2.implicits._
-    // component A: chain 1-2-3-4 (diameter 3 — exercises multi-round
-    // propagation); component B: triangle 10-11-12; component C: pair 20-21
+    // component A: chain 1-2-3-4 (diameter 3); component B: triangle
+    // 10-11-12; component C: pair 20-21 — every node labeled by its
+    // component's minimum, on the local finish and the distributed rounds
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L),
       (10L, 11L), (11L, 12L), (12L, 10L), (21L, 20L)).toDF("src", "dst")
-    val got = ConnectedComponents.run(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+    Seq(100000L, 0L).foreach { bound =>
+      val got = ConnectedComponents.run(edges, localFinishEdges = bound).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L),
+        s"localFinishEdges = $bound")
+    }
   }
 
   test("run(): hybrid local finish equals pure distributed propagation") {
     val spark2 = spark
     import spark2.implicits._
-    // the r19 local-finish seam: a sub-threshold graph takes the driver
-    // union-find; localFinishEdges = 0 forces the old distributed rounds.
-    // Both paths must label identically — including a self-loop-only
-    // singleton and a diameter-4 chain (multi-round propagation).
+    // the local-finish seam: a sub-threshold graph takes the driver
+    // union-find; localFinishEdges = 50 runs distributed star rounds
+    // until the contracted edge set fits the driver; 0 forces every
+    // round distributed. All three must label identically — including a
+    // self-loop-only singleton and a diameter-4 chain.
     val rng = new scala.util.Random(23)
     val rand = ((1 to 400).map(_ =>
       (rng.nextInt(300).toLong, rng.nextInt(300).toLong))
       ++ Seq((900L, 900L), (910L, 911L), (911L, 912L), (912L, 913L),
         (913L, 914L))).toDF("src", "dst")
-    val viaLocal = ConnectedComponents.run(rand).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaDistributed = ConnectedComponents.run(rand, localFinishEdges = 0L)
+    def labels(bound: Long) = ConnectedComponents.run(rand, localFinishEdges = bound)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaLocal === viaDistributed)
+    val viaLocal = labels(100000L)
+    assert(labels(50L) === viaLocal, "localFinishEdges = 50")
+    assert(labels(0L) === viaLocal, "localFinishEdges = 0")
     assert(viaLocal(914L) === 910L && viaLocal(900L) === 900L)
+    // self-loops only: the distributed rounds find no star edge at all
+    val loops = Seq((5L, 5L), (6L, 6L)).toDF("src", "dst")
+    assert(ConnectedComponents.run(loops, localFinishEdges = 0L).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap === Map(5L -> 5L, 6L -> 6L))
   }
 
-  test("null endpoints: run and runStars agree on both paths and never throw") {
+  test("null endpoints: run drops them on both paths") {
     val spark2 = spark
     import spark2.implicits._
     // an edge with a null endpoint is not an edge: node 7 appears only
@@ -64,76 +66,56 @@ class ConnectedComponentsSpec extends AnyFunSuite with TestSpark {
       .map { case (n, c) => (Some(n), Some(c)) }
     Seq(100000L, 0L).foreach { bound =>
       assert(labels(ConnectedComponents.run(edges, localFinishEdges = bound))
-        === expected, s"run, localFinishEdges = $bound")
-      assert(labels(ConnectedComponents.runStars(edges, localFinishEdges = bound))
-        === expected, s"runStars, localFinishEdges = $bound")
+        === expected, s"localFinishEdges = $bound")
     }
   }
 
-  test("large-star/small-star: same labels as min-propagation, O(log n) rounds on a 10k path") {
+  test("large-star/small-star: one component within 3*ceil(log2 n) rounds on a 10k path, ids in order and shuffled") {
     val spark2 = spark
     import spark2.implicits._
-    // same fixture as the min-propagation test (incl. a self-loop
-    // singleton, which the star transforms must not drop)
-    val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L),
-      (10L, 11L), (11L, 12L), (12L, 10L), (21L, 20L), (30L, 30L)).toDF("src", "dst")
-    val got = ConnectedComponents.runStars(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L, 30L -> 30L))
-
-    // random graph: labels agree with run() exactly, on BOTH the pure
-    // distributed path (localFinishEdges = 0) and the hybrid that runs
-    // distributed rounds until the contracted edge set fits the driver
-    // threshold (here forced low so real rounds precede the local finish)
-    val rng = new scala.util.Random(17)
-    val rand = (1 to 400).map(_ => (rng.nextInt(300).toLong, rng.nextInt(300).toLong))
-      .filter(p => p._1 != p._2).toDF("src", "dst")
-    val viaStars = ConnectedComponents.runStars(rand, localFinishEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = ConnectedComponents.run(rand).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStars === viaProp)
-    val (hybridLabels, hybridRounds) =
-      ConnectedComponents.runStarsCounted(rand, localFinishEdges = 50L)
-    val viaHybrid = hybridLabels.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaHybrid === viaProp)
-    assert(hybridRounds >= 1, "threshold below |E| must run distributed rounds first")
-
-    // adversarial diameter: a 10,000-node path. Min-propagation would
-    // need ~10,000 rounds (diameter); the star contraction must finish
-    // in O(log n) — allow 3·log2(n) ≈ 40 (paper bound is O(log² n),
-    // observed ≈log n; the margin covers the +1 stall-detection round).
-    // localFinishEdges = 0 forces every round distributed: the bound is
-    // about the ALGORITHM, not the driver shortcut.
+    // adversarial diameter: a 10,000-node path. Min-label propagation
+    // needs ~10,000 rounds (diameter); the star contraction must finish
+    // within maxIter = 3·⌈log2 n⌉ = 42 rounds (paper bound O(log² n),
+    // observed ≈log n; the margin covers the stall-detection round),
+    // or run's require fails. localFinishEdges = 0 forces every round
+    // distributed: the bound is about the ALGORITHM, not the driver
+    // shortcut. Shuffled ids take away the in-order path's head start
+    // (every node's min neighbor is already its predecessor).
     val n = 10000
-    val path = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
-    val (labels, rounds) =
-      ConnectedComponents.runStarsCounted(path, localFinishEdges = 0L)
-    val bound = (3 * math.ceil(math.log(n) / math.log(2))).toInt
-    assert(rounds <= bound, s"$rounds rounds > $bound on a $n-node path")
-    val lab = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(lab.length === n && lab.forall(_._2 === 1L), "one component rooted at 1")
+    val maxIter = (3 * math.ceil(math.log(n) / math.log(2))).toInt
+    val perm = new scala.util.Random(41).shuffle((1 to n).map(_.toLong).toVector)
+    Seq("in order" -> ((i: Int) => i.toLong), "shuffled" -> ((i: Int) => perm(i - 1)))
+      .foreach { case (what, id) =>
+        val path = (1 until n).map(i => (id(i), id(i + 1))).toDF("src", "dst")
+        val lab = ConnectedComponents.run(path, maxIter = maxIter, localFinishEdges = 0L)
+          .collect().map(r => r.getLong(0) -> r.getLong(1))
+        assert(lab.length === n && lab.map(_._1).toSet.size === n, s"$what: one label per node")
+        assert(lab.forall(_._2 === 1L), s"$what: one component rooted at 1")
+      }
   }
 
-  test("soak graph: clusters + chains, parity between propagation and stars, O(log n) rounds") {
+  test("soak graph: clusters + chains match the closed form on both paths") {
     // the bench's 1M-edge soak shape at 1/50 scale: 2k dense clusters +
-    // 300 chains of 32 nodes. Expected components are known in closed
-    // form, so this checks the GENERATOR as well as both algorithms.
-    val edges = ConnectedComponents.soakEdges(spark,
-      clusters = 2000L, chains = 300L, chainLen = 32L)
-    assert(edges.count() === 2000L * 5 + 300L * 31)
-    val prop = ConnectedComponents.run(edges)
-    val (stars, rounds) = ConnectedComponents.runStarsCounted(edges)
-    assert(stars.exceptAll(prop).isEmpty && prop.exceptAll(stars).isEmpty,
-      "label parity violated on the soak shape")
-    // 2000 cluster components + 300 chain components
-    assert(prop.select("component").distinct().count() === 2300L)
-    // chain diameter is 31; stars must stay logarithmic (+ local finish)
-    val n = 2000L * 6 + 300L * 32
-    assert(rounds <= 3 * math.ceil(math.log(n.toDouble) / math.log(2)).toInt,
-      s"$rounds rounds on the soak shape")
+    // 300 chains of 32 nodes. Every node's component is known in closed
+    // form (cluster k labeled 6k, chain c labeled 10,000,000 + 32c), so
+    // this checks the GENERATOR as well as both regimes of run.
+    val (clusters, chains, chainLen) = (2000L, 300L, 32L)
+    val edges = ConnectedComponents.soakEdges(spark, clusters, chains, chainLen)
+    assert(edges.count() === clusters * 5 + chains * (chainLen - 1))
+    val chainBase = 10000000L
+    def expected(node: Long): Long =
+      if (node < chainBase) node - node % 6
+      else chainBase + (node - chainBase) / chainLen * chainLen
+    Seq(100000L, 0L).foreach { bound =>
+      val lab = ConnectedComponents.run(edges, localFinishEdges = bound)
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(lab.length === clusters * 6 + chains * chainLen, s"localFinishEdges = $bound")
+      assert(lab.map(_._1).toSet.size === lab.length, s"localFinishEdges = $bound")
+      lab.foreach { case (node, c) =>
+        assert(c === expected(node), s"node $node, localFinishEdges = $bound")
+      }
+      assert(lab.map(_._2).toSet.size === clusters + chains)
+    }
   }
 
   test("q95 clusters: pair endpoints share a cluster, the canonical doc is the min id") {
@@ -153,49 +135,5 @@ class ConnectedComponentsSpec extends AnyFunSuite with TestSpark {
     }
     // exactly the pair-graph nodes are clustered (singletons excluded)
     assert(clusters.keySet === pairs.flatMap(p => Seq(p._1, p._2)).toSet)
-  }
-
-  test("run(): every distributed round joins the edge cache with no Exchange on its side") {
-    val spark2 = spark
-    import spark2.implicits._
-    // 50 chains of 8 nodes: 7+ propagation rounds. Each round's join must
-    // read the src-partitioned, sorted edge cache as it is (the shape of
-    // plans/r20/cc_prop_round_after.txt nodes 21-29).
-    val edges = (1L until 400L).filter(_ % 8 != 0).map(i => (i, i + 1)).toDF("src", "dst")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan): Unit
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    // a broadcast join would hide the sort-merge shape the cache serves
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    spark.listenerManager.register(listener)
-    try {
-      ConnectedComponents.run(edges, localFinishEdges = 0L)
-      GraftSession.drain(spark.sparkContext)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.set(key, prev)
-    }
-    // executed nodes, through AQE stages; a cache scan is a leaf, so the
-    // walk never enters the plan that built the cached relation
-    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case s: QueryStageExec => walk(s.plan)
-      case o => o.children.flatMap(walk)
-    })
-    import scala.jdk.CollectionConverters._
-    val joins = plans.asScala.toSeq.flatMap(walk).collect { case j: SortMergeJoinExec => j }
-    assert(joins.size >= 7, s"expected one sort-merge join per round, got ${joins.size}")
-    joins.foreach { j =>
-      val edgeSide = walk(j.left)
-      assert(!edgeSide.exists(p => p.isInstanceOf[ShuffleExchangeLike] ||
-        p.isInstanceOf[ShuffleQueryStageExec]), s"Exchange on the edge side:\n$j")
-      assert(edgeSide.exists(_.isInstanceOf[InMemoryTableScanExec]),
-        s"round join does not read the edge cache:\n$j")
-    }
   }
 }
