@@ -26,6 +26,29 @@ package graft
 object Bench {
   val soakLabels: Seq[String] = Seq("cc", "ss", "lc", "fs")
 
+  // The compact (parsed) line's key set must be STABLE round over
+  // round (VERDICT r19 Next #2): a pure top-N print churns with the
+  // ranking, and the driver's PERF comparator then reports the churn
+  // as dropped_from_bench (8 phantom drops in r19 — all still passing
+  // the oracle, just below the print cutoff). The documented stable
+  // set = every key that has EVER appeared in a parsed tail (r18/r19)
+  // plus the fixed-name soak/calib/sketch entries; the top-30 of the
+  // current run is ADDED on top, so a newly-slow query still surfaces.
+  // Additions-only: nothing that printed before can disappear while
+  // the query itself exists.
+  private[graft] val pinnedKeys: Set[String] = Set(
+    // qNNN keys present in the r18/r19 parsed tails
+    "q17", "q51", "q90", "q95", "q112", "q127", "q135", "q137", "q138",
+    "q139", "q143", "q147", "q157", "q158", "q202", "q203", "q207",
+    "q215", "q216",
+    // fixed-name bench arms
+    "etl_pipeline_2012", "sk136", "dxe", "dxa")
+
+  /** A soak arm's calib-normalized key: `_x` divides by its phase's
+    * bracket probe, `_xg` by the global calib (`cc_soak_1m` → `cc_soak_x`). */
+  private[graft] def soakNormKey(arm: String, suffix: String): String =
+    arm.replace("_1m", "") + suffix
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -499,7 +522,7 @@ object Bench {
       else {
         val brackets = soakPhases.map { case (lbl, b, _) => s"calib_$lbl" -> b }
         val xs = soakPhases.flatMap { case (_, bracket, vals) =>
-          vals.map { case (n, v) => (n.replace("_1m", "") + "_x") -> v / bracket }
+          vals.map { case (n, v) => soakNormKey(n, "_x") -> v / bracket }
         }
         // `_xg` = raw soak / the GLOBAL round-robin calib (min-of-reps,
         // measured across the whole query phase) — a second, independent
@@ -512,7 +535,7 @@ object Bench {
         // committed numbers, no quotient re-derivation (VERDICT r18 #3).
         val xgs = best.get("calib").toSeq.flatMap { g =>
           soakPhases.flatMap { case (_, _, vals) =>
-            vals.map { case (n, v) => (n.replace("_1m", "") + "_xg") -> v / g }
+            vals.map { case (n, v) => soakNormKey(n, "_xg") -> v / g }
           }
         }
         (("calib_soak" -> soakPhases.map(_._2).min) +: brackets) ++ xs ++ xgs
@@ -594,23 +617,6 @@ object Bench {
       else s""","calib_min":${fmt(calibSamples.min)},"calib_max":${fmt(calibSamples.max)},"calib_n":${calibSamples.size}"""
     val headFields = s""""metric":"total","value":${fmt(total)},"total_gate":${fmt(totalGate)},"total_serve":${fmt(totalServe)},"unit":"sec","sf":"$sfDir","n_queries":${results.size}$failedField$soaksXField$calibField"""
     println(s"""{"queries":$qs,$headFields}""")
-    // The compact (parsed) line's key set must be STABLE round over
-    // round (VERDICT r19 Next #2): a pure top-N print churns with the
-    // ranking, and the driver's PERF comparator then reports the churn
-    // as dropped_from_bench (8 phantom drops in r19 — all still passing
-    // the oracle, just below the print cutoff). The documented stable
-    // set = every key that has EVER appeared in a parsed tail (r18/r19)
-    // plus the fixed-name soak/calib/sketch entries; the top-30 of the
-    // current run is ADDED on top, so a newly-slow query still surfaces.
-    // Additions-only: nothing that printed before can disappear while
-    // the query itself exists.
-    val pinnedKeys = Set(
-      // qNNN keys present in the r18/r19 parsed tails
-      "q17", "q51", "q90", "q95", "q112", "q127", "q135", "q137", "q138",
-      "q139", "q143", "q147", "q157", "q158", "q202", "q203", "q207",
-      "q215", "q216",
-      // fixed-name bench arms
-      "etl_pipeline_2012", "sk136", "dxe", "dxa")
     // The soakNorm ratios are not seconds and already sit on this line
     // under soaks_x: rank and print only the timed entries.
     val compactEntries = (timed.sortBy(-_._2).take(30)

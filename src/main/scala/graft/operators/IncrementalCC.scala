@@ -63,8 +63,8 @@ object IncrementalCC {
     * A pair with a null endpoint is not an edge and is dropped, as in
     * [[ConnectedComponents.run]]. `maxLocalEdges`: reduced graphs at or
     * below this take the bounded collect → driver union-find fast path;
-    * larger ones (a bulk backfill) go through
-    * [[ConnectedComponents.run]]. */
+    * larger ones (a bulk backfill) go through [[ConnectedComponents.run]]
+    * with this as its `localFinishEdges`. */
   def step(comps: DataFrame, pairs: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
       maxLocalEdges: Int = 100000): Step = {
@@ -99,8 +99,8 @@ object IncrementalCC {
     // distributed star contraction would spend ~8 fixed-cost scheduled
     // jobs on a graph of a few hundred edges. Only non-roots relabel.
     // Batches past the bound (a bulk backfill) fall back to
-    // ConnectedComponents.run, whose own local finish takes over once
-    // its contraction shrinks the edge set.
+    // ConnectedComponents.run at the same bound: its contraction rounds
+    // run until the edge set shrinks to it, then its local finish.
     val s = pairs.sparkSession
     import s.implicits._
     val redRows = red.limit(maxLocalEdges + 1)
@@ -110,7 +110,7 @@ object IncrementalCC {
         ConnectedComponents.minRootLabels(redRows).filter(p => p._1 != p._2)
           .toSeq.toDF("old_lab", "new_lab")
       else
-        ConnectedComponents.run(red)
+        ConnectedComponents.run(red, localFinishEdges = maxLocalEdges)
           .where(col("node") =!= col("component"))
           .select(col("node").as("old_lab"), col("component").as("new_lab")))
 

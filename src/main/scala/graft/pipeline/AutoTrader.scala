@@ -11,12 +11,14 @@ import graft.signals.{QuantGate, SignalGenerator}
   * run_auto_trader.py:3876-4200: per cycle, prepare a lookback market
   * window → forecast per ticker → generate signals → execute through the
   * FIFO engine → persist fills + mark-to-market. The reference's
-  * same-bar gate (:3970-3990) is honored by construction: each cycle
-  * consumes exactly one new bar per ticker.
+  * same-bar gate (:3970-3990) holds per ticker: a cycle that brings a
+  * ticker no new bar (no bar on its cutoff date) gives it no signal.
   *
-  * Batch shape (daily bars): a driver loop over cycles where each cycle
-  * is a DataFrame job; the streaming variant of the same state machine
-  * is graft.streaming.QuoteStream (mapGroupsWithState).
+  * Batch shape (daily bars): one per-ticker pass over the bars. Each
+  * ticker's bars are shuffled once and sorted once; cycle c's history is
+  * the prefix up to cutoff c, and the FIFO engine folds the ticker's
+  * signals in the same task. The streaming variant of the same state
+  * machine is graft.streaming.LiveCycle (flatMapGroupsWithState).
   */
 object AutoTrader {
 
@@ -32,7 +34,11 @@ object AutoTrader {
     * is a different knob from the sizing floor (that LIFTS the weight
     * of signals that already passed). */
   final case class RiskPolicy(name: String, minSignalConfidence: Double,
-      engine: PortfolioEngine.Config => PortfolioEngine.Config)
+      engine: PortfolioEngine.Config => PortfolioEngine.Config) {
+    /** The entry gate: a sub-threshold BUY/SELL becomes HOLD. */
+    def gate(action: String, confidence: Double): String =
+      if (action != "HOLD" && confidence < minSignalConfidence) "HOLD" else action
+  }
 
   object RiskPolicy {
     val production: RiskPolicy =
@@ -70,7 +76,7 @@ object AutoTrader {
     * these rows, not just the per-cycle aggregates. The returned fills
     * frame is cached (and materialized), so reading it runs no forecast
     * again; the caller owns that cache entry and may `unpersist` it. The
-    * intermediate signal cache is released before this returns. */
+    * pass's own cache is released before this returns. */
   def runDetailed(spark: SparkSession, bars: DataFrame, cycles: Int,
       fcCfg: ForecastEngine.Config = ForecastEngine.Config(horizon = 5, mcPaths = 100),
       sigCfg: SignalGenerator.Config = SignalGenerator.Config(),
@@ -83,81 +89,84 @@ object AutoTrader {
     // ticker × row fact volume); bounded inside the shared helper
     val dates = graft.etl.Splitter.distinctDates(bars)
     require(dates.length > cycles + 60, "not enough history for the lookback window")
-
-    // signals for every cycle are independent per (ticker, cycle) — one
-    // distributed pass computes them all (the driver loop only sequences
-    // the stateful execution below).
     val cutoffs = dates.takeRight(cycles)
-    val cutoffDf = cutoffs.zipWithIndex.map { case (d, i) => (i, d) }.toSeq
-      .toDF("cycle", "cutoff")
-    val signals = bars.select(col("ticker"), col("date"), col("close"),
+    // a fill's cycle is the cutoff its bar-date is (-1: no cycle's)
+    val cycleOf = cutoffs.zipWithIndex.toMap
+    val effectiveEngineCfg = riskMode.fold(engineCfg)(_.engine(engineCfg))
+
+    // ONE pass per ticker, each bar shuffled once: cycle c's history is
+    // the prefix of the ticker's sorted bars up to cutoff c, and the
+    // engine folds the ticker's signals in the same task
+    val pass = bars.select(col("ticker"), col("date"), col("close"),
         col("high"), col("low"))
-      .crossJoin(broadcast(cutoffDf))
-      .where(col("date") <= col("cutoff"))
-      .as[(String, java.sql.Timestamp, Double, Double, Double, Int, java.sql.Timestamp)]
-      .groupByKey(r => (r._1, r._6))
-      .flatMapGroups { (key, rows) =>
-        val (ticker, cycle) = key
+      .as[(String, java.sql.Timestamp, Double, Double, Double)]
+      .groupByKey(_._1)
+      .flatMapGroups { (ticker, rows) =>
         // same (ms, nanos, close) order as LiveCycle.barKey so tied
-        // timestamps resolve identically in batch and stream
-        val arr = rows.toArray.sortBy(r => (r._2.getTime, r._2.getNanos, r._3))
+        // timestamps resolve identically in batch and stream; a null
+        // date is at or before no cutoff
+        val arr = rows.filter(_._2 != null).toArray
+          .sortBy(r => (r._2.getTime, r._2.getNanos, r._3))
           .map(r => (r._2, r._3, r._4, r._5))
-        signalForHistory(ticker, arr, fcCfg, sigCfg, gateCfg, engineCfg)
-          .map { case (ts, price, action, conf, atr) =>
-            (cycle, ticker, ts, price, action, conf, atr)
-          }.iterator
-      }
-      .toDF("cycle", "ticker", "ts", "price", "action", "confidence", "atr")
-      .withColumn("isSynthetic", lit(false))
-      // risk-mode entry gate: sub-threshold BUY/SELL → HOLD before the
-      // engine (the sizing presets apply inside the engine config below)
-      .transform { df =>
-        riskMode.fold(df) { p =>
-          df.withColumn("action",
-            when(col("action") =!= "HOLD" &&
-              col("confidence") < p.minSignalConfidence, "HOLD")
-              .otherwise(col("action")))
+        val out = Seq.newBuilder[PassRow]
+        val events = Seq.newBuilder[PortfolioEngine.Event]
+        var n = 0
+        cutoffs.indices.foreach { c =>
+          val seen = n
+          while (n < arr.length && !arr(n)._1.after(cutoffs(c))) n += 1
+          // same-bar gate: a cycle that brings the ticker no new bar
+          // trades nothing, as LiveCycle drops a repeated bar
+          if (n > seen)
+            signalForHistory(ticker, arr.take(n), fcCfg, sigCfg, gateCfg, engineCfg)
+              .foreach { case (ts, price, action0, conf, atr) =>
+                val action = riskMode.fold(action0)(_.gate(action0, conf))
+                out += PassRow(c, isFill = false, ticker, ts, 0L, action, 0.0,
+                  price, isClose = false, -1L, 0.0, "", isSynthetic = false, "")
+                events += PortfolioEngine.Event(ticker, ts, price, action, conf,
+                  isSynthetic = false, atr = atr)
+              }
         }
+        // the engine is stateful across cycles: it folds the ticker's
+        // signals in time order once, the ATR snapshot arming its
+        // trailing ratchet
+        PortfolioEngine.runTicker(events.result().sortBy(PortfolioEngine.eventKey),
+            effectiveEngineCfg).foreach { f =>
+          out += PassRow(cycleOf.getOrElse(f.ts, -1), isFill = true, f.ticker, f.ts,
+            f.tradeId, f.action, f.quantity, f.price, f.isClose, f.entryTradeId,
+            f.pnl, f.exitReason, f.isSynthetic, f.side)
+        }
+        out.result().iterator
       }
       .cache()
 
-    // execution is stateful across cycles → feed the per-ticker engine
-    // the chronological signal sequence once (equivalent to replaying
-    // the cycles in order) and attribute fills back to cycles. The ATR
-    // snapshot rides along so the engine's trailing ratchet is armed.
-    val effectiveEngineCfg = riskMode.fold(engineCfg)(_.engine(engineCfg))
-    val fills = PortfolioEngine.backtest(
-      signals.select("ticker", "ts", "price", "action", "confidence",
-        "isSynthetic", "atr"),
-      effectiveEngineCfg).cache()
-    // driver collect of ONE AGGREGATE ROW PER CYCLE (the groupBy reduces
-    // fills to `cycles` rows before the collect) — bounded by the cycle
-    // count argument, never by fills or bars
-    val fillsByCycle = fills.toDF()
-      .join(cutoffDf, col("ts") === col("cutoff"), "left")
-      .groupBy(col("cycle")).agg(
-        count(lit(1)).as("nFills"),
-        sum(when(col("isClose"), col("pnl")).otherwise(0.0)).as("pnl"))
-      .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Int]).getOrElse(-1) ->
-        (r.getLong(1), r.getDouble(2))).toMap
+    // driver collect of ONE AGGREGATE ROW PER CYCLE: the signal census
+    // and the fills' count and realized P&L, bounded by `cycles`
+    val signal = !col("isFill")
+    val byCycle = pass.groupBy(col("cycle")).agg(
+        count(when(signal, 1)),
+        count(when(signal && col("action") === "BUY", 1)),
+        count(when(signal && col("action") === "SELL", 1)),
+        count(when(col("isFill"), 1)),
+        sum(when(col("isFill") && col("isClose"), col("pnl")).otherwise(0.0)))
+      .as[(Int, Long, Long, Long, Long, Double)].collect()
+      .map(r => r._1 -> CycleResult(r._1, r._2, r._3, r._4, r._5, r._6)).toMap
+    val fills = pass.where(col("isFill")).drop("cycle", "isFill").cache()
+    fills.write.format("noop").mode("overwrite").save()
+    // fills is materialized: nothing reads the pass's cache any more
+    pass.unpersist()
 
-    // the per-cycle action census in ONE aggregate: at most
-    // cycles × |actions| rows reach the driver
-    val census = signals.groupBy(col("cycle"), col("action")).count().collect()
-      .groupBy(_.getInt(0))
-      .map { case (c, rows) => c -> rows.map(r => r.getString(1) -> r.getLong(2)).toMap }
-    // fills is materialized (fillsByCycle read it) and the census is
-    // collected: nothing reads the signal cache any more
-    signals.unpersist()
-
-    val resultsSeq = (0 until cycles).map { c =>
-      val acts = census.getOrElse(c, Map.empty[String, Long])
-      val (nf, pnl) = fillsByCycle.getOrElse(c, (0L, 0.0))
-      CycleResult(c, acts.values.sum, acts.getOrElse("BUY", 0L),
-        acts.getOrElse("SELL", 0L), nf, pnl)
-    }
-    (resultsSeq, fills.toDF())
+    val resultsSeq = (0 until cycles).map(c =>
+      byCycle.getOrElse(c, CycleResult(c, 0L, 0L, 0L, 0L, 0.0)))
+    (resultsSeq, fills)
   }
+
+  /** One row out of [[runDetailed]]'s per-ticker pass: a signal (its cycle
+    * and gated action) or a fill (its cycle, -1 for none, and the
+    * [[PortfolioEngine.ExecRow]] columns in order). */
+  private[pipeline] final case class PassRow(cycle: Int, isFill: Boolean,
+      ticker: String, ts: java.sql.Timestamp, tradeId: Long, action: String,
+      quantity: Double, price: Double, isClose: Boolean, entryTradeId: Long,
+      pnl: Double, exitReason: String, isSynthetic: Boolean, side: String)
 
   /** One trade decision for a ticker given its full bar history
     * ((ts, close, high, low), ascending) — the forecast → signal →

@@ -138,13 +138,8 @@ object LiveCycle {
           AutoTrader.signalForHistory(ticker, arr, fcCfg, sigCfg,
               gateCfg, engineCfg).foreach {
             case (ts, price, action0, conf, atr) =>
-              // risk-mode entry gate, same rule as the batch loop's
-              // column transform: sub-threshold BUY/SELL → HOLD
-              val action = riskMode match {
-                case Some(p) if action0 != "HOLD" &&
-                  conf < p.minSignalConfidence => "HOLD"
-                case _ => action0
-              }
+              // risk-mode entry gate, the batch loop's rule
+              val action = riskMode.fold(action0)(_.gate(action0, conf))
               val (e2, fs) = PortfolioEngine.step(eng,
                 Event(ticker, ts, price, action, conf,
                   isSynthetic = false, atr = atr), effCfg)

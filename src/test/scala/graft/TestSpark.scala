@@ -10,4 +10,14 @@ trait TestSpark { self: Suite =>
 
 object TestSpark {
   lazy val session: SparkSession = GraftSession.local(4)
+
+  /** Empties Spark's codegen cache, so the next run's compiles count
+    * every cache entry it needs. */
+  def emptyCodegenCache(): Unit = {
+    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val field = gen.getClass.getDeclaredField("cache")
+    field.setAccessible(true)
+    val cache = field.get(gen)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
 }

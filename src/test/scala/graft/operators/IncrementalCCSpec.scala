@@ -1,11 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{GraftSession, TestSpark}
 
 /** Incremental component maintenance must equal a from-scratch batch run
   * after EVERY batch, MERGE only the delta, and close the streaming
@@ -77,8 +79,26 @@ class IncrementalCCSpec extends AnyFunSuite with TestSpark {
     val comps0 = Seq((10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L))
       .toDF("node", "component")
     val batch = Seq((5L, 11L), (11L, 21L), (30L, 31L)).toDF("src", "dst")
-    val fast = IncrementalCC.step(comps0, batch)
-    val dist = IncrementalCC.step(comps0, batch, maxLocalEdges = 0)
+    // the contraction's rounds each observe their signature as cc_sig_<i>
+    val rounds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        qe.observedMetrics.keys.filter(_.startsWith("cc_sig_")).foreach(rounds.add)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def roundsOf(f: => IncrementalCC.Step): (IncrementalCC.Step, Int) = {
+      rounds.clear()
+      val st = f
+      GraftSession.drain(spark.sparkContext)
+      (st, rounds.size)
+    }
+    spark.listenerManager.register(listener)
+    val ((fast, fastRounds), (dist, distRounds)) =
+      try (roundsOf(IncrementalCC.step(comps0, batch)),
+        roundsOf(IncrementalCC.step(comps0, batch, maxLocalEdges = 0)))
+      finally spark.listenerManager.unregister(listener)
+    assert(fastRounds === 0)
+    assert(distRounds >= 1, "the fallback must run the distributed contraction")
     assert(compsOf(fast.delta) === compsOf(dist.delta))
     assert(compsOf(fast.updated) === compsOf(dist.updated))
     // the merge itself is right: 5 joins {10,11}+{20,21} → all label 5

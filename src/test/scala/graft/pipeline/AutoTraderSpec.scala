@@ -95,4 +95,36 @@ class AutoTraderSpec extends AnyFunSuite with TestSpark {
     second.unpersist()
     assert(sc.getPersistentRDDs.size === before)
   }
+
+  test("a backtest fits Spark's codegen cache: at most 40 entries from an empty cache; a warm call compiles at most 5 classes in 9 jobs") {
+    // PipelineSpec's footprint test, for the trading cycle: a call whose
+    // generated classes fit every segment of Spark's 100-entry codegen
+    // cache compiles nothing when it runs again. The bars are cached and
+    // materialized first, as the trading benchmark reads them, so the
+    // counts are runDetailed's own (measured: 37 compiles cold, 0 warm,
+    // 8 jobs).
+    val sc = spark.sparkContext
+    val counts = new GraftSession.Counts
+    val b = bars.cache()
+    b.count()
+    def call(): Unit = AutoTrader.runDetailed(spark, b, 5, sigCfg = permissive,
+      gateCfg = None, riskMode = Some(AutoTrader.RiskPolicy.diagnostic))._2.unpersist()
+    sc.addSparkListener(counts)
+    try {
+      TestSpark.emptyCodegenCache()
+      counts.reset()
+      call()
+      GraftSession.drain(sc)
+      val cold = counts.toString
+      assert(counts.compiles <= 40L, s"cold call: $cold")
+      counts.reset()
+      call()
+      GraftSession.drain(sc)
+      assert(counts.compiles <= 5L, s"warm call: $counts (cold call: $cold)")
+      assert(counts.jobs <= 9, s"warm call: $counts")
+    } finally {
+      sc.removeSparkListener(counts)
+      b.unpersist()
+    }
+  }
 }

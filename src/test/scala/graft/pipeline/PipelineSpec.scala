@@ -224,7 +224,7 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     sc.addSparkListener(counts)
     try {
       val out = Files.createTempDirectory("graft_etl_warm").toString
-      emptyCodegenCache()
+      TestSpark.emptyCodegenCache()
       counts.reset()
       EtlPipeline.run(spark, cleanBars, EtlPipeline.Config(outDir = out))
       GraftSession.drain(sc)
@@ -236,16 +236,6 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
       assert(counts.compiles <= 40L, s"warm run: $counts (cold run: $cold)")
       assert(counts.jobs <= 14, s"warm run: $counts")
     } finally sc.removeSparkListener(counts)
-  }
-
-  /** Empties Spark's codegen cache, so the next run's compiles count
-    * every cache entry it needs. */
-  private def emptyCodegenCache(): Unit = {
-    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    val field = gen.getClass.getDeclaredField("cache")
-    field.setAccessible(true)
-    val cache = field.get(gen)
-    cache.getClass.getMethod("invalidateAll").invoke(cache)
   }
 
   test("a run leaves no persisted kernel blocks: persistent RDDs and the cache manager are unchanged") {

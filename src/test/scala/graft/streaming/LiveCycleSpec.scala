@@ -21,7 +21,7 @@ class LiveCycleSpec extends AnyFunSuite with TestSpark {
   private val cols = Seq("ticker", "tradeId", "action", "quantity", "price",
     "isClose", "entryTradeId", "pnl", "exitReason", "isSynthetic", "side")
 
-  // one fixture for all three tests: bars, the batch-mode fills, and
+  // one fixture for the parity tests: bars, the batch-mode fills, and
   // the stream-shaped source rows
   private lazy val fixture: (Array[String], Int, Array[LiveCycle.Bar]) = {
     val spark2 = spark
@@ -68,6 +68,38 @@ class LiveCycleSpec extends AnyFunSuite with TestSpark {
       assert(streamed.toSeq === batchFills.toSeq,
         "streaming cycle diverged from the batch auto-trader")
     } finally q.stop()
+  }
+
+  test("same-bar gate: a ticker with no bar on a cutoff date signals nothing there, and batch matches the stream") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val full = SyntheticSource.generate(spark, Seq("A1", "A2"), 160, seed = 19).toDF()
+    val dates = graft.etl.Splitter.distinctDates(full)
+    // A1 misses the bar-date of cycle 2; A2 still has it, so it stays a cutoff
+    val gap = dates(dates.length - cycles + 2)
+    val bars = full.where(!($"ticker" === "A1" && $"date" === gap)).cache()
+    try {
+      val (results, batchDf) = AutoTrader.runDetailed(spark, bars, cycles,
+        sigCfg = sigCfg, gateCfg = gateCfg, riskMode = mode)
+      val batch = batchDf.select(cols.map(col): _*).collect().map(_.toString).sorted
+      batchDf.unpersist()
+      assert(results.map(_.nSignals) === Seq(2L, 2L, 1L, 2L, 2L))
+      assert(batch.nonEmpty, "no fills — parity would be vacuous")
+      val src = bars.select($"ticker", $"date".as("ts"), $"close", $"high", $"low")
+        .as[LiveCycle.Bar].collect().sortBy(b => (b.ts.getTime, b.ticker))
+      val input = MemoryStream[LiveCycle.Bar]
+      val q = LiveCycle.fills(input.toDS(), dates.length - cycles + 1,
+          sigCfg = sigCfg, gateCfg = gateCfg, riskMode = mode)
+        .writeStream.format("memory").queryName("gap_cycle").outputMode("append").start()
+      try {
+        input.addData(src.toSeq)
+        q.processAllAvailable()
+        val streamed = spark.table("gap_cycle").select(cols.map(col): _*)
+          .collect().map(_.toString).sorted
+        assert(streamed.toSeq === batch.toSeq, "a cycle without a new bar re-signaled")
+      } finally q.stop()
+    } finally bars.unpersist()
   }
 
   test("a warm micro-batch of the live cycle compiles no generated class") {
