@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField,
@@ -8,6 +9,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
 import graft.domain.QualityReport
 import graft.etl.{Preprocessor, Splitter, SplitDiagnostics, Validator}
 import graft.features.FeatureBuilder
+import graft.sources.{MergeStaging, VersionedTable}
 
 /** The 4-stage batch ETL pipeline as a declarative stage DAG — rebuild of
   * /root/reference/scripts/run_etl_pipeline.py:979-1496 (execute_pipeline:
@@ -20,6 +22,16 @@ import graft.features.FeatureBuilder
   * Stages are DataFrame→DataFrame transforms; "checkpoints" are parquet
   * stage directories plus a run-catalog row keyed by a per-run id
   * (etl/checkpoint_manager.py:59-436 reduced to its durable core).
+  *
+  * Publish: every stage dir is written once, partitioned by ticker,
+  * under a staging dir (`_raw_tmp` for raw, `_stages_tmp/_stage=<name>`
+  * for the rest) and published by one function. By default that is a
+  * checked swap: the live stage moves aside into `_stages_old`, the
+  * staged dir moves in, and `_stages_old` is cleared only after the last
+  * swap, so a failed publish leaves the previous run's stage on disk.
+  * With `versionedStages` it is an overwrite commit of the staged
+  * `ticker=` dirs into the stage's VersionedTable; the writes are the
+  * same in both modes.
   *
   * Feature route: input that meets the feature kernel's contract — no
   * null ticker, date, close, high or low, read from the validator's
@@ -51,9 +63,11 @@ object EtlPipeline {
       // stage's per-ticker aggregate, before the cross-sectional tail
       normalizeCols: Seq[String] = Seq("close"),
       minBars: Int = 30,
-      // stage sinks as VersionedTables: each run overwrites into a NEW
-      // snapshot version (readers of the previous run are never torn;
-      // readAt(v) replays any prior run's stage until vacuum)
+      // picks how each staged stage dir is published, not how it is
+      // written: false swaps it in for the live dir; true commits it as a
+      // NEW snapshot version of the stage's VersionedTable (readers of
+      // the previous run are never torn; readAt(v) replays any prior
+      // run's stage until vacuum)
       versionedStages: Boolean = false)
 
   final case class RunResult(
@@ -70,24 +84,41 @@ object EtlPipeline {
     // PipelineSpec's own count===1 pattern) read ambiguous results
     val runId = java.util.UUID.randomUUID().toString
 
-    // 1. extraction output is the input frame; persist the raw stage
+    // The one publish of staged stage dirs (see "Publish" above). Each
+    // entry is (stage name, staged dir, its row count — read only by the
+    // versioned commit).
+    val fs = new Path(cfg.outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stages = scala.collection.mutable.Map.empty[String, String]
-    def store(name: String, df: DataFrame): DataFrame = {
-      val dir = s"${cfg.outDir}/$name"
-      stages(name) = dir
-      if (cfg.versionedStages) {
-        val table = new graft.sources.VersionedTable(spark, dir, partitionCol = "ticker")
-        table.overwrite(df)
-        table.read()
+    def publish(staged: (String, Path, () => Long)*): Unit = {
+      def live(name: String) = s"${cfg.outDir}/$name"
+      if (cfg.versionedStages) staged.foreach { case (name, dir, rows) =>
+        new VersionedTable(spark, live(name), partitionCol = "ticker")
+          .commitOverwrite(dir, rows()): Unit
       } else {
-        df.write.mode("overwrite").partitionBy("ticker").parquet(dir)
-        // read back with the schema it was written with: no inference
-        // job over the footers; the partition column comes last, as
-        // inference puts it
-        spark.read.schema(df.schema).parquet(dir)
+        val old = new Path(s"${cfg.outDir}/_stages_old")
+        fs.delete(old, true)
+        fs.mkdirs(old)
+        staged.foreach { case (name, dir, _) =>
+          MergeStaging.swap(fs, dir, new Path(live(name)), new Path(old, name), "stage publish")
+        }
+        fs.delete(old, true)
       }
+      staged.foreach { case (name, _, _) => stages(name) = live(name) }
     }
-    val raw = store("raw", rawBars)
+
+    // 1. extraction output is the input frame; persist the raw stage.
+    // Its row count is observed for the versioned commit only.
+    val rawStaged = new Path(s"${cfg.outDir}/_raw_tmp")
+    val rawRows = org.apache.spark.sql.Observation()
+    (if (cfg.versionedStages) rawBars.observe(rawRows, count(lit(1)).as("n")) else rawBars)
+      .write.mode("overwrite").partitionBy("ticker").parquet(rawStaged.toString)
+    publish(("raw", rawStaged, () => rawRows.get("n").asInstanceOf[Long]))
+    val raw =
+      if (cfg.versionedStages) new VersionedTable(spark, stages("raw"), "ticker").read()
+      // read back with the schema it was written with: no inference job
+      // over the footers; the partition column comes last, as inference
+      // puts it
+      else spark.read.schema(rawBars.schema).parquet(stages("raw"))
 
     // 2. validation — FAIL raises, WARN proceeds (run_etl_pipeline :1375-1389)
     // the same query collects the date dimension the split stage cuts on
@@ -127,8 +158,7 @@ object EtlPipeline {
           SplitDiagnostics.binCuts("close", rows = training)).as("_psi_counts"),
       carry = moments)
     def fitCol(name: String) = fitted.fitSchema.fieldIndex(name)
-    val perTicker = fitted.fit.filter(!_.isNullAt(0))
-    val psi = perTicker.flatMap { r =>
+    val psi = fitted.fit.filter(!_.isNullAt(0)).flatMap { r =>
       Option(r.getSeq[Long](fitCol("_psi_counts")))
         .flatMap(SplitDiagnostics.psiOfCounts(_)).map(r.getString(0) -> _)
     }.toMap
@@ -137,65 +167,37 @@ object EtlPipeline {
       sp -> fitted.fit.map(_.getLong(fitCol(s"_n_$sp"))).sum).toMap
     val features = fitted.features.drop(moments: _*)
 
-    // 4. split + post-split normalization (fit on train ONLY). Stage
-    // outputs deliberately EXCLUDE the `split` column in every mode (it
-    // is constant within a stage dir); the single-pass path below drops
-    // it structurally (it becomes the renamed-away partition dir), so
-    // the versioned and empty-stage paths drop it explicitly — one
-    // schema across modes.
-    if (cfg.versionedStages) {
-      val stats = spark.createDataFrame(java.util.Arrays.asList(perTicker: _*),
-          fitted.fitSchema)
-        .select((col("ticker") +: moments.map(col)): _*)
-      val normalized = Preprocessor.applyZScore(
-        store("processed", features).withColumn("split", split),
-        stats, cfg.normalizeCols)
-      splitNames.foreach { sp =>
-        val dir = s"${cfg.outDir}/$sp"
-        stages(sp) = dir
-        new graft.sources.VersionedTable(spark, dir, partitionCol = "ticker")
-          .overwrite(normalized.where(col("split") === sp).drop("split"))
-      }
-    } else {
-      // ONE write emits every stage: each feature row twice, as is under
-      // `_stage=processed` and z-scored under its split's name (two
-      // writes read the features, or their stage, once each — a wasted
-      // full pass at 100 TB); the `_stage` partition dirs are then
-      // renamed into the top-level stage-dir contract (metadata ops, no
-      // data movement). Ticker partitioning is preserved beneath each
-      // stage.
-      require(cfg.normalizeCols.forall(c => features.schema(c).dataType == DoubleType),
-        s"normalizeCols must be double columns: ${cfg.normalizeCols}")
-      val tmp = s"${cfg.outDir}/_stages_tmp"
-      val stage = col("_stage")
-      Preprocessor.zScored(
-          fitted.features.withColumn("_stage", explode(array(lit("processed"), split))),
-          cfg.normalizeCols, rows = stage =!= "processed")
-        .write.mode("overwrite")
-        .partitionBy("_stage", "ticker").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      ("processed" +: splitNames).foreach { st =>
-        val src = new org.apache.hadoop.fs.Path(s"$tmp/_stage=$st")
-        val dst = new org.apache.hadoop.fs.Path(s"${cfg.outDir}/$st")
-        fs.delete(dst, true)
-        if (fs.exists(src))
-          require(fs.rename(src, dst), s"stage rename failed: $src -> $dst")
-        else {
-          // degenerate empty stage (e.g. tiny input): keep the contract
-          // with an explicit empty write so readers see a schema. The
-          // write must be UNPARTITIONED — a zero-row partitionBy write
-          // emits no parquet footer (only _SUCCESS) and the stage dir
-          // would then die on schema inference, crashing exactly the
-          // case this branch exists to absorb
-          spark.createDataFrame(java.util.Collections.emptyList[Row](),
-              StructType(features.schema.map(_.copy(nullable = true))))
-            .write.mode("overwrite").parquet(dst.toString)
-        }
-        stages(st) = dst.toString
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
+    // 4. split + post-split normalization (fit on train ONLY). ONE write
+    // emits every stage: each feature row twice, as is under
+    // `_stage=processed` and z-scored under its split's name (two writes
+    // read the features, or their stage, once each — a wasted full pass
+    // at 100 TB). Ticker partitioning is preserved beneath each stage,
+    // and the constant `split` column becomes the `_stage` dir, so no
+    // stage output carries it.
+    require(cfg.normalizeCols.forall(c => features.schema(c).dataType == DoubleType),
+      s"normalizeCols must be double columns: ${cfg.normalizeCols}")
+    val tmp = s"${cfg.outDir}/_stages_tmp"
+    val stage = col("_stage")
+    Preprocessor.zScored(
+        fitted.features.withColumn("_stage", explode(array(lit("processed"), split))),
+        cfg.normalizeCols, rows = stage =!= "processed")
+      .write.mode("overwrite")
+      .partitionBy("_stage", "ticker").parquet(tmp)
+    publish(("processed" +: splitNames).map { st =>
+      val dir = new Path(s"$tmp/_stage=$st")
+      // degenerate empty stage (e.g. tiny input): keep the contract with
+      // an explicit empty write so readers see a schema (the versioned
+      // commit finds no `ticker=` dir in it and commits an empty
+      // snapshot). The write must be UNPARTITIONED — a zero-row
+      // partitionBy write emits no parquet footer (only _SUCCESS) and
+      // the stage dir would then die on schema inference
+      if (!fs.exists(dir))
+        spark.createDataFrame(java.util.Collections.emptyList[Row](),
+            StructType(features.schema.map(_.copy(nullable = true))))
+          .write.parquet(dir.toString)
+      (st, dir, () => if (st == "processed") rows.values.sum else rows(st))
+    }: _*)
+    fs.delete(new Path(tmp), true)
 
     // run catalog row (checkpoint metadata keyed by the per-run id)
     val catalog = spark.createDataFrame(java.util.List.of(Row(runId, quality.status,
@@ -217,14 +219,14 @@ object EtlPipeline {
   def retention(spark: SparkSession, outDir: String, maxAgeDays: Int,
       nowMillis: Long = System.currentTimeMillis()): Seq[String] = {
     val cutoff = nowMillis - maxAgeDays * 86400000L
-    val root = new org.apache.hadoop.fs.Path(outDir)
+    val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
     val deleted = fs.listStatus(root).toSeq
       .filter(st => st.getPath.getName != "_run_catalog")
       .filter(_.getModificationTime < cutoff)
       .map { st => fs.delete(st.getPath, true); st.getPath.getName }
-    val catalogPath = new org.apache.hadoop.fs.Path(s"$outDir/_run_catalog")
+    val catalogPath = new Path(s"$outDir/_run_catalog")
     if (fs.exists(catalogPath)) {
       // safety comes from ORDER, not from caching: the compacted copy is
       // fully written to tmp (which reads the source) BEFORE the source
@@ -233,16 +235,13 @@ object EtlPipeline {
       // false rename, with no recovery path. The one remaining crash
       // window (between the two renames) leaves the full pre-compaction
       // catalog intact at _run_catalog_old.
-      val tmp = new org.apache.hadoop.fs.Path(s"$outDir/_run_catalog_tmp")
-      val old = new org.apache.hadoop.fs.Path(s"$outDir/_run_catalog_old")
+      val tmp = new Path(s"$outDir/_run_catalog_tmp")
+      val old = new Path(s"$outDir/_run_catalog_old")
       spark.read.parquet(catalogPath.toString)
         .where(col("created_at") >= cutoff)
         .write.mode("overwrite").parquet(tmp.toString)
       fs.delete(old, true): Unit
-      require(fs.rename(catalogPath, old),
-        s"catalog compaction: aside rename failed: $catalogPath -> $old")
-      require(fs.rename(tmp, catalogPath),
-        s"catalog compaction: swap rename failed: $tmp -> $catalogPath")
+      MergeStaging.swap(fs, tmp, catalogPath, old, "catalog compaction")
       fs.delete(old, true): Unit
     }
     deleted

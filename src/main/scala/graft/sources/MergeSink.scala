@@ -48,16 +48,6 @@ final class MergeSink(spark: SparkSession, path: String,
 
   def read(): DataFrame = spark.read.parquet(path)
 
-  /** The `<partitionCol>=<fragment>` dirs directly under `dir`. Every
-    * bookkeeping step (collision probe, swap, marker) works on these
-    * LISTED names, never on names rebuilt from raw values: Spark
-    * percent-escapes special characters (and maps null to the Hive
-    * default token) in partition dir names, and String.valueOf is not
-    * its SQL cast (java.sql.Timestamp appends ".0"), so a rebuilt name
-    * misses such a dir. */
-  private def partDirs(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq
-    .filter(_.isDirectory).map(_.getPath).filter(_.getName.startsWith(s"$partitionCol="))
-
   /** Upsert `updates`; rows matching an existing key replace it, others
     * insert. Duplicate keys WITHIN the batch keep the row with the
     * highest `versionCol` (ties broken arbitrarily but deterministically
@@ -83,16 +73,9 @@ final class MergeSink(spark: SparkSession, path: String,
     val txid = java.util.UUID.randomUUID().toString.take(8)
     val incoming = new Path(root, s".incoming_$txid")
     val staging = new Path(root, s".staging_$txid")
-    // ONE file per touched partition: an unrepartitioned partitionBy
-    // write fans out to (upstream tasks × partition values) fragments,
-    // inflating every later read's file-open tax (the VersionedTable
-    // lesson). The observation must live on the batch's session (see
-    // MergeStaging's session-discipline note).
-    val obs = org.apache.spark.sql.Observation()
-    batch.observe(obs, count(lit(1)).as("n")).repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(incoming.toString)
-    val batchTotal = obs.get("n").asInstanceOf[Long]
-    val parts = partDirs(incoming)
+    // the batch's row count is observed inside its one write, which
+    // must run on the batch's session (MergeStaging's session note)
+    val (batchTotal, parts) = MergeStaging.stage(fs, batch, partitionCol, incoming)
     if (parts.isEmpty) {
       // an empty batch must NOT create (or version) the table: a
       // zero-row partitionBy write leaves a directory with no parquet
@@ -110,21 +93,12 @@ final class MergeSink(spark: SparkSession, path: String,
             s"upsert: failed to move incoming $incoming to $staging")
         (batchTotal, 0L)
       } else {
-        // read with the batch's schema (no inference job) and only the
-        // colliding live dirs (no full-table listing); basePath keeps
-        // the partition column. ins/upd stats ride the staged write as
-        // Observation metrics (MergeStaging.observedMerge, which also
-        // enforces that both sides are read via the batch's session).
-        def reader = updates.sparkSession.read.schema(batch.schema)
-        val staged = reader.parquet(incoming.toString)
-        val existing = reader.option("basePath", path)
-          .parquet(colliding.map(_.toString): _*)
-        val (merged, statsOf) =
-          MergeStaging.observedMerge(staged, existing, keyCols, batchTotal)
-        merged.repartition(col(partitionCol))
-          .write.partitionBy(partitionCol).parquet(staging.toString)
+        // reads only the colliding live dirs (no full-table listing);
+        // basePath keeps the partition column
+        val stats = MergeStaging.mergeStaged(batch, incoming, colliding.map(_.toString),
+          path, keyCols, partitionCol, batchTotal, staging)
         fs.delete(incoming, true)
-        statsOf()
+        stats
       }
     val swapped = swapIn(staging, txid, "upsert")
     writeCommitMarker(swapped, inserted, updated, txid)
@@ -145,15 +119,9 @@ final class MergeSink(spark: SparkSession, path: String,
   private def swapIn(st: Path, txid: String, caller: String): Seq[String] = {
     val trash = new Path(s"$path/.trash_$txid")
     fs.mkdirs(trash)
-    partDirs(st).map { staged =>
+    MergeStaging.partDirs(fs, st, partitionCol).map { staged =>
       val part = staged.getName
-      val live = new Path(s"$path/$part")
-      if (fs.exists(live) && !fs.rename(live, new Path(trash, part)))
-        throw new java.io.IOException(
-          s"$caller swap: failed to move live $live aside to $trash")
-      if (!fs.rename(staged, live))
-        throw new java.io.IOException(
-          s"$caller swap: failed to move staged $staged into place at $live")
+      MergeStaging.swap(fs, staged, new Path(s"$path/$part"), new Path(trash, part), caller)
       part.stripPrefix(s"$partitionCol=")
     }
   }

@@ -1,22 +1,26 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The merge machinery shared by [[MergeSink]] (directory-swap table)
-  * and [[VersionedTable]] (file-log table): batch dedupe, the observed
-  * update-wins merge whose ins/upd stats ride the staged write as
-  * Observation metrics, and VersionedTable's partition census.
+/** The commit machinery shared by [[MergeSink]] (directory-swap table),
+  * [[VersionedTable]] (file-log table) and the ETL pipeline's stage
+  * publish: batch dedupe, the staged write (the batch runs once, its
+  * row count observed on the way, one file per touched partition), the
+  * observed update-wins merge of a staged batch with the live files it
+  * collides with, and the checked two-rename swap. Every touched
+  * partition is named by its LISTED staged dir, so no writer rebuilds a
+  * dir name from a raw value and no census job runs.
   *
   * SESSION DISCIPLINE lives HERE, once: under foreachBatch the batch
   * DataFrame runs on the stream's cloned session, and an Observation
   * registered on a different session's listener bus than the executing
   * one never receives its completion event — Observation.get parks the
-  * micro-batch thread forever (deterministic; repro'd). So the caller
-  * must build `existing` from the BATCH's session, and [[observedMerge]]
-  * enforces it with a fail-fast require instead of an indefinite hang.
+  * micro-batch thread forever (deterministic; repro'd). So every read
+  * here goes through the BATCH's session.
   */
-private[sources] object MergeStaging {
+private[graft] object MergeStaging {
 
   /** Update-wins within the batch: keep the row with the highest
     * `versionCol` per key (ties broken deterministically by a final
@@ -34,48 +38,69 @@ private[sources] object MergeStaging {
         .where(col("__rn") === 1).drop("__rn")
     }
 
-  /** ONE census job over SQL CAST-STRING partition values, answering
-    * the empty-guard, the touched-partition list and the batch row count
-    * for [[VersionedTable]], whose bookkeeping lives in fragment space
-    * (its file log): (castString, rowCount) per touched partition, fed
-    * to [[partFragment]]. */
-  def censusStrings(batch: DataFrame, partitionCol: String): Seq[(String, Long)] =
-    batch.groupBy(col(partitionCol).cast("string").as("__p"))
-      .agg(count(lit(1)).as("__n")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
+  /** The `<partitionCol>=<fragment>` dirs directly under `dir`. Every
+    * bookkeeping step (collision probe, swap, marker, file log) works on
+    * these LISTED names, never on names rebuilt from raw values: Spark
+    * percent-escapes special characters (and maps null to the Hive
+    * default token) in partition dir names, and String.valueOf is not
+    * its SQL cast (java.sql.Timestamp appends ".0"), so a rebuilt name
+    * misses such a dir. */
+  def partDirs(fs: FileSystem, dir: Path, partitionCol: String): Seq[Path] =
+    fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith(s"$partitionCol="))
 
-  /** The `<partCol>=<fragment>` directory fragment Spark's partitionBy
-    * write produces for a partition value's SQL string form: the Hive
-    * null sentinel for null, percent-escaped path characters otherwise
-    * (Spark's own escaper). File/dir bookkeeping must match ON
-    * FRAGMENTS — an interpolated raw value misses escaped dirs
-    * (':' → '%3A', '/' → '%2F') and the null dir entirely. */
-  def partFragment(castString: String): String =
-    if (castString == null) "__HIVE_DEFAULT_PARTITION__"
-    else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-      .escapePathName(castString)
+  /** Write `df` once to `dir`, partitioned by `partitionCol` with ONE
+    * file per touched partition (an unrepartitioned partitionBy write
+    * fans out to upstream tasks × partition values fragments, and every
+    * later read pays their file-open tax). Returns the row count,
+    * observed inside the write job, and the written partition dirs; an
+    * empty listing means an empty batch. */
+  def stage(fs: FileSystem, df: DataFrame, partitionCol: String,
+      dir: Path): (Long, Seq[Path]) = {
+    val obs = org.apache.spark.sql.Observation()
+    df.observe(obs, count(lit(1)).as("n")).repartition(col(partitionCol))
+      .write.partitionBy(partitionCol).parquet(dir.toString)
+    (obs.get("n").asInstanceOf[Long], partDirs(fs, dir, partitionCol))
+  }
 
-  /** Update-wins merge plan + deferred stats: merged = batch ∪
-    * (existing anti batch), with existing-total and anti-survivor
-    * counts observed INSIDE the caller's staged-write job. Call
-    * `statsOf()` only AFTER an action ran the returned plan; it yields
-    * (inserted, updated) given `batchTotal`. */
-  def observedMerge(batch: DataFrame, existing: DataFrame,
-      keyCols: Seq[String], batchTotal: Long): (DataFrame, () => (Long, Long)) = {
-    require(existing.sparkSession eq batch.sparkSession,
-      "merge `existing` must be read via the batch's own session: a " +
-        "cross-session Observation never completes under foreachBatch " +
-        "(the listener event is filtered by session) and get() hangs")
-    val obsExisting = org.apache.spark.sql.Observation()
+  /** Update-wins merge of the batch staged at `staged` (by [[stage]])
+    * with the live files `live` (partition dirs or files under
+    * `basePath`): merged = batch ∪ (live anti batch), written to `out`
+    * as [[stage]] writes. Both sides are read through the batch's
+    * session (see the session note above) with the batch's schema (no
+    * inference job); the live total and the anti-join survivors are
+    * observed inside the write job. Returns (inserted, updated). */
+  def mergeStaged(batch: DataFrame, staged: Path,
+      live: Seq[String], basePath: String, keyCols: Seq[String],
+      partitionCol: String, batchTotal: Long, out: Path): (Long, Long) = {
+    def reader = batch.sparkSession.read.schema(batch.schema)
+    val obsLive = org.apache.spark.sql.Observation()
     val obsAnti = org.apache.spark.sql.Observation()
-    val observed = existing.observe(obsExisting, count(lit(1)).as("n"))
-    val anti = observed.join(batch, keyCols, "left_anti")
+    val staging = reader.parquet(staged.toString)
+    val anti = reader.option("basePath", basePath).parquet(live: _*)
+      .observe(obsLive, count(lit(1)).as("n"))
+      .join(staging, keyCols, "left_anti")
       .observe(obsAnti, count(lit(1)).as("n"))
-    val merged = batch.unionByName(anti.select(batch.columns.map(col): _*))
-    (merged, () => {
-      val exTotal = obsExisting.get("n").asInstanceOf[Long]
-      val updated = exTotal - obsAnti.get("n").asInstanceOf[Long]
-      (batchTotal - updated, updated)
-    })
+    staging.unionByName(anti.select(staging.columns.map(col): _*))
+      .repartition(col(partitionCol))
+      .write.partitionBy(partitionCol).parquet(out.toString)
+    val updated = obsLive.get("n").asInstanceOf[Long] - obsAnti.get("n").asInstanceOf[Long]
+    (batchTotal - updated, updated)
+  }
+
+  /** Swap the fully written `staged` dir in at `live`: live (if any) is
+    * renamed ASIDE to `aside` first, then staged renamed into place, so
+    * no committed data is deleted before its replacement is live and a
+    * crash at any point leaves both copies on disk. Both renames are
+    * CHECKED and throw by name: a swallowed false would let the caller
+    * report success (and delete the aside copy) with nothing in place.
+    * `aside` must not exist and its parent must. */
+  def swap(fs: FileSystem, staged: Path, live: Path, aside: Path, caller: String): Unit = {
+    if (fs.exists(live) && !fs.rename(live, aside))
+      throw new java.io.IOException(
+        s"$caller swap: failed to move live $live aside to $aside")
+    if (!fs.rename(staged, live))
+      throw new java.io.IOException(
+        s"$caller swap: failed to move staged $staged into place at $live")
   }
 }

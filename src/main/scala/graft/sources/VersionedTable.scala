@@ -20,10 +20,17 @@ import org.apache.spark.sql.functions._
   * log entry (`adds` + `removes` of relative paths); a snapshot at
   * version V is "all adds minus all removes up to V". Readers resolve
   * the log, never list data dirs — so an in-flight writer is INVISIBLE
-  * until its single log-entry create lands, there is no torn window at
-  * all (MergeSink's two-rename swap still has a momentary
-  * partition-missing instant), and old versions stay readable
-  * (`readAt`) until `vacuum`.
+  * until its single log-entry create lands, and old versions stay
+  * readable (`readAt`) until `vacuum`.
+  *
+  * Writes stage the way [[MergeSink]] does (`MergeStaging`): the batch
+  * is written once under a `.tx_<txid>` dir, and a merge reads only the
+  * live files of the partitions that staged listing names. The two
+  * tables differ only in how the staged files become live. MergeSink
+  * swaps each partition dir in with two renames, so a reader can see a
+  * partition missing for an instant and a crash between partitions
+  * leaves a torn upsert for `recover()`; here one log entry publishes
+  * every partition at once, with no torn window at all.
   *
   * Concurrency is optimistic, file-create-exclusivity as the commit
   * primitive (the HDFS/Delta recipe): a commit tries to create entry
@@ -233,26 +240,32 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
 
   // ---- commits ----
 
+  /** A fresh transaction id and its `.tx_<txid>` staging dir (the prefix
+    * vacuum's TTL sweep reclaims when a writer crashed before commit). */
+  private def newTx(): (String, Path) = {
+    val txid = java.util.UUID.randomUUID().toString.take(8)
+    (txid, new Path(s"$root/.tx_$txid"))
+  }
+
   /** Move the staged `partitionBy` output into stable per-partition dirs
-    * with txid-unique names; returns the adds. */
+    * with txid-unique names; returns the adds. Each rename is CHECKED: a
+    * swallowed false would log an add whose file is not there. */
   private def absorbStaging(staging: Path, txid: String): Seq[Add] = {
-    val adds = scala.collection.mutable.ArrayBuffer.empty[Add]
-    fs.listStatus(staging).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith(s"$partitionCol="))
-      .foreach { partDir =>
-        val part = partDir.getName.stripPrefix(s"$partitionCol=")
-        val dest = new Path(s"$dataDir/${partDir.getName}")
-        fs.mkdirs(dest)
-        fs.listStatus(partDir).filter(_.isFile).map(_.getPath)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .foreach { f =>
-            val name = s"${txid}_${f.getName}"
-            fs.rename(f, new Path(dest, name))
-            adds += Add(s"data/${partDir.getName}/$name", part)
-          }
-      }
+    val adds = MergeStaging.partDirs(fs, staging, partitionCol).flatMap { partDir =>
+      val part = partDir.getName.stripPrefix(s"$partitionCol=")
+      val dest = new Path(s"$dataDir/${partDir.getName}")
+      fs.mkdirs(dest)
+      fs.listStatus(partDir).toSeq.filter(_.isFile).map(_.getPath)
+        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .map { f =>
+          val name = s"${txid}_${f.getName}"
+          if (!fs.rename(f, new Path(dest, name)))
+            throw new java.io.IOException(s"absorb: failed to move staged $f into $dest")
+          Add(s"data/${partDir.getName}/$name", part)
+        }
+    }
     fs.delete(staging, true)
-    adds.toSeq
+    adds
   }
 
   /** Test seam: `VersionedTableStressSpec` swaps the entry-publish
@@ -569,10 +582,9 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
   /** Blind append (new files only; no reads, conflicts never possible
     * beyond version bumping). */
   def append(df: DataFrame): Long = {
-    val txid = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(s"$root/.tx_$txid")
-    // the `inserted` stat rides the staged write as an Observation (the
-    // observedMerge pattern) — the old read-back count re-scanned the
+    val (txid, staging) = newTx()
+    // the `inserted` stat rides the staged write as an Observation (as in
+    // MergeStaging.stage) — the old read-back count re-scanned the
     // freshly written staging files in a second job on every streaming
     // micro-batch, pure doubled I/O on the hot path
     val obs = org.apache.spark.sql.Observation()
@@ -596,18 +608,16 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
     val src = new Path(sinkDir)
     require(fs.exists(src), s"no such dir: $sinkDir")
     val txid = java.util.UUID.randomUUID().toString.take(8)
-    fs.listStatus(src).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith(s"$partitionCol="))
-      .foreach { partDir =>
-        val dest = new Path(s"$dataDir/${partDir.getName}")
-        fs.mkdirs(dest)
-        fs.listStatus(partDir).filter(_.isFile).map(_.getPath)
-          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-          .foreach(f => fs.rename(f, new Path(dest, s"${txid}_${f.getName}")))
-        // recursive: listStatus hides .crc checksum siblings, which would
-        // fail a non-recursive delete of the "empty" dir
-        if (fs.listStatus(partDir).isEmpty) fs.delete(partDir, true)
-      }
+    MergeStaging.partDirs(fs, src, partitionCol).foreach { partDir =>
+      val dest = new Path(s"$dataDir/${partDir.getName}")
+      fs.mkdirs(dest)
+      fs.listStatus(partDir).filter(_.isFile).map(_.getPath)
+        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .foreach(f => fs.rename(f, new Path(dest, s"${txid}_${f.getName}")))
+      // recursive: listStatus hides .crc checksum siblings, which would
+      // fail a non-recursive delete of the "empty" dir
+      if (fs.listStatus(partDir).isEmpty) fs.delete(partDir, true)
+    }
     // Crash-safe resume: the adds (and the row count) come from a sweep of
     // data/ AFTER the moves, not from a pre-move plan — the log is empty,
     // so every file under data/ belongs to this import or to a previous
@@ -615,14 +625,12 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
     // count would silently drop the files a crashed run already moved).
     val adds = scala.collection.mutable.ArrayBuffer.empty[Add]
     if (fs.exists(new Path(dataDir))) {
-      fs.listStatus(new Path(dataDir)).filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith(s"$partitionCol="))
-        .foreach { partDir =>
-          val part = partDir.getName.stripPrefix(s"$partitionCol=")
-          fs.listStatus(partDir).filter(_.isFile).map(_.getPath)
-            .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-            .foreach(f => adds += Add(s"data/${partDir.getName}/${f.getName}", part))
-        }
+      MergeStaging.partDirs(fs, new Path(dataDir), partitionCol).foreach { partDir =>
+        val part = partDir.getName.stripPrefix(s"$partitionCol=")
+        fs.listStatus(partDir).filter(_.isFile).map(_.getPath)
+          .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+          .foreach(f => adds += Add(s"data/${partDir.getName}/${f.getName}", part))
+      }
     }
     val n =
       if (adds.isEmpty) 0L
@@ -637,24 +645,39 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
     * versions keep their snapshot until vacuum. The natural op for
     * per-run stage outputs (each pipeline run = one version). */
   def overwrite(df: DataFrame): Long = {
-    val txid = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(s"$root/.tx_$txid")
+    val (_, staging) = newTx()
     // count rides the staged write as an Observation — no read-back job
     val obs = org.apache.spark.sql.Observation()
     df.observe(obs, count(lit(1)).as("n"))
       .write.partitionBy(partitionCol).parquet(staging.toString)
-    val n = obs.get("n").asInstanceOf[Long]
+    commitOverwrite(staging, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** [[overwrite]]'s commit of an already-staged `partitionBy` output:
+    * its `<partCol>=` dirs (none: an empty snapshot) become the new
+    * snapshot, of `inserted` rows. `staged` must exist. */
+  private[graft] def commitOverwrite(staged: Path, inserted: Long): Long = {
+    val (txid, _) = newTx()
     val baseV = latestVersion
     val removes = snapshotFiles(baseV).keys.toSeq
-    val adds = absorbStaging(staging, txid)
+    val adds = absorbStaging(staged, txid)
     commitOrClean(Entry(baseV + 1, txid, System.currentTimeMillis(), "overwrite",
-      adds, removes, inserted = n, updated = 0))
+      adds, removes, inserted, updated = 0))
   }
 
   /** MERGE upsert (update-wins by `versionCol` within the batch, like
-    * [[MergeSink.upsert]]): reads only the files of touched partitions,
-    * rewrites them as new files, commits adds+removes in one entry. */
-  /** `assumeUniqueKeys`: the caller asserts `updates` already holds at
+    * [[MergeSink.upsert]]). The batch is staged first, in one job with
+    * its row count observed (MergeStaging.stage): its listed partition
+    * dirs name the touched partitions in the log's own fragment space
+    * (escaped, with the Hive null sentinel). A batch that touches no
+    * live file is absorbed as staged; otherwise only the touched
+    * partitions' live files are read, merged with the staged batch into
+    * a second staging dir, and replaced in one entry (adds + removes).
+    * An empty batch is a no-op, NOT an empty commit (streaming
+    * foreachBatch fires empty micro-batches; versions track data
+    * changes, not trigger ticks). Nothing is cached.
+    *
+    * `assumeUniqueKeys`: the caller asserts `updates` already holds at
     * most one row per key, skipping the dedupe window (a shuffle + sort
     * per merge — pure overhead for producers like IncrementalCC whose
     * delta is unique by construction). Violating the assertion makes
@@ -665,68 +688,28 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
       versionCol: Option[String] = None,
       assumeUniqueKeys: Boolean = false): MergeStats = {
     require(keyCols.nonEmpty && !keyCols.contains(partitionCol))
-    val batch = MergeStaging
-      .dedupe(updates, keyCols, versionCol, assumeUniqueKeys).cache()
-    // ONE census job replaces the old isEmpty + touched-partitions
-    // collect + batch.count() trio: per-partition counts give all three
-    // answers, and a maintenance session folding many small batches
-    // (q147's shape) pays one scheduled job instead of three.
-    val census = MergeStaging.censusStrings(batch, partitionCol)
-    // empty merge = no-op, NOT an empty commit (streaming foreachBatch
-    // fires empty micro-batches on state flushes; versions should track
-    // data changes, not trigger ticks)
-    if (census.isEmpty) {
-      batch.unpersist()
+    val batch = MergeStaging.dedupe(updates, keyCols, versionCol, assumeUniqueKeys)
+    val (txid, staged) = newTx()
+    val (batchTotal, parts) = MergeStaging.stage(fs, batch, partitionCol, staged)
+    if (parts.isEmpty) {
+      fs.delete(staged, true)
       return MergeStats(latestVersion, 0, 0, 0)
     }
-    // Census values are RAW cast-strings; the file log's `part` field is
-    // the DIRECTORY FRAGMENT absorbStaging stripped from the staged dir
-    // name — percent-escaped (':' → '%3A') with null as the Hive
-    // sentinel. Match in fragment space: a raw "a:b" never equals the
-    // logged "a%3Ab", so the old raw-string match missed that
-    // partition's live files — they were neither read into the merge nor
-    // listed in removes, leaving the stale file live NEXT TO the new one
-    // (duplicate keys on every later read).
-    val touched = census.map { case (s, _) => MergeStaging.partFragment(s) }.toSet
-    val batchTotal = census.map(_._2).sum
-
+    val touched = parts.map(_.getName.stripPrefix(s"$partitionCol=")).toSet
     val baseV = latestVersion
-    val liveFiles = snapshotFiles(baseV)
-    val touchedFiles = liveFiles.filter { case (_, part) => touched(part) }.keys.toSeq
-
-    // ins/upd stats ride the staged write as Observation metrics via
-    // MergeStaging.observedMerge (the EtlPipeline split-census move):
-    // the old shape spent an extra left_semi count job and an
-    // `existing` cache per fold just for MergeStats. observedMerge also
-    // enforces that `existing` is read via the BATCH's session — the
-    // cross-session form hangs under foreachBatch (QuoteStream's path;
-    // see MergeStaging's session-discipline note).
-    val (merged, statsOf) =
-      if (touchedFiles.isEmpty)
-        (batch, () => (batchTotal, 0L))
+    val touchedFiles = snapshotFiles(baseV)
+      .collect { case (p, part) if touched(part) => p }.toSeq
+    val (absorbed, (inserted, updated)) =
+      if (touchedFiles.isEmpty) (staged, (batchTotal, 0L))
       else {
-        val existing = updates.sparkSession.read.option("basePath", dataDir)
-          .parquet(touchedFiles.sorted.map(p => s"$root/$p"): _*)
-        MergeStaging.observedMerge(batch, existing, keyCols, batchTotal)
+        val (_, merged) = newTx()
+        val stats = MergeStaging.mergeStaged(batch, staged,
+          touchedFiles.sorted.map(p => s"$root/$p"), dataDir, keyCols, partitionCol,
+          batchTotal, merged)
+        fs.delete(staged, true)
+        (merged, stats)
       }
-
-    val txid = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(s"$root/.tx_$txid")
-    // Coalesce the staged delta to ONE file per touched partition: an
-    // unrepartitioned partitionBy write fans out to (upstream tasks ×
-    // partition values) fragments, so every merge fold inflates the
-    // table's file count and the next fold's probe pays the file-open
-    // tax (compact() only heals it every compactEvery commits). A big
-    // single-partition delta serializes into one task here — the merge
-    // delta is small by design; bulk loads go through append/overwrite.
-    merged.repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(staging.toString)
-    // Unpersist once the staged write has materialized the batch: a
-    // long-running stream calls upsert per micro-batch, and a leaked
-    // cache per batch is unbounded executor storage-memory growth.
-    batch.unpersist()
-    val (inserted, updated) = statsOf()
-    val adds = absorbStaging(staging, txid)
+    val adds = absorbStaging(absorbed, txid)
     val v = commitOrClean(Entry(baseV + 1, txid, System.currentTimeMillis(),
       "merge", adds, touchedFiles, inserted, updated))
     MergeStats(v, inserted, updated, adds.map(_.part).distinct.length.toLong)
@@ -749,8 +732,7 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
     val paths = doomedParts.values.flatten.map { case (p, _) => s"$root/$p" }.toSeq
     val df = spark.read.option("basePath", dataDir).parquet(paths.sorted: _*)
       .coalesce(math.max(1, targetFiles))
-    val txid = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(s"$root/.tx_$txid")
+    val (txid, staging) = newTx()
     df.write.partitionBy(partitionCol).parquet(staging.toString)
     val adds = absorbStaging(staging, txid)
     val removes = doomedParts.values.flatten.map(_._1).toSeq

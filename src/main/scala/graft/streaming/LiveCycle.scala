@@ -107,12 +107,6 @@ object LiveCycle {
     EngineState(s.cash, s.nextId, unpackLots(s.lots), unpackLots(s.shortLots),
       s.entryPrice, s.entryAtr, s.stopLevel, s.targetLevel, s.entryBar, s.barIdx))
 
-  /** bars (streaming) → fills. `minBars`: trade only once a ticker has
-    * this much history (the batch loop's warmup: its first cycle sees
-    * `dates − cycles + 1` bars). `histCap` bounds state growth; keep it
-    * ≥ the forecaster's effective lookback or long-history parity with
-    * an uncapped batch run decays (default 4096 daily bars ≈ 16 years).
-    */
   /** Shared per-ticker fold: ordered bars through same-bar gate →
     * history append → [[AutoTrader.signalForHistory]] → risk-mode entry
     * gate → engine step. Both the in-order and the reorder-buffered
@@ -153,6 +147,12 @@ object LiveCycle {
     (st, out.result())
   }
 
+  /** bars (streaming) → fills. `minBars`: trade only once a ticker has
+    * this much history (the batch loop's warmup: its first cycle sees
+    * `dates − cycles + 1` bars). `histCap` bounds state growth; keep it
+    * ≥ the forecaster's effective lookback or long-history parity with
+    * an uncapped batch run decays (default 4096 daily bars ≈ 16 years).
+    */
   def fills(bars: Dataset[Bar], minBars: Int,
       fcCfg: ForecastEngine.Config = ForecastEngine.Config(horizon = 5, mcPaths = 100),
       sigCfg: SignalGenerator.Config = SignalGenerator.Config(),

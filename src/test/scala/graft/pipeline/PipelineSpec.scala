@@ -19,7 +19,7 @@ import graft.{GraftSession, TestSpark}
 import graft.etl.{Preprocessor, Splitter}
 import graft.exec.StrategyOptimizer
 import graft.features.{FeatureBuilder, FeatureParity}
-import graft.sources.{CacheManager, SyntheticSource}
+import graft.sources.{CacheManager, GraftSwapFailFs, SyntheticSource}
 
 class PipelineSpec extends AnyFunSuite with TestSpark {
 
@@ -264,6 +264,15 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     assert(rows1 === res1.rowsPerSplit("training"))
     // schema parity with plain mode: no split column in stage outputs
     assert(!table.read().columns.contains("split"))
+    // row parity with plain mode: both modes share the one stage write
+    val plain = Files.createTempDirectory("graft_etl_v_plain").toString
+    EtlPipeline.run(spark, bars1, EtlPipeline.Config(outDir = plain))
+    Seq("processed", "training").foreach { st =>
+      val p = spark.read.parquet(s"$plain/$st")
+      val v = new graft.sources.VersionedTable(spark, s"$out/$st", "ticker").read()
+        .select(p.columns.map(col): _*)
+      assert(v.exceptAll(p).isEmpty && p.exceptAll(v).isEmpty, st)
+    }
 
     // second run with MORE data overwrites into a new version
     val bars2 = SyntheticSource.generate(spark, Seq("AAPL", "MSFT"), 300, seed = 3).toDF()
@@ -273,6 +282,25 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     // time travel: the first run's training stage is still exactly readable
     assert(table.readAt(v1).count() === rows1)
     assert(table.history().map(_.op).forall(_ == "overwrite"))
+  }
+
+  test("a failed stage publish throws by name and leaves the previous run's stage on disk") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftswapf.impl", classOf[GraftSwapFailFs].getName)
+    val local = Files.createTempDirectory("graft_etl_pubf").toString
+    val cfg = EtlPipeline.Config(outDir = s"graftswapf://$local")
+    val res1 = EtlPipeline.run(spark, cleanBars, cfg)
+    val run1 = stageRows(s"$local/training")
+    assert(run1.size.toLong === res1.rowsPerSplit("training"))
+    val bars2 = SyntheticSource.generate(spark, Seq("AAPL", "MSFT"), 300, seed = 3).toDF()
+    GraftSwapFailFs.failStage.set("training")
+    val e = try intercept[java.io.IOException](EtlPipeline.run(spark, bars2, cfg))
+      finally GraftSwapFailFs.failStage.set(null)
+    assert(e.getMessage.contains("stage publish swap: failed to move staged"), e.getMessage)
+    // run 1's training rows were moved aside, not deleted, and run 2's
+    // are still staged: both copies are on disk
+    assert(stageRows(s"$local/_stages_old/training") === run1)
+    assert(stageRows(s"$local/_stages_tmp/_stage=training").size > run1.size)
   }
 
   test("cache-first reads: full hit avoids fetch; tail delta fetches only the gap") {

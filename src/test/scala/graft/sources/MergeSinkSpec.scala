@@ -354,31 +354,3 @@ class MergeSinkSpec extends AnyFunSuite with TestSpark {
       === Set((1L, 10.0), (2L, 99.0), (3L, 30.0), (4L, 40.0)))
   }
 }
-
-/** RawLocalFileSystem under a fake scheme whose rename FAILS (returns
-  * false, like a transient HDFS failure) when armed and the source is a
-  * staged partition dir being swapped live (`failStagedSwaps`), the
-  * incoming dir being renamed to staging (`failIncoming`), or the commit
-  * marker being moved into place (`failMarker`) — task-commit renames
-  * (src under `_temporary`) pass through, so the parquet writes
-  * themselves succeed and only the named rename is hit. */
-class GraftSwapFailFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getScheme: String = "graftswapf"
-  override def getUri: java.net.URI = java.net.URI.create("graftswapf:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean = {
-    val s = src.toString
-    val d = dst.toString
-    val hit = !s.contains("_temporary") && (
-      GraftSwapFailFs.failStagedSwaps.get() && s.contains("/.staging_") &&
-        !d.contains("/.staging_") ||
-      GraftSwapFailFs.failIncoming.get() && s.contains("/.incoming_") ||
-      GraftSwapFailFs.failMarker.get() && src.getName == "._graft_commit_tmp")
-    !hit && super.rename(src, dst)
-  }
-}
-object GraftSwapFailFs {
-  val failStagedSwaps = new java.util.concurrent.atomic.AtomicBoolean(false)
-  val failIncoming = new java.util.concurrent.atomic.AtomicBoolean(false)
-  val failMarker = new java.util.concurrent.atomic.AtomicBoolean(false)
-}

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{GraftSession, TestSpark}
 
 class VersionedTableSpec extends AnyFunSuite with TestSpark {
 
@@ -394,6 +394,57 @@ class VersionedTableSpec extends AnyFunSuite with TestSpark {
     // pre-fix each upsert leaked one cached `existing` (+5 here); allow
     // slack for concurrent suites sharing the session
     assert(after - before < 5, s"persistent RDDs grew $before -> $after")
+  }
+
+  test("a pure-insert upsert into new partitions runs exactly one Spark job and caches nothing") {
+    val s = spark; import s.implicits._
+    val (_, t) = mkTable("1job")
+    t.append(Seq(("AAPL", 1L, 10.0, 1), ("MSFT", 1L, 20.0, 2))
+      .toDF("ticker", "seq", "price", "m")): Unit
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val counts = new GraftSession.Counts
+    // no stage of the upsert's jobs may fill or read a cached block
+    val cachedRdds = new java.util.concurrent.atomic.AtomicInteger
+    val cacheProbe = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        cachedRdds.addAndGet(e.stageInfo.rddInfos.count(_.storageLevel.isValid)): Unit
+    }
+    // as in MergeSinkSpec's twin: a foreachBatch batch runs with AQE off,
+    // and under AQE the repartition's map stage is a job of its own
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    def counted[T](body: => T): T = {
+      GraftSession.drain(spark.sparkContext)
+      counts.reset()
+      spark.sparkContext.addSparkListener(counts)
+      spark.sparkContext.addSparkListener(cacheProbe)
+      try body finally {
+        GraftSession.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(counts)
+        spark.sparkContext.removeSparkListener(cacheProbe)
+      }
+    }
+    try {
+      val st = counted(t.upsert(
+        Seq(("AAPL", 2L, 11.0, 3), ("MSFT", 2L, 21.0, 3), ("MSFT", 3L, 22.0, 4))
+          .toDF("ticker", "seq", "price", "m"),
+        keyCols = Seq("ticker", "seq"), assumeUniqueKeys = true))
+      assert(st === t.MergeStats(version = 2, inserted = 3, updated = 0, partitions = 2))
+      assert(counts.jobs === 1, counts.toString)
+      // a colliding batch: the staged write, then the merge's write,
+      // whose anti join broadcasts the staged batch in a job of its own
+      val st2 = counted(t.upsert(
+        Seq(("AAPL", 1L, 99.0, 1), ("AAPL", 4L, 13.0, 3)).toDF("ticker", "seq", "price", "m"),
+        keyCols = Seq("ticker", "seq"), assumeUniqueKeys = true))
+      assert(st2 === t.MergeStats(version = 3, inserted = 1, updated = 1, partitions = 2))
+      assert(counts.jobs === 3, counts.toString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(cachedRdds.get === 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
+    assert(t.read().select("ticker", "seq", "price").as[(String, Long, Double)]
+      .collect().toSet === Set(("AAPL", 1L, 99.0), ("MSFT", 1L, 20.0), ("AAPL", 2L, 11.0),
+        ("MSFT", 2L, 21.0), ("MSFT", 3L, 22.0), ("AAPL", 4L, 13.0)))
   }
 
   test("comma-valued partitions round-trip the log: removes parse whole, merged partitions never read duplicates, vacuum reclaims the comma path") {
