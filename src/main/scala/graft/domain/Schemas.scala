@@ -42,8 +42,7 @@ final case class QualityReport(
     nNonPositivePrices: Long,
     nNegativeVolume: Long,
     missingRatio: Double,
-    status: String, // PASS | WARN | FAIL
-    nFeatureNulls: Long) // rows with a null ticker, date, close, high or low
+    status: String) // PASS | WARN | FAIL
 
 /** A trading signal (reference models/time_series_signal_generator.py:151). */
 final case class Signal(

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.domain.QualityReport
-import graft.features.FeatureKernel
 
 /** OHLCV validator — rebuild of the reference's predicate set
   * (/root/reference/etl/data_validator.py:36-90: price positivity, volume
@@ -24,13 +23,10 @@ object Validator {
   /** The full validation report as a LAZY one-row DataFrame — the same
     * aggregation [[validate]] collects, including the PASS/WARN/FAIL
     * status column, so callers (and the q173 oracle gate) can compose it
-    * without forcing a job at construction time. `n_feature_nulls`
-    * counts the rows with a null in one of the feature kernel's input
-    * columns (`graft.features.FeatureKernel.inputCols`); it feeds no
-    * status. `exactDistinct = false` profiles ticker cardinality with HLL
-    * (`approx_count_distinct`) — at 100 TB the exact distinct is the
-    * report's only expensive aggregate, and every pass/fail predicate
-    * stays exact either way.
+    * without forcing a job at construction time. `exactDistinct = false`
+    * profiles ticker cardinality with HLL (`approx_count_distinct`) — at
+    * 100 TB the exact distinct is the report's only expensive aggregate,
+    * and every pass/fail predicate stays exact either way.
     *
     * Plan: three aggregation levels and no window or sort. Level 1 is
     * one row per (ticker, date) key with its row count and the row-level
@@ -56,9 +52,7 @@ object Validator {
       col(c) === Double.PositiveInfinity || col(c) === Double.NegativeInfinity)),
     "n_nulls" -> sumOf((priceCols :+ "volume").map(c => col(c).isNull)),
     "n_nonpos" -> sumOf(priceCols.map(c => col(c) <= 0)),
-    "n_negvol" -> cnt(col("volume") < 0),
-    "n_feature_nulls" -> cnt(FeatureKernel.inputCols.map(c => col(c).isNull)
-      .reduce(_ || _))) ++
+    "n_negvol" -> cnt(col("volume") < 0)) ++
     (priceCols :+ "volume").map(c => s"_null_$c" -> cnt(col(c).isNull))
 
   /** Level 1: one row per (ticker, date) key. */
@@ -88,7 +82,7 @@ object Validator {
         min("_bars").as("min_bars")) ++ summed: _*)
       .select(col("n_rows"), col("n_tickers"), col("n_dup"), col("n_nonmono"),
         col("n_nonfinite"), col("n_nulls"), col("n_nonpos"), col("n_negvol"),
-        missing.as("missing_ratio"), col("min_bars"), col("n_feature_nulls"))
+        missing.as("missing_ratio"), col("min_bars"))
       .withColumn("status",
         when(col("n_rows") === 0 || col("n_dup") > 0 || col("n_nonmono") > 0 ||
           col("n_nonfinite") > 0 || col("n_nonpos") > 0 || col("n_negvol") > 0 ||
@@ -143,8 +137,7 @@ object Validator {
       nNonPositivePrices = l("n_nonpos"),
       nNegativeVolume = l("n_negvol"),
       missingRatio = d("missing_ratio"),
-      status = agged.getString(agged.fieldIndex("status")),
-      nFeatureNulls = l("n_feature_nulls"))
+      status = agged.getString(agged.fieldIndex("status")))
   }
 
   /** PASS/WARN/FAIL → routing classification (preprocessor.py:174-186):

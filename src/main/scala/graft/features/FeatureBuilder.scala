@@ -7,15 +7,17 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   StructField, StructType}
 
 /** The feature engine — rebuild of /root/reference/etl/
-  * time_series_feature_builder.py:71-290 (~40 engineered columns) as one
-  * wide DataFrame projection.
+  * time_series_feature_builder.py:71-290 (~40 engineered columns).
   *
-  * Scale design: every per-ticker feature shares the SAME window spec
-  * (partitionBy ticker, orderBy date), so Catalyst collapses them into a
-  * single Window operator → exactly ONE shuffle by ticker for ~30
-  * features. Cross-sectional features (per-date rank/z-score) are the
+  * Scale design: ONE engine. The per-ticker windowed block (lags,
+  * returns, rolling moments, gap run length, drawdowns, CVaR, ATR, the
+  * seasonal trend) is [[FeatureKernel]]'s one halo-exchange pass: one
+  * range shuffle on (ticker, date), row-proportional parallelism, O(h)
+  * per row. Cross-sectional features (per-date rank/z-score) are the
   * only second shuffle (by date). Only the per-ticker dimensions (vol
   * cuts, seasonal index: at most tickers × 126 rows) reach the driver.
+  * The reference's per-ticker `Window` form of the block lives in the
+  * tests (`WindowedFeatures`) as the parity oracle.
   *
   * Feature ↔ reference map (file:line of time_series_feature_builder.py):
   *  lags/returns :105-108 · rolling mean/std/skew :110-116 · diff :117-119
@@ -29,8 +31,8 @@ object FeatureBuilder {
   val lagSet: Seq[Int] = Seq(1, 5, 10, 20)
   val rollSet: Seq[Int] = Seq(5, 10, 20, 60)
 
-  /** The per-ticker windowed block, in the column order both [[build]]
-    * and [[FeatureKernel]] emit it after the input columns. */
+  /** The per-ticker windowed block, in the column order [[FeatureKernel]]
+    * emits it after the input columns. */
   private[features] val windowedCols: Seq[String] =
     ("ret_1" +: lagSet.flatMap(k => Seq(s"close_lag_$k", s"ret_$k"))).distinct ++
       Seq("diff_1", "diff_5") ++
@@ -39,100 +41,18 @@ object FeatureBuilder {
         "max_drawdown_60", "cvar_95_60", "true_range", "atr_14",
         "seasonal_trend_126", "_detrended", "_phase")
 
-  /** The reference form: ~20 sliding aggregates through Spark's
-    * WindowExec, one task per ticker. Accepts any bar frame — nullable
-    * closes included (the gap-run feature exists for them) — and stays
-    * the spec-pinned reference for [[buildFast]]. Each dependency level
-    * is ONE projection (a withColumn per feature re-analyzed the whole
-    * growing plan ~60 times, about a second of driver time per call). */
-  def build(df: DataFrame, dropNa: Boolean = true): DataFrame =
-    finish(windowed(df), dropNa, Nil, Nil).features
-
-  /** [[build]]'s per-ticker windowed block, before [[finish]]. */
-  private def windowed(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy("ticker").orderBy("date")
-    def wN(n: Int) = w.rowsBetween(-(n - 1), 0)
-    val close = col("close")
-    val ret1 = col("ret_1")
-    // missing-gap run length (gaps-and-islands over the null mask)
-    val isGap = when(close.isNull, 1).otherwise(0)
-    val change = when(isGap =!= lag(isGap, 1, 0).over(w), 1).otherwise(0)
-    val prevClose = lag(close, 1).over(w)
-    val peak60 = max(close).over(wN(60))
-    val trend = avg(close).over(wN(126))
-    // level 1: everything over the input columns alone — lags, multi-
-    // horizon pct changes, differencing, rolling moments (min_periods=1
-    // semantics: the frame grows from 1 row), drawdown depth vs the
-    // rolling peak, true range, and the seasonal decompose-lite at
-    // period 126 (reference :197-208, statsmodels one-sided additive):
-    // trend = one-sided MA(126); detrended + phase feed the
-    // per-(ticker, phase) index in finish()
-    val level1 = df.select(Seq(col("*"), (close / prevClose - 1).as("ret_1")) ++
-        lagSet.flatMap(k => lag(close, k).over(w).as(s"close_lag_$k") +:
-          (if (k == 1) Nil else Seq((close / lag(close, k).over(w) - 1).as(s"ret_$k")))) ++
-        Seq((close - prevClose).as("diff_1"), (close - lag(close, 5).over(w)).as("diff_5")) ++
-        rollSet.flatMap(n => Seq(avg(close).over(wN(n)).as(s"roll_mean_$n"),
-          stddev_samp(close).over(wN(n)).as(s"roll_std_$n"),
-          skewness(close).over(wN(n)).as(s"roll_skew_$n"))) ++
-        Seq(sum(change).over(w.rowsBetween(Window.unboundedPreceding, 0)).as("_gap_grp"),
-          when(peak60 =!= 0.0, close / peak60 - 1).as("drawdown_60"),
-          greatest(col("high") - col("low"),
-            abs(col("high") - prevClose), abs(col("low") - prevClose)).as("true_range"),
-          trend.as("seasonal_trend_126"),
-          (close - trend).as("_detrended"),
-          ((row_number().over(w) - 1) % 126).as("_phase")): _*)
-    // level 2: features of level-1 columns — gap run length, drift
-    // intensity |mean20-mean60|/(std60+eps) of returns, downside
-    // volatility, the rolling worst drawdown, ATR(14), and the 60-bar
-    // return list of the CVaR proxy
-    val level2 = level1.select(col("*"),
-      when(close.isNull,
-        count(lit(1)).over(Window.partitionBy(col("ticker"), col("_gap_grp"))))
-        .otherwise(0).as("gap_run_len"),
-      (abs(avg(ret1).over(wN(20)) - avg(ret1).over(wN(60))) /
-        (stddev_samp(ret1).over(wN(60)) + lit(1e-9))).as("drift_intensity"),
-      stddev_samp(when(ret1 < 0, ret1).otherwise(lit(0.0))).over(wN(20))
-        .as("downside_vol_20"),
-      abs(min(col("drawdown_60")).over(wN(60))).as("max_drawdown_60"),
-      // CVaR proxy: exact rolling 5% quantile of returns over 60 bars.
-      // percentile_approx is NOT used here: the window is ≤60 elements,
-      // so an exact sort of the collected frame is cheap and
-      // oracle-parity-safe (SURVEY §7.5 risk 4). The frame list is
-      // collected ONCE and reused — three textual collect_list copies
-      // were three separate window aggregates (3× the O(frame)/row list
-      // building); collect_list skips nulls in Spark, so the non-null-
-      // size guard is just size > 0.
-      collect_list(ret1).over(w.rowsBetween(-59, 0)).as("_cv_lst"),
-      avg(col("true_range")).over(wN(14)).as("atr_14"))
-    val cvar = abs(expr(
-      """CASE WHEN size(_cv_lst) > 0
-        |THEN array_sort(_cv_lst)
-        |  [CAST(floor(0.05 * (size(_cv_lst) - 1)) AS INT)]
-        |END""".stripMargin))
-    val inputCols = df.columns.toSeq.filterNot(windowedCols.contains)
-    level2.select(inputCols.map(c => col(s"`$c`")) ++ windowedCols.map {
-      case "cvar_95_60" => cvar.as("cvar_95_60")
-      case c => col(c)
-    }: _*)
-  }
-
-  /** The fast twin of [[build]]: the same columns in the same order, the
-    * per-ticker windowed block computed by [[FeatureKernel]] in one
-    * halo-exchange streaming pass (row-proportional parallelism, O(h)/row)
-    * instead of ~20 WindowExec sliding aggregates (one core per ticker,
-    * O(frame)/row). Every input column beyond (ticker, date, close, high,
-    * low) — a bar's open, volume, adjClose, source — rides through the
-    * kernel unchanged, so no join back on (ticker, date) is needed.
-    *
-    * Route rule: requires the feature-input contract — non-null ticker,
-    * date, close, high and low, unique (ticker, date). Any other input
-    * takes [[build]], which remains the spec-pinned reference
-    * implementation (parity: FeatureBuilderSpec); `EtlPipeline.run`
-    * routes on exactly this contract. Gated outputs (lags/returns, null
-    * patterns, order statistics, cvar) are bit-identical; inexact moment
-    * VALUES agree to last ulps (the kernel sums exact decimals where
-    * WindowExec sums doubles). */
-  def buildFast(df: DataFrame, dropNa: Boolean = true,
+  /** The feature frame of a bar frame: its columns in its order, the
+    * windowed block, then [[finish]]'s cross-sectional tail. Every input
+    * column beyond (ticker, date, close, high, low) — a bar's open,
+    * volume, adjClose, source — rides through the kernel unchanged, so
+    * no join back on (ticker, date) is needed. Accepts every frame
+    * `Preprocessor.handleMissing` emits ([[FeatureKernel]]'s input
+    * contract); a ticker whose close is null on only some rows must be
+    * filled first. Gated outputs (lags/returns, null patterns, order
+    * statistics, cvar) are bit-identical to the Window form; inexact
+    * moment VALUES agree to last ulps (the kernel sums exact decimals
+    * where WindowExec sums doubles). */
+  def build(df: DataFrame, dropNa: Boolean = true,
       reuseKernel: Boolean = false): DataFrame = {
     // reuseKernel: finish() consumes the kernel frame twice (its
     // dimension aggregate, collected at once, then the main stream), and
@@ -152,20 +72,17 @@ object FeatureBuilder {
     * fit columns. */
   final case class Fitted(features: DataFrame, fitSchema: StructType, fit: Array[Row])
 
-  /** The feature frame with dropNa = false — [[buildFast]]'s when `fast`,
-    * else [[build]]'s — plus `perTicker`: aggregate columns (or
-    * expressions over aggregates) on the windowed block, input columns
-    * included, evaluated inside the one per-ticker aggregate [[finish]]
-    * already runs and returned collected. The `carry` columns of the fit
-    * also ride [[finish]]'s dimension join onto every feature row of a
-    * non-null ticker (null on the others), appended after the feature
-    * columns. */
-  def buildFitting(df: DataFrame, fast: Boolean, perTicker: Seq[Column],
-      carry: Seq[String]): Fitted =
-    finish(if (fast) FeatureKernel.run(df) else windowed(df), dropNa = false,
-      perTicker, carry)
+  /** [[build]]'s feature frame with dropNa = false, plus `perTicker`:
+    * aggregate columns (or expressions over aggregates) on the windowed
+    * block, input columns included, evaluated inside the one per-ticker
+    * aggregate [[finish]] already runs and returned collected. The
+    * `carry` columns of the fit also ride [[finish]]'s dimension join
+    * onto every feature row of a non-null ticker (null on the others),
+    * appended after the feature columns. */
+  def buildFitting(df: DataFrame, perTicker: Seq[Column], carry: Seq[String]): Fitted =
+    finish(FeatureKernel.run(df), dropNa = false, perTicker, carry)
 
-  /** Cross-sectional + dimension-join tail shared by both forms: vol
+  /** Cross-sectional + dimension-join tail of the windowed block: vol
     * regime, per-date rank/z, the seasonal index join, calendar flags,
     * and the dropNa gate. `out` carries the per-ticker windowed block
     * (incl. `_detrended`, `_phase`). Output: ticker, the other columns of
@@ -177,8 +94,8 @@ object FeatureBuilder {
     * tickers × 126 rows and broadcast back, so `out`'s lineage runs
     * twice (that aggregate, then the main stream), not once per
     * dimension. The aggregate runs when the frame is built (one job), so
-    * [[build]] and [[buildFast]] are not lazy. */
-  private def finish(out: DataFrame, dropNa: Boolean, perTicker: Seq[Column],
+    * [[build]] is not lazy. */
+  private[graft] def finish(out: DataFrame, dropNa: Boolean, perTicker: Seq[Column],
       carry: Seq[String]): Fitted = {
     val vol = col("roll_std_20")
     val agg = out.groupBy("ticker").agg(

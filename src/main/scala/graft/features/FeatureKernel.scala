@@ -9,34 +9,52 @@ import org.apache.spark.sql.types.StructType
 
 import graft.operators.ChunkedWindow
 
-/** The per-ticker half of [[FeatureBuilder.build]] as ONE halo-exchange
-  * streaming pass (the fast twin behind [[FeatureBuilder.buildFast]]).
+/** The per-ticker windowed block of [[FeatureBuilder.build]] as ONE
+  * halo-exchange streaming pass — the feature engine.
   *
-  * Plain `build()` evaluates ~20 sliding aggregates through Spark's
-  * WindowExec, which re-walks the frame per row (O(frame)/row, no
-  * retraction) and serializes each ticker onto one core. This kernel
-  * computes every per-ticker windowed column in a single O(h)/row scan
-  * on `ChunkedWindow.haloScan` (h = 126, the deepest lookback), so
+  * The Window form of this block (the spec oracle, `WindowedFeatures` in
+  * the tests) evaluates ~20 sliding aggregates through Spark's WindowExec,
+  * which re-walks the frame per row (O(frame)/row, no retraction) and
+  * serializes each ticker onto one core. This kernel computes every
+  * per-ticker windowed column in a single O(h)/row scan on
+  * `ChunkedWindow.haloScan` (h = 126, the deepest lookback), with exact
+  * running prefix sums in place of per-frame re-aggregation, so
   * parallelism scales with ROWS, not tickers — the 100 TB shape.
   *
-  * Parity contract with the plain form (spec: FeatureBuilderSpec):
+  * Parity contract with the Window form (specs: FeatureBuilderSpec,
+  * PipelineSpec):
   *  - BIT-EXACT: all lags/returns/diffs (pure per-row IEEE ops),
   *    drawdown_60 / max_drawdown_60 (order statistics), cvar_95_60
-  *    (rank selection over exact returns), every NULL pattern, and the
-  *    all-equal-window cases (roll_std = 0.0, roll_skew = NULL — the
-  *    m2 = 0 path, detected via equality run-lengths, exactly as a
-  *    per-frame recomputation sees them).
+  *    (rank selection over exact returns), gap_run_len, true_range,
+  *    every NULL pattern, and the all-equal-window cases (roll_std =
+  *    0.0, roll_skew = NULL — the m2 = 0 path, detected via equality
+  *    run-lengths, exactly as a per-frame recomputation sees them).
   *  - LAST-ULPS: rolling mean/std/skew, drift, downside vol, ATR, the
   *    seasonal trend — the kernel sums exact decimals (shortest-decimal
   *    image of each double, order-independent and cancellation-free at
-  *    ANY prefix depth) where the plain form sums doubles in frame
+  *    ANY prefix depth) where the Window form sums doubles in frame
   *    order. Neither is "the" value; no gate hashes these.
   *
-  * Requires non-null ticker/date/close/high/low (the feature-input
-  * contract, counted by `Validator`'s `n_feature_nulls`): the gap-run
-  * feature needs unbounded island lookahead, so null-close inputs must
-  * use the plain form — `EtlPipeline.run` routes them there. The kernel
-  * throws on null input rather than degrade silently.
+  * Input contract: every frame `Preprocessor.handleMissing` emits. After
+  * its fill, each price column of a ticker is null on every row or on
+  * none, so the kernel accepts:
+  *  - a null date: it sorts first within its ticker, as `orderBy("date")`
+  *    puts it, and comes out null (`Validator` FAILs a second one in the
+  *    same ticker as a duplicate key);
+  *  - a null ticker: its rows are one key, as `partitionBy` makes them;
+  *  - a null high or low on any row: `true_range` skips the null legs as
+  *    `greatest` does, and `atr_14` averages the non-null ranges;
+  *  - a ticker whose close is null on every row: every close-derived
+  *    column is null, `downside_vol_20` is the deviation of its all-zero
+  *    series, and `gap_run_len` is the ticker's row count.
+  * `gap_run_len` is the reference's: the total length of the null-close
+  * island a row sits in (`groupby(gap).transform(sum)`,
+  * time_series_feature_builder.py:121-129), 0 on a non-null close — not
+  * the length of the run so far. A ticker whose close is null on some
+  * rows but not all is rejected with an IllegalArgumentException that
+  * names it: fill first. Every pair of neighbouring rows is compared by
+  * the partition holding the second (the first arrives in its halo), so
+  * the check holds for a ticker spread over many partitions.
   *
   * Every other input column (a bar's open, volume, adjClose, source) is
   * carried through the shuffle on its own row, untouched, and comes out
@@ -45,33 +63,39 @@ import graft.operators.ChunkedWindow
   */
 object FeatureKernel {
 
-  /** Kernel input row (public for Spark codegen). */
+  /** Kernel input row. `nulls` flags which of date, close, high and low
+    * are null ([[NoDate]], [[NoClose]], [[NoHigh]], [[NoLow]]); a null
+    * field holds 0. */
   case class FRow(ticker: String, dateUs: Long, close: Double,
-      high: Double, low: Double)
+      high: Double, low: Double, nulls: Int) {
+    def has(bit: Int): Boolean = (nulls & bit) == 0
+  }
+  final val NoDate = 1; final val NoClose = 2; final val NoHigh = 4; final val NoLow = 8
 
   /** Kernel output: the five input columns, then the per-ticker windowed
     * feature block in build()'s column order. */
   final case class FeatRow(
-      ticker: String, date_us: Long, close: Double, high: Double, low: Double,
+      ticker: String, date_us: Option[Long], close: Option[Double],
+      high: Option[Double], low: Option[Double],
       ret_1: Option[Double], close_lag_1: Option[Double],
       close_lag_5: Option[Double], ret_5: Option[Double],
       close_lag_10: Option[Double], ret_10: Option[Double],
       close_lag_20: Option[Double], ret_20: Option[Double],
       diff_1: Option[Double], diff_5: Option[Double],
-      roll_mean_5: Double, roll_std_5: Option[Double],
+      roll_mean_5: Option[Double], roll_std_5: Option[Double],
       roll_skew_5: Option[Double],
-      roll_mean_10: Double, roll_std_10: Option[Double],
+      roll_mean_10: Option[Double], roll_std_10: Option[Double],
       roll_skew_10: Option[Double],
-      roll_mean_20: Double, roll_std_20: Option[Double],
+      roll_mean_20: Option[Double], roll_std_20: Option[Double],
       roll_skew_20: Option[Double],
-      roll_mean_60: Double, roll_std_60: Option[Double],
+      roll_mean_60: Option[Double], roll_std_60: Option[Double],
       roll_skew_60: Option[Double],
       gap_run_len: Long,
       drift_intensity: Option[Double], downside_vol_20: Option[Double],
       drawdown_60: Option[Double], max_drawdown_60: Option[Double],
       cvar_95_60: Option[Double],
-      true_range: Double, atr_14: Double,
-      seasonal_trend_126: Double, _detrended: Double, _phase: Int)
+      true_range: Option[Double], atr_14: Option[Double],
+      seasonal_trend_126: Option[Double], _detrended: Option[Double], _phase: Int)
 
   private val H = 126 // deepest lookback: the seasonal trend window
   private val R = 128 // value-ring capacity (window ≤ 126 back incl. lag)
@@ -92,22 +116,26 @@ object FeatureKernel {
     private val d1 = new Array[JBig](RP); private val d2 = new Array[JBig](RP)
     private val t1 = new Array[JBig](RP)
     private val rcnt = new Array[Long](RP) // prefix count of non-null rets
+    private val tcnt = new Array[Long](RP) // prefix count of non-null ranges
     // equality run lengths (pairs of consecutive equal values ending here)
     private var closeEq = 0L
     private var retEq = 0L
     private var dEq = 0L
     private var rn = 0L // global per-key row index of the NEXT real row
     private var k = 0L // local pushes so far (P(k) is the top prefix)
+    private var keyRows = 0L // the key's row count, over all partitions
+    private var nullCloses = false // the key's close is null on every row
 
-    def reset(rn0: Long): Unit = {
+    def reset(rn0: Long, n: Long): Unit = {
       rn = rn0
       k = 0
+      keyRows = n
       closeEq = 0; retEq = 0; dEq = 0
       dPrev = 0.0
       c1(0) = JBig.ZERO; c2(0) = JBig.ZERO; c3(0) = JBig.ZERO
       r1(0) = JBig.ZERO; r2(0) = JBig.ZERO
       d1(0) = JBig.ZERO; d2(0) = JBig.ZERO
-      t1(0) = JBig.ZERO; rcnt(0) = 0L
+      t1(0) = JBig.ZERO; rcnt(0) = 0L; tcnt(0) = 0L
     }
 
     // halo rows warm the rings exactly like real rows, without emitting;
@@ -122,22 +150,31 @@ object FeatureKernel {
 
     private def push(f: FRow): Unit = {
       val j = k // local index of this row
+      // the key's first pushed row sets its mode; every later one,
+      // halo rows included, must agree with its predecessor's
+      if (j == 0) nullCloses = !f.has(NoClose)
+      else require(f.has(NoClose) != nullCloses,
+        s"FeatureKernel: ticker ${f.ticker} has a null close on some rows but " +
+          "not all; fill it first (Preprocessor.handleMissing)")
       val vs = (j % R).toInt
       val hasPrev = j > 0
       val prevClose = if (hasPrev) cvR(((j - 1) % R).toInt) else 0.0
       // ret_1: no predecessor (the key's first global row, or the cold
-      // edge of a halo replay — never read by an emitted frame)
-      val retNull = !hasPrev
+      // edge of a halo replay — never read by an emitted frame), or no
+      // close at all
+      val retNull = !hasPrev || nullCloses
       val ret = if (retNull) 0.0 else f.close / prevClose - 1
       // downside series: when(ret < 0, ret).otherwise(0.0) — null ret
       // falls to otherwise, NaN < 0 is false
       val d = if (!retNull && ret < 0) ret else 0.0
-      // true range: greatest skips the null |high-prev|,|low-prev| legs
-      // on the first row
-      val tr =
-        if (!hasPrev) f.high - f.low
-        else gMax(f.high - f.low,
-          gMax(math.abs(f.high - prevClose), math.abs(f.low - prevClose)))
+      // true range: greatest over the non-null legs of high-low,
+      // |high-prev| and |low-prev| (the last two need a previous close)
+      lastTrNull = true
+      if (f.has(NoHigh) && f.has(NoLow)) trLeg(f.high - f.low)
+      if (hasPrev && !nullCloses) {
+        if (f.has(NoHigh)) trLeg(math.abs(f.high - prevClose))
+        if (f.has(NoLow)) trLeg(math.abs(f.low - prevClose))
+      }
 
       // equality runs (pair counters for exact constant-window detection)
       closeEq = if (hasPrev && f.close == prevClose) closeEq + 1 else 0
@@ -155,7 +192,8 @@ object FeatureKernel {
       // frames read the drawdowns of halo rows too). Early halo rows see
       // a clipped window where global truth may be deeper; no emitted
       // frame reaches those slots (depth argument in the scaladoc).
-      val wp = math.min(j + 1, 60L).toInt
+      // Without closes the peak is null, and so is every drawdown.
+      val wp = if (nullCloses) 0 else math.min(j + 1, 60L).toInt
       var peak = Double.NegativeInfinity
       var pi = 0
       while (pi < wp) {
@@ -163,14 +201,14 @@ object FeatureKernel {
         if (java.lang.Double.compare(v, peak) > 0) peak = v
         pi += 1
       }
-      ddNullR(vs) = peak == 0.0
-      ddR(vs) = if (peak == 0.0) 0.0 else f.close / peak - 1
+      ddNullR(vs) = nullCloses || peak == 0.0
+      ddR(vs) = if (ddNullR(vs)) 0.0 else f.close / peak - 1
 
       val cb = JBig.valueOf(f.close)
       val cb2 = cb.multiply(cb)
       val rb = if (retNull) JBig.ZERO else JBig.valueOf(ret)
       val db = JBig.valueOf(d)
-      val trb = JBig.valueOf(tr)
+      val trb = if (lastTrNull) JBig.ZERO else JBig.valueOf(lastTr)
       val to = ((k + 1) % RP).toInt
       val fr = (k % RP).toInt
       c1(to) = c1(fr).add(cb)
@@ -182,8 +220,8 @@ object FeatureKernel {
       d2(to) = d2(fr).add(db.multiply(db))
       t1(to) = t1(fr).add(trb)
       rcnt(to) = rcnt(fr) + (if (retNull) 0L else 1L)
+      tcnt(to) = tcnt(fr) + (if (lastTrNull) 0L else 1L)
 
-      lastTr = tr
       lastRet = ret
       lastRetNull = retNull
       k += 1
@@ -191,12 +229,17 @@ object FeatureKernel {
 
     // last pushed row's derived values (for emit)
     private var lastTr = 0.0
+    private var lastTrNull = true
     private var lastRet = 0.0
     private var lastRetNull = true
     private var dPrev = 0.0
 
-    private def gMax(a: Double, b: Double): Double =
-      if (java.lang.Double.compare(a, b) >= 0) a else b
+    /** One non-null leg of `greatest`: it wins when it is the first or
+      * orders above the best so far (NaN highest, as `greatest` does). */
+    private def trLeg(v: Double): Unit =
+      if (lastTrNull || java.lang.Double.compare(v, lastTr) > 0) {
+        lastTr = v; lastTrNull = false
+      }
 
     private def diff(p: Array[JBig], rows: Long): Double = exact(p, rows).doubleValue
 
@@ -206,10 +249,10 @@ object FeatureKernel {
       p(hiP).subtract(p(loP))
     }
 
-    private def cntDiff(rows: Long): Long = {
+    private def cntDiff(cnt: Array[Long], rows: Long): Long = {
       val hiP = (k % RP).toInt
       val loP = ((k - rows) % RP).toInt
-      rcnt(hiP) - rcnt(loP)
+      cnt(hiP) - cnt(loP)
     }
 
     /** stddev_samp from exact sums: Det.dstddev's formula. */
@@ -226,17 +269,18 @@ object FeatureKernel {
       val close = f.close
 
       def lagC(t: Int): Option[Double] =
-        if (g >= t) Some(cvR(((j - t) % R).toInt)) else None
+        if (g >= t && !nullCloses) Some(cvR(((j - t) % R).toInt)) else None
       def retK(t: Int): Option[Double] = lagC(t).map(close / _ - 1)
       def diffK(t: Int): Option[Double] = lagC(t).map(close - _)
 
       def rows(n: Int): Long = math.min(g + 1, n.toLong)
 
       // rolling close moments for n in {5,10,20,60} + the 126 trend
-      def mean(n: Int): Double = diff(c1, rows(n)) / rows(n)
+      def mean(n: Int): Option[Double] =
+        if (nullCloses) None else Some(diff(c1, rows(n)) / rows(n))
       def stdC(n: Int): Option[Double] = {
         val m = rows(n)
-        if (m < 2) None
+        if (m < 2 || nullCloses) None
         else if (closeEq >= m - 1) Some(0.0) // constant frame: exactly 0
         else Some(stdOf(diff(c1, m), diff(c2, m), m))
       }
@@ -244,7 +288,7 @@ object FeatureKernel {
         val m = rows(n)
         // constant frame (incl. m = 1): central m2 = 0 ⇒ Spark 4
         // skewness yields NULL
-        if (closeEq >= m - 1) None
+        if (closeEq >= m - 1 || nullCloses) None
         else {
           // sqrt(m)·m3/m2^1.5 of the central sums, = N3/N2^1.5 with the
           // scaled central sums N2 = m·m2 and N3 = m²·m3 formed EXACTLY
@@ -264,7 +308,7 @@ object FeatureKernel {
 
       // drift intensity: avg/std of ret over 20/60-row frames (nulls
       // excluded from count; null iff fewer than 1/2 non-null rets)
-      val rc20 = cntDiff(rows(20)); val rc60 = cntDiff(rows(60))
+      val rc20 = cntDiff(rcnt, rows(20)); val rc60 = cntDiff(rcnt, rows(60))
       val drift =
         if (rc20 < 1 || rc60 < 2) None
         else {
@@ -276,7 +320,8 @@ object FeatureKernel {
           Some(math.abs(m20 - m60) / (s60 + 1e-9))
         }
 
-      // downside vol over 20 rows (series never null)
+      // downside vol over 20 rows (series never null: all zeros
+      // without closes)
       val dRows = rows(20)
       val dv =
         if (dRows < 2) None
@@ -335,11 +380,14 @@ object FeatureKernel {
         }
 
       val trRows = rows(14)
+      val trCount = cntDiff(tcnt, trRows)
       val tRows126 = rows(126)
-      val trend = diff(c1, tRows126) / tRows126
+      val trend = if (nullCloses) None else Some(diff(c1, tRows126) / tRows126)
+      def in(bit: Int, v: Double) = if (f.has(bit)) Some(v) else None
 
       FeatRow(
-        f.ticker, f.dateUs, close, f.high, f.low,
+        f.ticker, if (f.has(NoDate)) Some(f.dateUs) else None, in(NoClose, close),
+        in(NoHigh, f.high), in(NoLow, f.low),
         ret_1 = if (lastRetNull) None else Some(lastRet),
         close_lag_1 = lagC(1), close_lag_5 = lagC(5),
         close_lag_10 = lagC(10), close_lag_20 = lagC(20),
@@ -349,43 +397,45 @@ object FeatureKernel {
         roll_mean_10 = mean(10), roll_std_10 = stdC(10), roll_skew_10 = skewC(10),
         roll_mean_20 = mean(20), roll_std_20 = stdC(20), roll_skew_20 = skewC(20),
         roll_mean_60 = mean(60), roll_std_60 = stdC(60), roll_skew_60 = skewC(60),
-        gap_run_len = 0L, // non-null close contract: no gaps by definition
+        gap_run_len = if (nullCloses) keyRows else 0L,
         drift_intensity = drift, downside_vol_20 = dv,
         drawdown_60 = dd, max_drawdown_60 = mdd, cvar_95_60 = cvar,
-        true_range = lastTr, atr_14 = diff(t1, trRows) / trRows,
-        seasonal_trend_126 = trend, _detrended = close - trend,
+        true_range = if (lastTrNull) None else Some(lastTr),
+        atr_14 = if (trCount == 0) None else Some(diff(t1, trRows) / trCount),
+        seasonal_trend_126 = trend, _detrended = trend.map(close - _),
         _phase = (g % 126).toInt)
     }
-  }
-
-  private def nonNull(r: InternalRow, i: Int, name: String): InternalRow = {
-    if (r.isNullAt(i))
-      throw new NullPointerException(s"Null value appeared in non-nullable field: $name")
-    r
   }
 
   private def frowTicker(r: InternalRow): String =
     if (r.isNullAt(0)) null else r.getUTF8String(0).toString
 
   /** A kernel input row from its (ticker, dateUs, close, high, low) struct. */
-  private def frow(k: InternalRow): FRow = FRow(frowTicker(k),
-    nonNull(k, 1, "dateUs").getLong(1), nonNull(k, 2, "close").getDouble(2),
-    nonNull(k, 3, "high").getDouble(3), nonNull(k, 4, "low").getDouble(4))
+  private def frow(k: InternalRow): FRow = {
+    def dbl(i: Int) = if (k.isNullAt(i)) 0.0 else k.getDouble(i)
+    val nulls = (if (k.isNullAt(1)) NoDate else 0) | (if (k.isNullAt(2)) NoClose else 0) |
+      (if (k.isNullAt(3)) NoHigh else 0) | (if (k.isNullAt(4)) NoLow else 0)
+    FRow(frowTicker(k), if (k.isNullAt(1)) 0L else k.getLong(1), dbl(2), dbl(3), dbl(4),
+      nulls)
+  }
 
-  /** The input columns the kernel reads — each must be non-null. */
-  val inputCols: Seq[String] = Seq("ticker", "date", "close", "high", "low")
+  /** The scan key of a (ticker, dateUs) row: a null date sorts first
+    * within its ticker, as `orderBy("date")` puts it. */
+  private def scanKey(r: InternalRow): (String, Long, Long) =
+    if (r.isNullAt(1)) (frowTicker(r), Long.MinValue, -1L)
+    else (frowTicker(r), r.getLong(1), 0L)
+
+  /** The input columns the kernel reads. */
+  private val inputCols: Seq[String] = Seq("ticker", "date", "close", "high", "low")
 
   /** Run the kernel: df must provide ticker, date (timestamp), close,
-    * high, low — all non-null except per the feature-input contract.
-    * Output: df's columns in df's order — the five kernel columns as the
-    * kernel read them (string ticker, timestamp date, double prices),
-    * every other column carried through unchanged on its own row — then
-    * the windowed block in build()'s column order. */
+    * high, low, within the input contract above. Output: df's columns in
+    * df's order — the five kernel columns as the kernel read them
+    * (string ticker, timestamp date, double prices), every other column
+    * carried through unchanged on its own row — then the windowed block
+    * in build()'s column order. */
   def run(df: DataFrame, numPartitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    // A null date/close/high/low fails the read loudly ("null value
-    // appeared in non-nullable field") instead of emitting silently-wrong
-    // gap features — gappy inputs must use FeatureBuilder.build.
     val carried = StructType(df.schema.filterNot(f => inputCols.contains(f.name)))
     val base = df.select(
       struct(
@@ -414,12 +464,12 @@ object FeatureKernel {
     // with the values.
     val toScala = CatalystTypeConverters.createToScalaConverter(carried)
     val keyed = base.queryExecution.toRdd.map { r =>
-      val f = frow(r.getStruct(0, 5))
-      ((f.ticker, f.dateUs, 0L),
-        (f, Row.fromSeq(toScala(r.getStruct(1, carried.size)).asInstanceOf[Row].toSeq)))
+      val k = r.getStruct(0, 5)
+      (scanKey(k),
+        (frow(k), Row.fromSeq(toScala(r.getStruct(1, carried.size)).asInstanceOf[Row].toSeq)))
     }
     val light = base.select(col("_1.ticker"), col("_1.dateUs")).queryExecution.toRdd
-      .map(r => ((frowTicker(r), nonNull(r, 1, "dateUs").getLong(1), 0L), ()))
+      .map(r => (scanKey(r), ()))
 
     val out = ChunkedWindow.haloScan(spark, keyed, light, p, H)(
       () => new Kernel)

@@ -57,13 +57,27 @@ object ChunkedWindow {
 
   /** Per-key streaming kernel driven by [[haloScan]]: `reset` starts a
     * new key run (rn0 = global per-key row index of the first REAL row
-    * in this partition), `halo` warms state with a carried boundary row
-    * (no emit), `row` processes a real row and emits. One instance is
-    * reused across the keys of a partition — reset must clear ALL state. */
+    * in this partition, n = the key's row count over all partitions),
+    * `halo` warms state with a carried boundary row (no emit), `row`
+    * processes a real row and emits. One instance is reused across the
+    * keys of a partition — reset must clear ALL state. */
   private[graft] trait HaloKernel[T, O] {
-    def reset(rn0: Long): Unit
+    def reset(rn0: Long, n: Long): Unit
     def halo(t: T): Unit
     def row(t: T): O
+  }
+
+  /** The scan's (key, t, seq) order. A null key sorts first and is one
+    * group, as `Window.partitionBy(key)` makes it (`Ordering.String`
+    * throws on null). */
+  private implicit val scanOrder: Ordering[(String, Long, Long)] =
+    Ordering.Tuple3(NullFirst, Ordering.Long, Ordering.Long)
+
+  private object NullFirst extends Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null) (if (b == null) 0 else -1)
+      else if (b == null) 1
+      else a.compareTo(b)
   }
 
   /** The generic halo-exchange scan: range-shuffle `keyed` once, collect
@@ -100,15 +114,17 @@ object ChunkedWindow {
     require(meta.length <= 1000000,
       s"halo metadata unexpectedly large (${meta.length} partition-key runs)")
 
-    // driver: per-key cumulative offsets + the halo rows partition p must
-    // prepend for key k (the last min(h, startRn) rows from earlier pids)
-    val offsets = scala.collection.mutable.HashMap.empty[(Int, String), Long]
+    // driver: per-key cumulative offsets (with the key's row count) + the
+    // halo rows partition p must prepend for key k (the last
+    // min(h, startRn) rows from earlier pids)
+    val offsets = scala.collection.mutable.HashMap.empty[(Int, String), (Long, Long)]
     val halos = scala.collection.mutable.HashMap.empty[(Int, String), Array[T]]
     meta.groupBy(_._2).foreach { case (k, rows) =>
+      val total = rows.map(_._3).sum
       var acc = 0L
       val carry = scala.collection.mutable.ArrayDeque.empty[T]
       rows.sortBy(_._1).foreach { case (pid, _, n, tail) =>
-        offsets((pid, k)) = acc
+        offsets((pid, k)) = (acc, total)
         if (acc > 0) halos((pid, k)) = carry.toArray // length = min(h, acc)
         acc += n
         if (n >= h) { carry.clear(); carry.appendAll(tail) }
@@ -127,10 +143,12 @@ object ChunkedWindow {
       var curKey: String = null
       var kern: HaloKernel[T, O] = null
       it.map { case ((k, _, _), t) =>
-        if (k != curKey) {
+        // a null key is a key: the first row starts a run whatever it is
+        if (kern == null || k != curKey) {
           curKey = k
           if (kern == null) kern = mk()
-          kern.reset(offs((pid, k)))
+          val (rn0, n) = offs((pid, k))
+          kern.reset(rn0, n)
           hls.get((pid, k)).foreach(_.foreach(kern.halo))
         }
         kern.row(t)
@@ -167,7 +185,7 @@ object ChunkedWindow {
     private var rn = 0L // per-key global row index of the NEXT row
     private var i = 0L // local index incl. halo (prefix P(i) at slot i%ring)
 
-    def reset(rn0: Long): Unit = {
+    def reset(rn0: Long, n: Long): Unit = {
       rn = rn0
       i = 0
       p1(0) = JBig.ZERO; p2(0) = JBig.ZERO; p3(0) = JBig.ZERO; pc(0) = 0L

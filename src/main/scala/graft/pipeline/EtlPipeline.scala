@@ -28,20 +28,21 @@ import graft.sources.{MergeStaging, VersionedTable}
   * for the rest) and published by one function. By default that is a
   * checked swap: the live stage moves aside into `_stages_old`, the
   * staged dir moves in, and `_stages_old` is cleared only after the last
-  * swap, so a failed publish leaves the previous run's stage on disk.
+  * swap, so a failed publish leaves the previous run's stage on disk;
+  * the next publish first moves any such stage whose live dir is missing
+  * back into place.
   * With `versionedStages` it is an overwrite commit of the staged
   * `ticker=` dirs into the stage's VersionedTable; the writes are the
   * same in both modes.
   *
-  * Feature route: input that meets the feature kernel's contract — no
-  * null ticker, date, close, high or low, read from the validator's
-  * `n_feature_nulls` — builds its processed stage on the row-parallel
-  * halo kernel (`FeatureBuilder.buildFast`'s route, which carries
-  * open/volume/adjClose/source through, so the stage keeps the plain
-  * form's exact schema and column order); any other input takes
-  * `FeatureBuilder.build`'s. The kernel frame is not persisted:
-  * recomputing it for its two readers measured faster than caching it,
-  * and no block outlives the run.
+  * Features: one route. The input is the raw stage, filled by
+  * `Preprocessor.handleMissing` when the validator counted a null
+  * price or volume; either way it meets the feature kernel's input
+  * contract, and the processed stage is built on the row-parallel halo
+  * kernel (`FeatureBuilder.build`'s engine, which carries
+  * open/volume/adjClose/source through in their input positions). The
+  * kernel frame is not persisted: recomputing it for its two readers
+  * measured faster than caching it, and no block outlives the run.
   *
   * Plan budget: a run is five queries — the raw write, the validation
   * report (which also collects the date dimension), the feature stage's
@@ -96,6 +97,14 @@ object EtlPipeline {
           .commitOverwrite(dir, rows()): Unit
       } else {
         val old = new Path(s"${cfg.outDir}/_stages_old")
+        // a publish that failed part-way left a stage only aside: move it
+        // back before clearing, or the next publish deletes its last copy
+        if (fs.exists(old)) fs.listStatus(old).foreach { st =>
+          val back = new Path(live(st.getPath.getName))
+          if (!fs.exists(back) && !fs.rename(st.getPath, back))
+            throw new java.io.IOException(
+              s"stage publish: failed to restore ${st.getPath} to $back")
+        }
         fs.delete(old, true)
         fs.mkdirs(old)
         staged.foreach { case (name, dir, _) =>
@@ -125,14 +134,11 @@ object EtlPipeline {
     val (quality, dates) = Validator.validateWithDates(raw, minBars = cfg.minBars)
     require(quality.status != "FAIL", s"validation failed: $quality")
 
-    // 3. preprocessing + features. Input that meets the feature
-    // kernel's contract (the validator's n_feature_nulls: no null
-    // ticker/date/close/high/low; unique keys and monotonic dates are
-    // FAIL conditions above) takes the row-parallel kernel; any other
-    // input takes the plain per-ticker Window form. The causal fill is
-    // the identity on a column without nulls, so the kernel route fills
-    // only `open` (its prices are null-free by the contract), and only
-    // when the report counted a null at all.
+    // 3. preprocessing + features. The causal fill is the identity on
+    // a frame without nulls, so it runs only when the report counted a
+    // null at all; after it, each price column of a ticker is null on
+    // every row or on none, which the feature kernel accepts (unique
+    // keys are a FAIL condition above).
     //
     // The split's cut dates are known before the features (the
     // processed stage keeps the raw stage's rows, so the raw stage's date
@@ -145,14 +151,13 @@ object EtlPipeline {
     val split = Splitter.splitOf(dates, cfg.trainFrac, cfg.valFrac)
     val training = split === "training"
     val prices = Seq("open", "high", "low", "close")
-    def fill(cols: Seq[String]) =
-      Preprocessor.handleMissing(raw, cols, backfill = cfg.researchMode)
-    val fast = quality.nFeatureNulls == 0
     val splitNames = Seq("training", "validation", "testing")
     val moments = cfg.normalizeCols.flatMap(c => Seq(s"${c}__mean", s"${c}__std"))
     val fitted = FeatureBuilder.buildFitting(
-      if (!fast) fill(prices) else if (quality.nResidualNulls > 0) fill(Seq("open")) else raw,
-      fast, Preprocessor.zScoreAggs(cfg.normalizeCols, training) ++
+      if (quality.nResidualNulls > 0)
+        Preprocessor.handleMissing(raw, prices, backfill = cfg.researchMode)
+      else raw,
+      Preprocessor.zScoreAggs(cfg.normalizeCols, training) ++
         splitNames.map(sp => count(when(split === sp, 1)).as(s"_n_$sp")) :+
         SplitDiagnostics.binCountsAgg("close", split,
           SplitDiagnostics.binCuts("close", rows = training)).as("_psi_counts"),

@@ -48,10 +48,7 @@ object FeatureQueries extends QueryModule {
     // ret_20/roll_std_60/atr_14) is pinned by the surviving row set.
     "q156_cvar_rolling" -> ((s, dir) => {
       import s.implicits._
-      // buildFast: the halo-exchange kernel twin of build() — bit-equal
-      // on the gated outputs (order statistics + null patterns), spec-
-      // pinned against the plain form (FeatureBuilderSpec parity tests)
-      FeatureBuilder.buildFast(featureInput(s, dir), dropNa = true)
+      FeatureBuilder.build(featureInput(s, dir), dropNa = true)
         .select($"ticker", $"date", $"cvar_95_60")
     }),
 
@@ -118,7 +115,7 @@ object FeatureQueries extends QueryModule {
     // (0/1 sums — exact), availability + warning flags.
     "q158_feature_health" -> ((s, dir) => {
       FeatureBuilder.health(
-        FeatureBuilder.buildFast(featureInput(s, dir), dropNa = false,
+        FeatureBuilder.build(featureInput(s, dir), dropNa = false,
           reuseKernel = true))
     })
   )

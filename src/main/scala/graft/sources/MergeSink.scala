@@ -95,7 +95,7 @@ final class MergeSink(spark: SparkSession, path: String,
       } else {
         // reads only the colliding live dirs (no full-table listing);
         // basePath keeps the partition column
-        val stats = MergeStaging.mergeStaged(batch, incoming, colliding.map(_.toString),
+        val stats = MergeStaging.mergeStaged(batch, incoming, parts, colliding.map(_.toString),
           path, keyCols, partitionCol, batchTotal, staging)
         fs.delete(incoming, true)
         stats

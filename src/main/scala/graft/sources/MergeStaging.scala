@@ -63,20 +63,24 @@ private[graft] object MergeStaging {
     (obs.get("n").asInstanceOf[Long], partDirs(fs, dir, partitionCol))
   }
 
-  /** Update-wins merge of the batch staged at `staged` (by [[stage]])
-    * with the live files `live` (partition dirs or files under
-    * `basePath`): merged = batch ∪ (live anti batch), written to `out`
-    * as [[stage]] writes. Both sides are read through the batch's
-    * session (see the session note above) with the batch's schema (no
-    * inference job); the live total and the anti-join survivors are
-    * observed inside the write job. Returns (inserted, updated). */
-  def mergeStaged(batch: DataFrame, staged: Path,
+  /** Update-wins merge of the batch staged at `staged` (by [[stage]],
+    * which listed its partition dirs `parts`) with the live files `live`
+    * (partition dirs or files under `basePath`): merged = batch ∪ (live
+    * anti batch), written to `out` as [[stage]] writes. Both sides are
+    * read through the batch's session (see the session note above) with
+    * the batch's schema (no inference job); the live total and the
+    * anti-join survivors are observed inside the write job. The batch is
+    * read through its partition dirs, not its dot-prefixed root, which
+    * Spark would report as an ignored hidden path. Returns (inserted,
+    * updated). */
+  def mergeStaged(batch: DataFrame, staged: Path, parts: Seq[Path],
       live: Seq[String], basePath: String, keyCols: Seq[String],
       partitionCol: String, batchTotal: Long, out: Path): (Long, Long) = {
     def reader = batch.sparkSession.read.schema(batch.schema)
     val obsLive = org.apache.spark.sql.Observation()
     val obsAnti = org.apache.spark.sql.Observation()
-    val staging = reader.parquet(staged.toString)
+    val staging = reader.option("basePath", staged.toString)
+      .parquet(parts.map(_.toString): _*)
     val anti = reader.option("basePath", basePath).parquet(live: _*)
       .observe(obsLive, count(lit(1)).as("n"))
       .join(staging, keyCols, "left_anti")

@@ -703,7 +703,7 @@ final class VersionedTable(spark: SparkSession, root: String, partitionCol: Stri
       if (touchedFiles.isEmpty) (staged, (batchTotal, 0L))
       else {
         val (_, merged) = newTx()
-        val stats = MergeStaging.mergeStaged(batch, staged,
+        val stats = MergeStaging.mergeStaged(batch, staged, parts,
           touchedFiles.sorted.map(p => s"$root/$p"), dataDir, keyCols, partitionCol,
           batchTotal, merged)
         fs.delete(staged, true)

@@ -91,7 +91,7 @@ class EtlCoreSpec extends AnyFunSuite with TestSpark {
         Validator.Classification(r.getBoolean(3), r.getBoolean(4), r.getString(5)))
       .toMap
     grid.foreach { case (status, imputed, padding) =>
-      val rep = graft.domain.QualityReport(1, 1, 0, 0, 0, 0, 0, 0, 0.0, status, 0)
+      val rep = graft.domain.QualityReport(1, 1, 0, 0, 0, 0, 0, 0, 0.0, status)
       assert(got((status, imputed, padding)) ===
         Validator.classify(rep, imputed, padding),
         s"($status, $imputed, $padding)")

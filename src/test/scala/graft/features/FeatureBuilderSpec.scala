@@ -2,10 +2,12 @@ package graft.features
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.etl.Preprocessor
 import graft.sources.SyntheticSource
 
 class FeatureBuilderSpec extends AnyFunSuite with TestSpark {
@@ -122,15 +124,15 @@ class FeatureBuilderSpec extends AnyFunSuite with TestSpark {
     val in = bars.select("ticker", "date", "close", "high", "low")
     // 8 partitions over 2×200 rows: key runs SPLIT across partitions, so
     // the halo replay path is exercised, not just the fresh-key path
-    FeatureParity.check(FeatureBuilder.build(in, dropNa = false),
-      FeatureBuilder.buildFast(in, dropNa = false))
+    FeatureParity.check(WindowedFeatures.build(in, dropNa = false),
+      FeatureBuilder.build(in, dropNa = false))
   }
 
   test("buildFast carries every other input column through, in build's column order") {
     // open/volume/adjClose/source ride through the kernel untouched: no
     // join back on (ticker, date), and the schema is build's exactly
-    FeatureParity.check(FeatureBuilder.build(bars, dropNa = false),
-      FeatureBuilder.buildFast(bars, dropNa = false),
+    FeatureParity.check(WindowedFeatures.build(bars, dropNa = false),
+      FeatureBuilder.build(bars, dropNa = false),
       carried = Set("open", "volume", "adjClose", "source"))
   }
 
@@ -141,9 +143,9 @@ class FeatureBuilderSpec extends AnyFunSuite with TestSpark {
       ("FLAT", Timestamp.valueOf(f"2024-01-01 00:${i / 60}%02d:${i % 60}%02d"),
         50.0, 51.0, 49.0))
       .toDF("ticker", "date", "close", "high", "low")
-    val plain = FeatureBuilder.build(flat, dropNa = false)
+    val plain = WindowedFeatures.build(flat, dropNa = false)
       .orderBy("date").select("roll_std_20", "roll_skew_20", "cvar_95_60").collect()
-    val fast = FeatureBuilder.buildFast(flat, dropNa = false)
+    val fast = FeatureBuilder.build(flat, dropNa = false)
       .orderBy("date").select("roll_std_20", "roll_skew_20", "cvar_95_60").collect()
     plain.zip(fast).zipWithIndex.foreach { case ((pr, fr), i) =>
       assert(pr.isNullAt(0) === fr.isNullAt(0), s"std null @ $i")
@@ -159,11 +161,80 @@ class FeatureBuilderSpec extends AnyFunSuite with TestSpark {
 
   test("buildFast dropNa keeps exactly the plain surviving row set") {
     val in = bars.select("ticker", "date", "close", "high", "low")
-    val a = FeatureBuilder.build(in, dropNa = true)
+    val a = WindowedFeatures.build(in, dropNa = true)
       .select("ticker", "date").collect().map(_.toString).sorted
-    val b = FeatureBuilder.buildFast(in, dropNa = true)
+    val b = FeatureBuilder.build(in, dropNa = true)
       .select("ticker", "date").collect().map(_.toString).sorted
     assert(a.sameElements(b))
+  }
+
+  // ---- the kernel's input contract: every frame handleMissing emits ----
+
+  /** `df` as a local frame: its size estimate counts its rows, so the
+    * kernel sizes several partitions for a few thousand rows, and a
+    * ticker's rows span them — its halo replay runs. */
+  private def local(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collectAsList(), df.schema)
+
+  private def parity(in: DataFrame): Unit = {
+    val x = local(in)
+    FeatureParity.check(WindowedFeatures.build(x, dropNa = false),
+      FeatureBuilder.build(x, dropNa = false),
+      carried = Set("open", "volume", "adjClose", "source"))
+  }
+
+  private def gappy(df: DataFrame): DataFrame = df.withColumn("close",
+    when(dayofmonth(col("date")).isin(7, 8, 21), lit(null).cast("double"))
+      .otherwise(col("close")))
+
+  private val prices = Seq("open", "high", "low", "close")
+
+  test("kernel parity on the bench bars, carried columns included") {
+    parity(SyntheticSource.generate(spark, Seq("AAPL", "MSFT"), 1006, seed = 1).toDF())
+  }
+
+  test("kernel parity on handleMissing output of interior-gap bars") {
+    parity(Preprocessor.handleMissing(gappy(bars), prices))
+  }
+
+  test("kernel parity on an all-null-close ticker split over kernel partitions") {
+    val dark = SyntheticSource.generate(spark, Seq("DARK"), 1500, seed = 5).toDF()
+      .withColumn("close", lit(null).cast("double"))
+    val in = local(Preprocessor.handleMissing(bars.unionByName(dark), prices))
+    // a partition replays its halo in null mode
+    val parts = FeatureKernel.run(in).where(col("ticker") === "DARK")
+      .select(spark_partition_id()).distinct().count()
+    assert(parts >= 2, s"DARK in $parts kernel partition(s)")
+    parity(in)
+    val gaps = FeatureBuilder.build(in, dropNa = false).where(col("ticker") === "DARK")
+      .select("gap_run_len").distinct().collect().map(_.getLong(0))
+    assert(gaps.toSeq === Seq(1500L))
+  }
+
+  test("kernel parity on a null-date row and on null high/low legs") {
+    val in = bars.withColumn("date",
+        when(col("ticker") === "MSFT" && col("date") === "2024-03-01",
+          lit(null).cast("timestamp")).otherwise(col("date")))
+      .withColumn("high", when(dayofmonth(col("date")) === 9, lit(null).cast("double"))
+        .otherwise(col("high")))
+      .withColumn("low", when(dayofmonth(col("date")) === 10, lit(null).cast("double"))
+        .otherwise(col("low")))
+    assert(in.where(col("date").isNull).count() === 1L)
+    parity(in)
+  }
+
+  test("kernel parity on a null-ticker group") {
+    val orphan = SyntheticSource.generate(spark, Seq("ORPH"), 200, seed = 6).toDF()
+      .withColumn("ticker", lit(null).cast("string"))
+    parity(bars.unionByName(orphan))
+  }
+
+  test("interior null closes without a fill throw a named error") {
+    val e = intercept[Exception](FeatureBuilder.build(gappy(bars), dropNa = false).count())
+    val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i }
+    assert(named.exists(i => i.getMessage.contains("ticker ") &&
+      i.getMessage.contains("fill it first")), e.toString)
   }
 
   test("macro as-of merge is causal (no future macro leaks)") {

@@ -4,10 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.Assertions._
 
-/** The parity check between [[FeatureBuilder.build]] and the kernel form
-  * ([[FeatureBuilder.buildFast]]): the same columns in the same order,
-  * then row by row (ordered by ticker, date) identical null patterns,
-  * bit-exact gated columns, and moments within 1e-7 relative. */
+/** The parity check between the Window oracle
+  * ([[WindowedFeatures.build]]) and the kernel ([[FeatureBuilder.build]]):
+  * the same columns in the same order, then row by row (ordered by
+  * ticker, date) identical null patterns, bit-exact gated columns, and
+  * moments within 1e-7 relative. */
 object FeatureParity {
 
   /** Columns both forms compute with the same IEEE operations. */

@@ -18,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{GraftSession, TestSpark}
 import graft.etl.{Preprocessor, Splitter}
 import graft.exec.StrategyOptimizer
-import graft.features.{FeatureBuilder, FeatureParity}
+import graft.features.{FeatureParity, WindowedFeatures}
 import graft.sources.{CacheManager, GraftSwapFailFs, SyntheticSource}
 
 class PipelineSpec extends AnyFunSuite with TestSpark {
@@ -80,7 +80,7 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     assert(res.rowsPerSplit.values.sum === 420L)
   }
 
-  // ---- feature route: kernel on contract-clean input, plain otherwise ----
+  // ---- feature route: the kernel, on raw or filled input ----
 
   private lazy val cleanBars =
     SyntheticSource.generate(spark, Seq("AAPL", "MSFT"), 250, seed = 3).toDF()
@@ -103,7 +103,7 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
   }
 
   private object Plans extends AdaptiveSparkPlanHelper {
-    private def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = collect(p) {
       case c: CommandResultExec => nodes(c.commandPhysicalPlan)
       case n => Seq(n)
     }.flatten
@@ -132,70 +132,76 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
   private def stageRows(dir: String) = spark.read.parquet(dir)
     .select("ticker", "date").collect().map(_.toString).sorted.toSeq
 
+  private val prices = Seq("open", "high", "low", "close")
+  private val carried = Set("open", "volume", "adjClose", "source")
+
+  /** The processed stage of `out` against the Window oracle over `input`
+    * (the raw stage, or its fill), stored the way the stage is. */
+  private def checkProcessed(out: String, input: DataFrame): Unit = {
+    val ref = Files.createTempDirectory("graft_etl_ref").toString + "/features"
+    WindowedFeatures.build(input, dropNa = false)
+      .write.mode("overwrite").partitionBy("ticker").parquet(ref)
+    FeatureParity.check(spark.read.parquet(ref), spark.read.parquet(s"$out/processed"),
+      carried)
+  }
+
+  private def kernelRoute(plans: Seq[SparkPlan]): Boolean =
+    Plans.featureStage(plans).exists(_.isInstanceOf[ExternalRDDScanExec[_]])
+
+  private def raw(out: String) = spark.read.parquet(s"$out/raw")
+
   test("clean input takes the kernel route: processed stage matches build under the parity check") {
     val out = Files.createTempDirectory("graft_etl_kernel").toString
     val (res, plans) = runCapturing(cleanBars, out)
-    assert(res.quality.nFeatureNulls === 0L)
-    val stage = Plans.featureStage(plans)
+    assert(res.quality.status === "PASS")
     // the kernel's rows enter the plan as an RDD scan
-    assert(stage.exists(_.isInstanceOf[ExternalRDDScanExec[_]]), "kernel route taken")
-    // the reference: build over the same raw stage (its causal fill is
-    // the identity on null-free prices), stored the way the stage is
-    val ref = Files.createTempDirectory("graft_etl_ref").toString + "/features"
-    FeatureBuilder.build(spark.read.parquet(s"$out/raw"), dropNa = false)
-      .write.mode("overwrite").partitionBy("ticker").parquet(ref)
-    FeatureParity.check(spark.read.parquet(ref), spark.read.parquet(s"$out/processed"),
-      carried = Set("open", "volume", "adjClose", "source"))
+    assert(kernelRoute(plans), "kernel route taken")
+    // the oracle over the same raw stage (its causal fill is the
+    // identity on null-free prices)
+    checkProcessed(out, raw(out))
   }
+
+  private lazy val gappyBars = cleanBars.withColumn("close",
+    when(dayofmonth(col("date")) === 7, lit(null).cast("double")).otherwise(col("close")))
 
   test("kernel route: the feature stage's executed plan has no Window partitioned by ticker alone") {
     val kernel = Files.createTempDirectory("graft_etl_plan_k").toString
     assert(Plans.tickerWindows(Plans.featureStage(runCapturing(cleanBars, kernel)._2)).isEmpty)
-    // the detector does see the plain form's per-ticker windows
-    val plain = Files.createTempDirectory("graft_etl_plan_p").toString
-    val gappy = cleanBars.withColumn("close",
-      when(dayofmonth(col("date")) === 7, lit(null).cast("double")).otherwise(col("close")))
-    assert(Plans.tickerWindows(Plans.featureStage(runCapturing(gappy, plain)._2)).nonEmpty)
+    // the detector does see the Window oracle's per-ticker windows
+    val oracle = WindowedFeatures.build(cleanBars, dropNa = false)
+    oracle.collect(): Unit
+    assert(Plans.tickerWindows(Plans.nodes(oracle.queryExecution.executedPlan)).nonEmpty)
   }
 
-  test("interior null closes take the plain route: causal fill, then build") {
+  test("interior null closes: causal fill, then the kernel route") {
     val out = Files.createTempDirectory("graft_etl_gappy").toString
-    val gappy = cleanBars.withColumn("close",
-      when(dayofmonth(col("date")) === 7, lit(null).cast("double")).otherwise(col("close")))
-    val (res, plans) = runCapturing(gappy, out)
-    assert(res.quality.status === "WARN" && res.quality.nFeatureNulls === 16L)
-    assert(!Plans.featureStage(plans).exists(_.isInstanceOf[ExternalRDDScanExec[_]]), "plain route taken")
-    val ref = Files.createTempDirectory("graft_etl_ref").toString + "/features"
-    FeatureBuilder.build(Preprocessor.handleMissing(spark.read.parquet(s"$out/raw"),
-        Seq("open", "high", "low", "close")), dropNa = false)
-      .write.mode("overwrite").partitionBy("ticker").parquet(ref)
-    val cols = spark.read.parquet(ref).columns
-    def rows(dir: String) = spark.read.parquet(dir).select(cols.map(col): _*)
-      .orderBy("ticker", "date").collect().toSeq
-    assert(spark.read.parquet(s"$out/processed").columns.toSeq === cols.toSeq)
-    assert(rows(s"$out/processed") === rows(ref))
+    val (res, plans) = runCapturing(gappyBars, out)
+    assert(res.quality.status === "WARN" && res.quality.nResidualNulls === 16L)
+    assert(kernelRoute(plans), "kernel route taken")
+    checkProcessed(out, Preprocessor.handleMissing(raw(out), prices))
   }
 
-  test("an all-null-close ticker completes on the plain route") {
+  test("an all-null-close ticker completes on the kernel route") {
     val out = Files.createTempDirectory("graft_etl_nullclose").toString
     val bars = cleanBars.unionByName(
       SyntheticSource.generate(spark, Seq("DARK"), 250, seed = 5).toDF()
         .withColumn("close", lit(null).cast("double")))
-    val res = EtlPipeline.run(spark, bars, EtlPipeline.Config(outDir = out))
-    assert(res.quality.nFeatureNulls === 250L)
+    val (res, plans) = runCapturing(bars, out)
+    assert(kernelRoute(plans), "kernel route taken")
     assert(res.rowsPerSplit.values.sum === 750L)
     // its train cuts are null, so it has no bins to compare: no psi entry
     assert(res.psi.keySet === Set("AAPL", "MSFT"))
     assert(res.psi.values.forall(v => !v.isNaN))
+    checkProcessed(out, Preprocessor.handleMissing(raw(out), prices))
   }
 
-  test("a null-date row completes on the plain route and tags testing, as chronological does") {
+  test("a null-date row completes on the kernel route, tagged testing") {
     val out = Files.createTempDirectory("graft_etl_nulldate").toString
     val bars = cleanBars.withColumn("date",
       when(col("ticker") === "MSFT" && col("date") === "2024-03-01",
         lit(null).cast("timestamp")).otherwise(col("date")))
-    val res = EtlPipeline.run(spark, bars, EtlPipeline.Config(outDir = out))
-    assert(res.quality.nFeatureNulls === 1L)
+    val (res, plans) = runCapturing(bars, out)
+    assert(kernelRoute(plans), "kernel route taken")
     assert(res.rowsPerSplit.values.sum === 500L)
     // the stage dirs hold exactly chronological's tags over the
     // processed stage, row for row
@@ -206,6 +212,20 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
           .map(_.toString).sorted.toSeq, sp)
     }
     assert(spark.read.parquet(s"$out/testing").where(col("date").isNull).count() === 1L)
+    checkProcessed(out, raw(out))
+  }
+
+  test("null-ticker bars complete on the kernel route as one group") {
+    val out = Files.createTempDirectory("graft_etl_nullticker").toString
+    val bars = cleanBars.unionByName(
+      SyntheticSource.generate(spark, Seq("ORPH"), 250, seed = 6).toDF()
+        .withColumn("ticker", lit(null).cast("string")))
+    val (res, plans) = runCapturing(bars, out)
+    assert(kernelRoute(plans), "kernel route taken")
+    assert(res.rowsPerSplit.values.sum === 750L)
+    assert(res.psi.keySet === Set("AAPL", "MSFT"))
+    assert(spark.read.parquet(s"$out/processed").where(col("ticker").isNull).count() === 250L)
+    checkProcessed(out, raw(out))
   }
 
   test("a run fits Spark's codegen cache: at most 80 entries from an empty cache, 14 jobs") {
@@ -301,6 +321,24 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     // are still staged: both copies are on disk
     assert(stageRows(s"$local/_stages_old/training") === run1)
     assert(stageRows(s"$local/_stages_tmp/_stage=training").size > run1.size)
+  }
+
+  test("a run after a failed publish restores the stage left aside before clearing it") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftswapf.impl", classOf[GraftSwapFailFs].getName)
+    val local = Files.createTempDirectory("graft_etl_restore").toString
+    val cfg = EtlPipeline.Config(outDir = s"graftswapf://$local")
+    EtlPipeline.run(spark, cleanBars, cfg): Unit
+    val run1 = stageRows(s"$local/training")
+    val bars2 = SyntheticSource.generate(spark, Seq("AAPL", "MSFT"), 300, seed = 3).toDF()
+    GraftSwapFailFs.failStage.set("training")
+    try intercept[java.io.IOException](EtlPipeline.run(spark, bars2, cfg))
+    finally GraftSwapFailFs.failStage.set(null)
+    // run 3 publishes its raw stage, then fails validation (duplicate keys)
+    val dup = cleanBars.unionByName(cleanBars.limit(1))
+    val e = intercept[IllegalArgumentException](EtlPipeline.run(spark, dup, cfg))
+    assert(e.getMessage.contains("validation failed"), e.getMessage)
+    assert(stageRows(s"$local/training") === run1)
   }
 
   test("cache-first reads: full hit avoids fetch; tail delta fetches only the gap") {

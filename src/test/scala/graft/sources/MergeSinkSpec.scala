@@ -353,4 +353,48 @@ class MergeSinkSpec extends AnyFunSuite with TestSpark {
     assert(sink.read().select("k", "price").as[(Long, Double)].collect().toSet
       === Set((1L, 10.0), (2L, 99.0), (3L, 30.0), (4L, 40.0)))
   }
+
+  test("colliding upserts read their staged batch without a hidden-path WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val s = spark; import s.implicits._
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val hook = new AbstractAppender("hidden-path-probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(e.getMessage.getFormattedMessage): Unit
+    }
+    hook.start()
+    val name = "org.apache.spark.sql.execution.datasources.DataSource"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val lc = new LoggerConfig(name, Level.WARN, true)
+    lc.addAppender(hook, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, lc)
+    ctx.updateLoggers()
+    try {
+      val init = Seq((1L, 10.0, 1), (2L, 20.0, 2)).toDF("k", "price", "m")
+      val delta = Seq((2L, 99.0, 2), (3L, 30.0, 3)).toDF("k", "price", "m")
+      val want = Set((1L, 10.0), (2L, 99.0), (3L, 30.0))
+      val sink = new MergeSink(spark,
+        Files.createTempDirectory("graft_merge_warn").toString + "/t",
+        keyCols = Seq("k"), partitionCol = "m")
+      sink.upsert(init): Unit
+      assert(sink.upsert(delta) === sink.MergeStats(inserted = 1, updated = 1, partitions = 2))
+      assert(sink.read().select("k", "price").as[(Long, Double)].collect().toSet === want)
+      val table = new VersionedTable(spark,
+        Files.createTempDirectory("graft_vt_warn").toString + "/t", partitionCol = "m")
+      table.upsert(init, Seq("k")): Unit
+      val st = table.upsert(delta, Seq("k"))
+      assert(st.inserted === 1L && st.updated === 1L)
+      assert(table.read().select("k", "price").as[(Long, Double)].collect().toSet === want)
+      assert(!warns.asScala.exists(_.contains("All paths were ignored")), warns)
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      hook.stop()
+    }
+  }
 }
