@@ -45,7 +45,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // only the selected names' oracles: the local compare FAILs an
+    // oracle that has no dump
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

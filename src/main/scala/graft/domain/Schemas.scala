@@ -71,16 +71,3 @@ final case class Trade(
     pnl: Option[Double],
     isSynthetic: Boolean,
     dataSource: String)
-
-/** Per-model forecast payload for one ticker (reference
-  * forcester_ts/forecaster.py:88 fit/forecast contract). */
-final case class ForecastPayload(
-    ticker: String,
-    model: String,
-    horizon: Int,
-    forecast: Array[Double],
-    lowerCi: Array[Double],
-    upperCi: Array[Double],
-    volatility: Array[Double],
-    aic: Double,
-    converged: Boolean)

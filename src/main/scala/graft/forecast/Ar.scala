@@ -275,7 +275,7 @@ object Ar {
     * detected seasonal lags (s, 2s); drift-model fallback when every
     * candidate fails (the reference's fallback ladder shape).
     *
-    * `warm` = a learned (p, d) order (OrderLearner suggestion): the
+    * `warm` = a learned (p, d) order (ForecastCache's order cache): the
     * order grid is SKIPPED and only the suggested p at the suggested d
     * is fit (still trying the seasonal-lag variants — they are 3 cheap
     * OLS solves, not a grid). Mirrors the reference's should_skip_grid

@@ -1,7 +1,6 @@
 package graft.forecast
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,71 +12,83 @@ import ForecastEngine.TickerForecast
   * (ticker, series, config) inputs skip the whole per-ticker fit, and
   * learned AR orders warm-start the order grid on misses.
   *
+  * This is the one module that knows the snapshot key ([[contentKey]])
+  * and both cache tables under `dir`: `forecast_rows` (the fitted rows,
+  * keyed by snapKey) and `order_cache` (the learned (p, d) per
+  * (ticker, regime)).
+  *
   * Scale design: the cache is a snapKey-keyed parquet TABLE, not a
   * driver-side lookup — hits resolve via a broadcast join of this run's
   * (small, one-per-ticker) key set against the store, misses fit inside
-  * the usual groupByKey kernel and append. Nothing iterates tickers on
-  * the driver; walk-forward folds that re-present identical prefixes
+  * a distributed map and append. Nothing iterates tickers on the
+  * driver; walk-forward folds that re-present identical prefixes
   * become pure cache reads.
   */
 object ForecastCache {
   /** Age after which a run's key files can no longer be referenced. */
   val runKeysTtlMs: Long = 60L * 60 * 1000
+
+  /** Deterministic content key of a fit request — static so executor-side
+    * kernels compute it without a session. */
+  def contentKey(ticker: String, prices: Array[Double], configHash: String): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    md.update(ticker.getBytes)
+    prices.foreach(p => md.update(java.lang.Long.toHexString(
+      java.lang.Double.doubleToLongBits(p)).getBytes))
+    md.update(configHash.getBytes)
+    md.digest().map("%02x".format(_)).mkString.take(32)
+  }
+
+  /** Bar frame (ticker, date, close) → one time-ordered price series per
+    * ticker: the input of [[ForecastCache.fitSeries]]. */
+  private[forecast] def series(bars: DataFrame): Dataset[(String, Array[Double])] = {
+    val spark = bars.sparkSession
+    import spark.implicits._
+    bars.select(col("ticker").as[String], col("date").cast("long").as[Long],
+        col("close").as[Double])
+      .groupByKey(_._1)
+      .mapGroups((ticker, rows) => (ticker, rows.toArray.sortBy(_._2).map(_._3)))
+  }
 }
 
 final class ForecastCache(spark: SparkSession, dir: String) {
   import spark.implicits._
 
-  private val rowsPath = s"$dir/forecast_rows"
-  private val orderPath = s"$dir/order_cache"
+  private val rowsPath = new Path(dir, "forecast_rows")
+  private val orderPath = new Path(dir, "order_cache")
+  private val runKeysRoot = new Path(dir, ".run_keys")
 
   final case class Stats(hits: Long, misses: Long)
 
+  /** Every existence probe and delete resolves `dir` through Hadoop, as
+    * the Spark reads and writes do: a java.nio probe answers for the
+    * local disk only, so a URI-form dir (file:/…, hdfs://…) read as
+    * empty and every run refit and appended duplicates. */
+  private def fs = rowsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def storeDf: Option[DataFrame] =
-    if (Files.exists(Paths.get(rowsPath))) Some(spark.read.parquet(rowsPath))
-    else None
+    if (fs.exists(rowsPath)) Some(spark.read.parquet(rowsPath.toString)) else None
 
   /** Drop run-key dirs old enough that no lazy Dataset from a prior
     * call can still be reading them (TTL, not delete-all: a recent
     * caller may not have consumed its output yet). */
   private def sweepRunKeys(): Unit = {
-    val root = Paths.get(s"$dir/.run_keys")
-    if (!Files.exists(root)) return
+    if (!fs.exists(runKeysRoot)) return
     val cutoff = System.currentTimeMillis() - ForecastCache.runKeysTtlMs
-    val ls = Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      ls.iterator().asScala
-        .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-        .toSeq
-        .foreach { p =>
-          val walk = Files.walk(p)
-          try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally walk.close()
-        }
-    } finally ls.close()
+    fs.listStatus(runKeysRoot)
+      .filter(_.getModificationTime < cutoff)
+      .foreach(st => fs.delete(st.getPath, true))
   }
 
-  /** Latest learned (p, d) per (ticker, regime) — broadcast into the
-    * miss kernel as warm starts. Same table OrderLearner reads.
-    * Unbounded (whole store); prefer [[warmStartsFor]] inside batch
-    * paths so the driver-side map scales with the BATCH, not the store. */
-  def warmStarts(): Map[(String, String), (Int, Int)] =
-    warmStartsFor(None)
-
-  /** Warm starts restricted (left-semi join) to the tickers of one
-    * batch: the collected map is bounded by batch size × regimes even
-    * when the order cache has accumulated millions of tickers. */
-  def warmStartsFor(tickers: DataFrame): Map[(String, String), (Int, Int)] =
-    warmStartsFor(Some(tickers))
-
-  private def warmStartsFor(tickers: Option[DataFrame]): Map[(String, String), (Int, Int)] = {
-    if (!Files.exists(Paths.get(orderPath))) return Map.empty
-    val base = spark.read.parquet(orderPath)
-    val bounded = tickers.fold(base) { t =>
-      base.join(broadcast(t.select(col("ticker")).distinct()), Seq("ticker"), "left_semi")
-    }
-    bounded
+  /** Latest learned (p, d) per (ticker, regime), restricted (left-semi
+    * join) to the tickers of one batch — broadcast into the miss kernel
+    * as warm starts. The collected map is bounded by batch size ×
+    * regimes even when the order cache has accumulated millions of
+    * tickers. */
+  def warmStartsFor(tickers: DataFrame): Map[(String, String), (Int, Int)] = {
+    if (!fs.exists(orderPath)) return Map.empty
+    spark.read.parquet(orderPath.toString)
+      .join(broadcast(tickers.select(col("ticker")).distinct()), Seq("ticker"), "left_semi")
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy(col("ticker"), col("regime")).orderBy(desc("ts"))))
@@ -93,17 +104,19 @@ final class ForecastCache(spark: SparkSession, dir: String) {
     * read back instead of refit, and fresh fits append both forecast
     * rows and learned orders. */
   def fitForecast(bars: DataFrame, cfg: ForecastEngine.Config = ForecastEngine.Config())
-      : (Dataset[TickerForecast], Stats) = {
+      : (Dataset[TickerForecast], Stats) =
+    fitSeries(ForecastCache.series(bars), cfg)
+
+  /** The cache pass over prepared (ticker, time-ordered prices) series —
+    * [[fitForecast]]'s body, which cached walk-forward feeds with its
+    * fold prefixes directly. */
+  private[forecast] def fitSeries(series: Dataset[(String, Array[Double])],
+      cfg: ForecastEngine.Config): (Dataset[TickerForecast], Stats) = {
     sweepRunKeys()
     val cfgHash = cfg.toString
-    val prep = bars
-      .select(col("ticker").as[String], col("date").cast("long").as[Long],
-        col("close").as[Double])
-      .groupByKey(_._1)
-      .mapGroups { (ticker, rows) =>
-        val prices = rows.toArray.sortBy(_._2).map(_._3)
-        (ticker, prices, SnapshotStore.contentKey(ticker, prices, cfgHash))
-      }
+    val prep = series
+      .map { case (ticker, prices) =>
+        (ticker, prices, ForecastCache.contentKey(ticker, prices, cfgHash)) }
       .toDF("ticker", "prices", "snapKey")
       .cache()
 
@@ -135,24 +148,24 @@ final class ForecastCache(spark: SparkSession, dir: String) {
       fitted
         .select(col("snapKey"), explode(col("rows")).as("r"))
         .select(col("snapKey"), col("r.*"))
-        .write.mode("append").parquet(rowsPath)
+        .write.mode("append").parquet(rowsPath.toString)
       fitted
         .where(size(col("rows")) > 0)
         .select(col("ticker"), col("regime"), col("p"), col("d"), col("aic"),
           lit(System.currentTimeMillis()).as("ts"))
-        .write.mode("append").parquet(orderPath)
+        .write.mode("append").parquet(orderPath.toString)
       fitted.unpersist()
     }
 
     // Persist this run's key set next to the store, so the returned
     // (lazy) Dataset's lineage is parquet-only: every cache above can be
     // dropped NOW instead of leaking past the call. The tiny key files
-    // are cleaned up eagerly by the next fitForecast on this cache dir.
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    val keysPath = s"$dir/.run_keys/$runId"
+    // are cleaned up by a later call on this cache dir once past the TTL.
+    val keysPath = new Path(runKeysRoot, java.util.UUID.randomUUID().toString.take(8))
+      .toString
     keysDf.write.parquet(keysPath)
     prep.unpersist()
-    val out = spark.read.parquet(rowsPath)
+    val out = spark.read.parquet(rowsPath.toString)
       .join(broadcast(spark.read.parquet(keysPath)), "snapKey")
       // concurrent appends could double-store a key; keep one copy
       .dropDuplicates("snapKey", "ticker", "model", "horizonStep")

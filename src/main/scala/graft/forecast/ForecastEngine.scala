@@ -3,8 +3,6 @@ package graft.forecast
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.domain.ForecastPayload
-
 /** The per-ticker forecasting orchestrator — Spark shape of the
   * reference's TimeSeriesForecaster (/root/reference/forcester_ts/
   * forecaster.py:88-3259): regime detect → per-model fit with failure
@@ -51,7 +49,8 @@ object ForecastEngine {
     forecastOneDetailed(ticker, prices, cfg, warm = None).rows
 
   /** [[forecastOne]] plus order/regime detail; `warm` short-circuits the
-    * AR order grid (OrderLearner suggestion for (ticker, regime)). */
+    * AR order grid (the order learned for (ticker, regime), from
+    * [[ForecastCache.warmStartsFor]]). */
   def forecastOneDetailed(ticker: String, prices: Array[Double], cfg: Config,
       warm: Option[(Int, Int)]): FitDetail = {
     if (prices.length < 40) return FitDetail(Seq.empty, "UNKNOWN", 0, 0, 0.0)
@@ -167,19 +166,6 @@ object ForecastEngine {
       .flatMapGroups { (ticker, rows) =>
         val prices = rows.toArray.sortBy(_._2).map(_._3)
         forecastOne(ticker, prices, cfg).iterator
-      }
-  }
-
-  /** Payload view for persistence (one row per ticker × model). */
-  def payloads(fc: Dataset[TickerForecast]): Dataset[ForecastPayload] = {
-    val spark = fc.sparkSession
-    import spark.implicits._
-    fc.groupByKey(r => (r.ticker, r.model))
-      .mapGroups { (key: (String, String), rows: Iterator[TickerForecast]) =>
-        val sorted = rows.toArray.sortBy(_.horizonStep)
-        ForecastPayload(key._1, key._2, sorted.length,
-          sorted.map(_.forecast), sorted.map(_.lowerCi), sorted.map(_.upperCi),
-          sorted.map(_.vol), aic = 0.0, converged = true)
       }
   }
 }

@@ -145,12 +145,6 @@ object Garch {
     0.5 * math.log(2 * math.Pi) + (z + 0.5) * math.log(t) - t + math.log(a)
   }
 
-  /** Deterministic Nelder–Mead — shared impl in [[LinAlg.nelderMead]]. */
-  private def nelderMead(f: Array[Double] => Double, start: Array[Double],
-      maxIter: Int = 400, tol: Double = 1e-10,
-      steps: Array[Double] = null): (Array[Double], Double, Boolean) =
-    LinAlg.nelderMead(f, start, maxIter, tol, steps)
-
   /** Gaussian log-likelihood of the EWMA (IGARCH) variance filter
     * h_t = (1−λ)r²_{t−1} + λh_{t−1}. A dedicated recursion — the GARCH
     * negLogLik's stationarity barrier (α+β<1) would reject the IGARCH
@@ -213,15 +207,15 @@ object Garch {
         val v = unconditional(e)
         dist match {
           case "normal" =>
-            val (p, nll, conv) = nelderMead(a => negLogLik(e, a(0), a(1), a(2), v),
-              Array(0.05 * v, 0.08, 0.90))
+            val (p, nll, conv) = LinAlg.nelderMead(
+              a => negLogLik(e, a(0), a(1), a(2), v), Array(0.05 * v, 0.08, 0.90))
             val ll = -nll
             if (!ll.isFinite) None
             else Some(Fit(p(0), p(1), p(2), p(1) + p(2), ll, conv, usedEwma = false,
               dist = "normal", aic = 2.0 * (3 + kMean) - 2.0 * ll,
               mean = meanName, meanC = c, meanPhi = phi))
           case "t" =>
-            val (p, nll, conv) = nelderMead(
+            val (p, nll, conv) = LinAlg.nelderMead(
               a => negLogLikT(e, a(0), a(1), a(2), a(3), v),
               Array(0.05 * v, 0.08, 0.90, 8.0))
             val ll = -nll
@@ -242,9 +236,9 @@ object Garch {
               negLogLikSkewT(e, a(0), a(1), a(2), a(3), a(4), v)
             val w0 = 0.05 * v
             val open = Array(0.25 * w0, 0.02, 0.1, 2.0, 0.05)
-            val first = nelderMead(obj, Array(w0, 0.08, 0.90, 8.0, 0.0),
+            val first = LinAlg.nelderMead(obj, Array(w0, 0.08, 0.90, 8.0, 0.0),
               steps = open)
-            val (p, nll, conv) = nelderMead(obj, first._1, steps =
+            val (p, nll, conv) = LinAlg.nelderMead(obj, first._1, steps =
               Array(0.25 * math.max(math.abs(first._1(0)), 1e-12), 0.02,
                 0.05, 1.0, math.max(0.25 * math.abs(first._1(4)), 0.02)))
             val ll = -nll

@@ -91,11 +91,13 @@ object NearDupStream {
 
   private val P = 2147483647L
 
-  /** Distinct 3-gram shingles — batch `shingleSet` semantics (docs with
-    * <3 tokens are degenerate there and excluded here; corpus documents
-    * are long). */
+  /** Distinct 3-gram shingles — batch `shingleSet` semantics: tokens
+    * split on every single space with empty tokens kept (Spark's
+    * `split(text, ' ')` and DuckDB's `string_split`; Java's one-argument
+    * `split` drops trailing empty tokens), and no shingles for a null
+    * text or one of fewer than 3 tokens. */
   private[streaming] def shingles(text: String): Set[String] = {
-    val t = text.split(" ")
+    val t = if (text == null) Array.empty[String] else text.split(" ", -1)
     if (t.length < 3) Set.empty
     else t.sliding(3).map(_.mkString(" ")).toSet
   }
@@ -114,7 +116,7 @@ object NearDupStream {
     * path: the old per-call getInstance + per-byte "%02x".format was a
     * provider lookup plus 16 boxed format calls for every shingle of
     * every document in candidates()/bucketCensus(). */
-  private def md5Low60(sh: String): Long = {
+  private[streaming] def md5Low60(sh: String): Long = {
     val md = md5Digest.get()
     val d = md.digest(sh.getBytes("UTF-8")) // digest() resets the instance
     var v = 0L
@@ -131,9 +133,6 @@ object NearDupStream {
     val hex = md.digest(sh.getBytes("UTF-8")).map("%02x".format(_)).mkString
     java.lang.Long.parseLong(hex.substring(17, 32), 16) % P
   }
-
-  /** The production hash, exposed for the bit-identity spec. */
-  private[streaming] def md5Low60Fast(sh: String): Long = md5Low60(sh)
 
   /** The 8 (band, band_key) probes of one document: 32 min-hash values
     * h_i = (a_i·x + b_i) mod (2^31−1) sliced 4 per band, keys joined

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -8,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.domain.Signal
-import graft.forecast.{OrderLearner, SnapshotStore}
 import graft.signals.SignalRouter
 import graft.stats.PortfolioMath
 
@@ -54,39 +52,6 @@ class SourceInfraSpec extends AnyFunSuite with TestSpark {
     assert(chain.extract(Seq("AAPL"),
       Timestamp.valueOf("2024-01-05 09:00:00"),
       Timestamp.valueOf("2024-01-05 17:00:00")).df.count() >= 1)
-  }
-
-  test("snapshot store: identical inputs restore without refitting") {
-    val dir = Files.createTempDirectory("graft_snap").toString
-    val store = new SnapshotStore(spark, dir)
-    val prices = Array.tabulate(100)(i => 100.0 + i)
-    var fits = 0
-    def doFit() = {
-      fits += 1
-      Seq(graft.domain.ForecastPayload("T", "AR", 3,
-        Array(1.0, 2.0, 3.0), Array(0.5, 1.5, 2.5), Array(1.5, 2.5, 3.5),
-        Array(0.1, 0.1, 0.1), 12.3, converged = true))
-    }
-    val (r1, hit1) = store.fitOrRestore("T", prices, "cfgA")(doFit())
-    assert(!hit1 && fits === 1)
-    val (r2, hit2) = store.fitOrRestore("T", prices, "cfgA")(doFit())
-    assert(hit2 && fits === 1) // cache hit, no refit
-    assert(r2.head.forecast.toSeq === r1.head.forecast.toSeq)
-    // changed series or config → miss
-    val (_, hit3) = store.fitOrRestore("T", prices.map(_ + 1), "cfgA")(doFit())
-    val (_, hit4) = store.fitOrRestore("T", prices, "cfgB")(doFit())
-    assert(!hit3 && !hit4 && fits === 3)
-  }
-
-  test("order learner suggests the recorded warm start") {
-    val dir = Files.createTempDirectory("graft_orders").toString
-    val learner = new OrderLearner(spark, dir)
-    assert(learner.suggest("AAPL", "RANGING").isEmpty)
-    assert(!learner.shouldSkipGrid("AAPL", "RANGING"))
-    learner.record("AAPL", "RANGING", p = 3, d = 1, aic = 100.0)
-    assert(learner.suggest("AAPL", "RANGING") === Some((3, 1)))
-    assert(learner.shouldSkipGrid("AAPL", "RANGING"))
-    assert(learner.suggest("AAPL", "CRISIS").isEmpty)
   }
 
   test("signal router: priority order, disabled routes skipped, stats counted") {

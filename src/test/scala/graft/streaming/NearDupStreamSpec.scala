@@ -264,8 +264,40 @@ class NearDupStreamSpec extends AnyFunSuite with TestSpark {
       "ünïcødé ≠ ascii ❄", "x" * 10000) ++
       (0 until 500).map(i => s"shingle $i of ${i * 31} salt ${i.toHexString}")
     cases.foreach { s =>
-      assert(NearDupStream.md5Low60Fast(s) === NearDupStream.md5Low60Reference(s),
+      assert(NearDupStream.md5Low60(s) === NearDupStream.md5Low60Reference(s),
         s"hash mismatch for input: $s")
+    }
+  }
+
+  test("shingles split text as the batch plan does: leading, trailing and double spaces, null") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, expr, split}
+    val texts = Seq("a b c d", "a b c d ", " a b c d", "a  b c d", "a b  ",
+      "  ", "a b", "", null)
+    val batch = texts.toDF("text")
+      .select(col("text"), split(col("text"), " ").as("t"))
+      .select(col("text"), expr(graft.functions.TextGrams.gramsSql(3)).as("sh"))
+      .as[(String, Seq[String])].collect()
+    assert(batch.length === texts.length)
+    batch.foreach { case (text, sh) =>
+      assert(NearDupStream.shingles(text) === sh.toSet, s"text: [$text]")
+    }
+    assert(NearDupStream.bandKeys(null).isEmpty)
+  }
+
+  test("q215 and q216 census a corpus holding a null doc_id and a null text") {
+    val s = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_census_nulls").toString
+    Seq[(java.lang.Long, String)]((1L, "w1 w2 w3 w4 w5 w6"),
+        (null, "w1 w2 w3 w4 w5 xx"), (3L, null))
+      .toDF("doc_id", "text")
+      .write.parquet(s"$tmp/documents.parquet")
+    Seq("q215_band_census", "q216_strip_recensus").foreach { q =>
+      val census = graft.queries.DedupTextQueries.queries(q)(s, tmp)
+        .select("m").as[Long].collect()
+      assert(census.sum === 16L, q) // 8 bands x the two shingled docs
     }
   }
 }
